@@ -80,7 +80,6 @@ object ServiceSoak {
       .select((col("doc_id") + 90000000L).as("doc_id"), col("text"),
         col("lang"))
       .coalesce(1).write.parquet(s"$refDir/documents.parquet")
-    graft.queries.Extensions.invalidateBloom(refDir)
 
     val t0 = java.time.LocalDateTime.parse("2024-06-01T12:00:00")
     var fakeNow = t0

@@ -39,7 +39,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * `b0`/`b1` rows are (sub-cell id, half-vector, |half-vector|²), sorted
   * by id; equality/canonicalization is by array identity — codebooks are
-  * memoized per corpus dir (Extensions.coarseBooks), so identical plans
+  * memoized per corpus snapshot (Extensions.coarseBooks), so identical plans
   * share instances.
   */
 case class ImiCells(child: Expression,

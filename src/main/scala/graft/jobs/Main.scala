@@ -3,7 +3,9 @@ package graft.jobs
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
+import graft.Snapshot.hasData
 import graft.gen.{DeltaActions, Generators, OltpState}
+import graft.queries.Extensions
 import graft.schema.Schemas
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,38 +56,13 @@ object Main {
     def oltpAll: Seq[String] = Seq(advertiser, campaign, impressions, clicks)
   }
 
-  /** Does a parquet dir exist with at least one data file? (The branch
-    * probe — the reference's `SELECT COUNT(*) > 0` per table.) */
-  private def hasData(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(f => f.getPath.getName.endsWith(".parquet"))
-  }
-
-  /** hasData's recursive form for HIVE-PARTITIONED dirs, whose top level
-    * holds only `col=value` subdirectories (the flat probe would read
-    * them as empty and silently skip, e.g., daily-log compaction). */
-  private def hasDataRecursive(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) return true
-    }
-    false
-  }
-
   /** Read the OLTP store with the declared schemas; a missing table dir
     * reads as an empty frame (so the CLI works on a fresh base). */
   def oltp(spark: SparkSession, p: Paths): OltpState = {
-    def readOr(path: String, schema: org.apache.spark.sql.types.StructType) = {
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(hp)) spark.read.schema(schema).parquet(path)
+    def readOr(path: String, schema: org.apache.spark.sql.types.StructType) =
+      if (hasData(spark, path)) spark.read.schema(schema).parquet(path)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
     OltpState(
       advertiser = readOr(p.advertiser, Schemas.advertiser),
       campaign = readOr(p.campaign, Schemas.campaign),
@@ -144,13 +121,6 @@ object Main {
     delta.rows.write.mode(SaveMode.Append).parquet(target)
     delta.action
   }
-
-  /** Frees a localCheckpoint's blocks (the key-set frames below; tiny,
-    * but an always-on service must not leak one per delta tick). */
-  private def freeCkpt(df: DataFrame): Unit =
-    df.queryExecution.logical.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** track_delta: recompute totals at key grain, append only changed-key
     * version rows, then maintain the reports. */
@@ -212,7 +182,9 @@ object Main {
         Warehouse.read(spark, p.dailyCtrReport), touched,
         dim, impsDaily, clksDaily),
       p.dailyCtrReport)
-    Seq(touchedTotals, touchedImps, touchedClks).foreach(freeCkpt)
+    // The key-set checkpoints are tiny, but an always-on service must
+    // not leak one per delta tick.
+    Seq(touchedTotals, touchedImps, touchedClks).foreach(Extensions.freeCkpt)
   }
 
   /** Keep-latest daily rows; ties on rtm_delta break by the (monotone)
@@ -271,13 +243,13 @@ object Main {
     if (hasData(spark, p.totalsLog))
       Warehouse.compact(spark, p.totalsLog, DeltaUpsert.Keys, "rtm_delta",
         retainVersions, tiebreak = DeltaUpsert.Tiebreak)
-    if (hasDataRecursive(spark, p.impsDaily))
+    if (hasData(spark, p.impsDaily))
       Warehouse.compact(spark, p.impsDaily,
         Seq("rtm_advertiser_id", "rtm_campaign_id", "campaign_impressions_date"),
         "rtm_delta", retainVersions,
         tiebreak = Seq("campaign_impressions_daily_count"),
         partitionCol = Some("campaign_impressions_date"))
-    if (hasDataRecursive(spark, p.clksDaily))
+    if (hasData(spark, p.clksDaily))
       Warehouse.compact(spark, p.clksDaily,
         Seq("rtm_advertiser_id", "rtm_campaign_id", "campaign_clicks_date"),
         "rtm_delta", retainVersions,

@@ -90,29 +90,6 @@ object Warehouse {
       s"staged swap: rename $stage -> $target failed; data is in $stage")
   }
 
-  /** (relative path, mtime, length) of every FILE under `dir`,
-    * recursively — the change detector the staged-swap writers use to
-    * spot a concurrent writer. Recursive because the hive-partitioned
-    * daily logs nest files inside date= subdirectories: a direct-child
-    * listing would see an append into an EXISTING partition only via
-    * that subdirectory's mtime, which object stores report coarsely or
-    * not at all — the file entry itself is the only signal that is
-    * reliable everywhere. One listFiles sweep (the RemoteIterator pages
-    * its RPCs); content hashing would re-read the log. */
-  private def dirFingerprint(fs: org.apache.hadoop.fs.FileSystem,
-                             dir: org.apache.hadoop.fs.Path): Set[(String, Long, Long)] =
-    if (!fs.exists(dir)) Set.empty
-    else {
-      val it = fs.listFiles(dir, true)
-      val b = Set.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val s = it.next()
-        b += ((s.getPath.toString.stripPrefix(dir.toString),
-          s.getModificationTime, s.getLen))
-      }
-      b.result()
-    }
-
   /** The staged-rewrite skeleton every log-rewriting operation shares:
     * fingerprint the log, materialize the rewrite into `path__stage`,
     * RE-fingerprint immediately before the destructive delete (so the
@@ -136,9 +113,9 @@ object Warehouse {
     val target = new org.apache.hadoop.fs.Path(path)
     val stage = new org.apache.hadoop.fs.Path(path + "__stage")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = dirFingerprint(fs, target)
+    val before = graft.Snapshot.fingerprint(fs, target)
     write(stage.toString)
-    val after = dirFingerprint(fs, target)
+    val after = graft.Snapshot.fingerprint(fs, target)
     if (before != after) false
     else {
       swapStageInto(fs, stage, target)

@@ -250,25 +250,19 @@ private[queries] trait ExtBpe { this: Extensions.type =>
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
-  /** Materialized tokenizer locations, one per corpus dir (built once
-    * per JVM — the offline tokenizer-training job; queries read). Same
-    * staleness contract as annIndexCache: a corpus that grew needs
-    * invalidation, though a FROZEN vocab stays valid for serving — new
-    * words still tokenize; retraining is a quality event, not a
-    * correctness one (the quantizer-epoch asymmetry). */
-  private[queries] val bpeVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def invalidateBpeVocab(dir: String): Unit =
-    bpeVocabCache.remove(dir)
-
+  /** The materialized tokenizer location for a corpus dir — built once
+    * per snapshot of its documents table (the offline tokenizer-training
+    * job; queries read). A FROZEN vocab would stay valid for serving —
+    * new words still tokenize; retraining is a quality event, not a
+    * correctness one (the quantizer-epoch asymmetry) — but a one-shot
+    * query reads the vocab of the corpus as it is. */
   private[graft] def bpeVocabPath(s: SparkSession, dir: String): String =
-    bpeVocabCache.computeIfAbsent(dir, _ => {
+    graft.Snapshot.memo(s, "bpeVocab", Seq(s"$dir/documents.parquet")) {
       val p = java.nio.file.Files.createTempDirectory("graft-bpevocab")
         .toFile.getAbsolutePath
       buildBpeVocab(s, docs(s, dir), p)
       p
-    })
+    }
 
   /** The stored merge list, rank-ordered — driver-side tokenizer config
     * (the broadcast-ADC-lookup size class: `rounds` rows, never corpus

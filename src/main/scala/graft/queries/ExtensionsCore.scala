@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Snapshot, Tables}
 import graft.functions.{DotI64, ImiCells, Portable}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -142,33 +142,23 @@ private[queries] trait ExtCore { this: Extensions.type =>
     * call site feeds non-null integer ppm scores; a new caller with
     * nullable or fractional scores must pre-handle them.
     *
-    * Measurement dial (NOT a production switch): system property
-    * `graft.topk.impl=window` (or env `SPARK_GRAFT_TOPK=window`, for
-    * harness legs that can only pass environment) rebuilds the exact
-    * row_number window form — output-identical by MinKLongsSpec — so
-    * the sf1 scale probe can A/B native vs window on the same build.
-    * Default (unset or anything else) is the native aggregate. */
+    * The native aggregate is the only form: the row_number window is
+    * MinKLongsSpec's reference, which this must equal row for row, and
+    * the same-build A/B (BENCH_AB_r18_topk_sf01/sf1) found the window
+    * faster on no query. */
   private[graft] def topKPerGroup(df: DataFrame, group: String,
                                   score: org.apache.spark.sql.Column,
                                   id: String, k: Int,
                                   scoreName: String = "__score",
                                   rankName: String = "__rank"): DataFrame =
-    if (sys.props.get("graft.topk.impl")
-        .orElse(sys.env.get("SPARK_GRAFT_TOPK")).contains("window")) {
-      val w = Window.partitionBy(col(group))
-        .orderBy(score.desc, col(id).asc)
-      df.withColumn(rankName, row_number().over(w))
-        .filter(col(rankName) <= k)
-        .select(col(group), col(id), score.as(scoreName), col(rankName))
-    } else
-      df.groupBy(group)
-        .agg(graft.functions.MinKLongs(
-            (-score).cast("long"), col(id).cast("long"), k)
-          .as("__top"))
-        .select(col(group), posexplode(col("__top")).as(Seq("__pos", "__e")))
-        .select(col(group), col("__e.id").as(id),
-          (-col("__e.k")).as(scoreName),
-          (col("__pos") + 1).cast("int").as(rankName))
+    df.groupBy(group)
+      .agg(graft.functions.MinKLongs(
+          (-score).cast("long"), col(id).cast("long"), k)
+        .as("__top"))
+      .select(col(group), posexplode(col("__top")).as(Seq("__pos", "__e")))
+      .select(col(group), col("__e.id").as(id),
+        (-col("__e.k")).as(scoreName),
+        (col("__pos") + 1).cast("int").as(rankName))
 
   /** Embeddings quantized to integer parts-per-million so every sum is
     * exact and order-free (float accumulation order differs between
@@ -222,64 +212,26 @@ private[queries] trait ExtCore { this: Extensions.type =>
     * × 8 B ≈ 200 MB at a billion vectors — still a broadcastable dim
     * table, where the linear policy's 20M × 768 × 8 B ≈ 123 GB is not.
     *
-    * The √n stride needs ONE count per directory, memoized: counting at
-    * every plan CONSTRUCTION (s03/s05/s07 and each spec/bench iteration
-    * re-construct plans) ran a full count job each time — and through
-    * the quantized() projection at that, not the raw scan. The memoized
-    * count runs over the bare embeddings table column-pruned to nothing,
-    * which parquet row-group metadata answers without a data scan. */
-  private[queries] val corpusCount =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    * The √n stride needs ONE count per corpus snapshot, memoized:
+    * counting at every plan CONSTRUCTION (s03/s05/s07 and each
+    * spec/bench iteration re-construct plans) ran a full count job each
+    * time — and through the quantized() projection at that, not the raw
+    * scan. The memoized count runs over the bare embeddings table
+    * column-pruned to nothing, which parquet row-group metadata answers
+    * without a data scan, keyed by the embeddings table's snapshot
+    * ([[graft.Snapshot]]): a corpus that grew or was rewritten recounts,
+    * so the stride follows the data. */
+  private[graft] def corpusCountOf(s: SparkSession, dir: String): Long =
+    Snapshot.memo(s, "corpusCount", Seq(s"$dir/embeddings.parquet")) {
+      Tables.t(s, dir, "embeddings").count()
+    }
 
-  /** Drop the memoized corpus count for `dir` — REQUIRED before
-    * re-deriving the quantizer over a corpus that has GROWN since the
-    * count was taken (the memo assumes static table dirs; a stale count
-    * silently freezes the √n stride). StreamingSemanticDedup.retrain
-    * calls this; static-testdata callers never need to. */
-  private[graft] def invalidateCorpusCount(dir: String): Unit = {
-    corpusCount.remove(dir)
-    docsCount.remove(dir)
-    booksCache.remove(dir)
-    // The dedup long-doc routing memo is keyed "<dir-ish>#<threshold>";
-    // a grown corpus may have gained its first long doc (stale memo is
-    // perf-only — both routes exact — but refresh with the siblings).
-    longDocMemo.keySet.removeIf(k => k.startsWith(dir))
-  }
   private[queries] def coarseCentroids(s: SparkSession, dir: String,
                               e: DataFrame): DataFrame = {
-    val n: Long = corpusCount.computeIfAbsent(dir,
-      _ => Tables.t(s, dir, "embeddings").count())
+    val n = corpusCountOf(s, dir)
     val stride = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong)
     e.filter(h32(col("vec_id").cast("string")) % stride === 0)
       .select(col("vec_id").as("cent_id"), col("q").as("qc"), col("s2").as("sc"))
-  }
-
-  /** One Bloom sketch broadcast per cache key (d09: dir; t16:
-    * dir + "#test8") — see contamination / corpusDecontaminated. Keys
-    * are PREFIXED with the owning SparkContext's applicationId: a
-    * session stopped and rebuilt in the same JVM must not serve a dead
-    * context's broadcast to its executors (it fails remotely, long
-    * after the cause). */
-  private[queries] val bloomCache = new java.util.concurrent.ConcurrentHashMap[
-    String,
-    org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]]()
-
-  private[queries] def bloomKey(s: SparkSession, key: String): String =
-    s.sparkContext.applicationId + "@@" + key
-
-  /** Drop every memoized Bloom sketch for `dir` (across contexts and
-    * the d09/t16 key variants) — REQUIRED before querying a corpus that
-    * has grown since the sketch was built: a stale sketch silently
-    * drops NEW grams below the exact join, and Bloom false negatives
-    * are MISSED CONTAMINATION (the one error class the pre-pass
-    * contract forbids). Mirror of invalidateCorpusCount; any
-    * corpus-refresh path should call both (plus invalidateAnnIndex). */
-  private[graft] def invalidateBloom(dir: String): Unit =
-    bloomCache.keySet.removeIf(k => k.split("@@", 2).last.startsWith(dir))
-
-  private[graft] def bloomCacheKeys: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    bloomCache.keySet.asScala.toSet
   }
 
   /** Distinct verbatim 8-token windows of a document frame — the gram
@@ -318,25 +270,41 @@ private[queries] trait ExtCore { this: Extensions.type =>
     grams8OfDocs(docs(s, dir)
       .select(col("doc_id"), splitBucket.as("bucket"), col("text")))
 
-  /** Broadcast-Bloom pre-filter of a gram frame against a REFERENCE gram
-    * set: the sketch is built once on the reference side (the small
-    * side — an eval suite in production), memoized under `refKey`
-    * (application-scoped, invalidateBloom drops it), and `g`'s rows are
-    * filtered to possible members BELOW whatever exact join the caller
-    * puts above — no false negatives (Bloom never rejects a member),
-    * false positives rejected by that exact join. The d09/t16 asymmetry,
-    * factored for every consumer including the streaming gate. */
-  private[graft] def bloomFiltered(s: SparkSession, refKey: String,
-                                   refGrams: => DataFrame,
-                                   g: DataFrame): DataFrame = {
-    val bloomB = bloomCache.computeIfAbsent(bloomKey(s, refKey), { _ =>
+  /** The Bloom sketch (fpp 1%) of a REFERENCE gram set, broadcast.
+    * Memoized as `name` over the snapshot of `inputs` — the tables
+    * `refGrams` reads — so a reference side that grew is re-sketched:
+    * a stale sketch would silently drop NEW grams below the exact
+    * join, and Bloom false negatives are MISSED CONTAMINATION (the one
+    * error class the pre-pass contract forbids). Callers whose
+    * `refGrams` differ over the same inputs MUST use distinct names.
+    * Scoped to the owning SparkContext: a session stopped and rebuilt
+    * in the same JVM must not serve a dead context's broadcast to its
+    * executors (it fails remotely, long after the cause). */
+  private[graft] def bloomSketch(s: SparkSession, name: String,
+      inputs: Seq[String], refGrams: => DataFrame)
+      : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter] =
+    Snapshot.memo(s, name, inputs, sparkState = true) {
       val ref = refGrams.persist()
       val bloom = try {
         val n = ref.count()
         ref.stat.bloomFilter("gram", math.max(n, 1000L), 0.01)
       } finally ref.unpersist()
       s.sparkContext.broadcast(bloom)
-    })
+    }
+
+  /** Broadcast-Bloom pre-filter of a gram frame against a REFERENCE gram
+    * set: the sketch is built once on the reference side (the small
+    * side — an eval suite in production; see [[bloomSketch]] for its
+    * key), and `g`'s rows are filtered to possible members BELOW
+    * whatever exact join the caller puts above — no false negatives
+    * (Bloom never rejects a member), false positives rejected by that
+    * exact join. The d09/t16 asymmetry, factored for every consumer
+    * including the streaming gate. */
+  private[graft] def bloomFiltered(s: SparkSession, name: String,
+                                   inputs: Seq[String],
+                                   refGrams: => DataFrame,
+                                   g: DataFrame): DataFrame = {
+    val bloomB = bloomSketch(s, name, inputs, refGrams)
     val mightContain = udf((gr: String) =>
       gr != null && bloomB.value.mightContainString(gr))
       .withName("bloom_might_contain")
@@ -358,7 +326,8 @@ private[queries] trait ExtCore { this: Extensions.type =>
         Tables.t(s, refDir, "documents").select("doc_id", "text"))
       .select("gram").distinct()
     val g = grams8OfDocs(docs(s, corpusDir).select("doc_id", "text"))
-    bloomFiltered(s, refDir + "#refgrams", refGrams, g)
+    bloomFiltered(s, "bloom#refgrams", Seq(s"$refDir/documents.parquet"),
+      refGrams, g)
       .join(refGrams, "gram")
       .groupBy("doc_id")
       .agg(countDistinct(col("gram")).as("n_hit_grams"))
@@ -575,9 +544,7 @@ private[queries] trait ExtCore { this: Extensions.type =>
     * TakeOrdered, never a global sort. */
   private[graft] def coarseCodebooks(s: SparkSession, dir: String,
                                      e: DataFrame): DataFrame = {
-    val n: Long = corpusCount.computeIfAbsent(dir,
-      _ => Tables.t(s, dir, "embeddings").count())
-    codebooksFrom(e, n)
+    codebooksFrom(e, corpusCountOf(s, dir))
   }
 
   /** The codebook builder over an explicit already-quantized frame —
@@ -635,15 +602,15 @@ private[queries] trait ExtCore { this: Extensions.type =>
     ImiBooks(side(0), side(1))
   }
 
-  /** Collected [[coarseCodebooks]] memoized per corpus dir (the
-    * corpusCount pattern — invalidateCorpusCount drops both, since a
-    * stale codebook is exactly a stale count's failure mode). */
-  private[queries] val booksCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ImiBooks]()
+  /** Collected [[coarseCodebooks]] memoized over the embeddings
+    * table's snapshot, like [[corpusCountOf]] (a stale codebook is
+    * exactly a stale count's failure mode). `e` must be `dir`'s
+    * quantized embeddings. */
   private[graft] def coarseBooks(s: SparkSession, dir: String,
                                  e: DataFrame): ImiBooks =
-    booksCache.computeIfAbsent(dir,
-      _ => collectBooks(coarseCodebooks(s, dir, e)))
+    Snapshot.memo(s, "coarseBooks", Seq(s"$dir/embeddings.parquet")) {
+      collectBooks(coarseCodebooks(s, dir, e))
+    }
 
   /** Two-level cell assignment: rank each vector's HALVES against the
     * matching sub-codebook (per-half integer cosine, the cosPpm idiom),

@@ -273,20 +273,18 @@ private[queries] trait ExtDedup { this: Extensions.type =>
     * routing overhead: [[pairJaccard]]'s plan is then literally the
     * pure kernel plan (no lens joins, no empty frame-grain branch; the
     * bench showed the always-routed form's extra stages cost d03/d10
-    * ~double at sf0.1). Staleness on corpus growth is PERF-ONLY (both
-    * routes are exact — a long doc mis-routed to the kernel is slower,
-    * never wrong), and [[invalidateCorpusCount]] drops the memo with
-    * its siblings. */
-  private[queries] val longDocMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
+    * ~double at sf0.1). `textsTable` names the parquet table `texts`
+    * reads IN FULL; when given, the probe is memoized over that table's
+    * snapshot ([[graft.Snapshot]]), so a corpus that gains its first
+    * long doc re-probes. */
   private[graft] def hasLongDocs(texts: DataFrame, longBytes: Long,
-                                 memoKey: Option[String]): Boolean = {
+                                 textsTable: Option[String]): Boolean = {
     def probe: Boolean =
       !texts.filter(octet_length(col("text")) > longBytes).limit(1).isEmpty
-    memoKey match {
-      case Some(k) =>
-        longDocMemo.computeIfAbsent(s"$k#$longBytes", _ => probe).booleanValue
+    textsTable match {
+      case Some(t) =>
+        graft.Snapshot.memo(texts.sparkSession, s"hasLongDocs#$longBytes",
+          Seq(t))(probe)
       case None => probe
     }
   }
@@ -320,7 +318,7 @@ private[queries] trait ExtDedup { this: Extensions.type =>
   private[graft] def pairJaccard(cand: DataFrame, texts: DataFrame,
                                  aCol: String, bCol: String,
                                  longBytes: Long = LongDocVerifyBytes,
-                                 memoKey: Option[String] = None,
+                                 textsTable: Option[String] = None,
                                  knownHasLong: Option[Boolean] = None,
                                  frameMinMult: Long = LongDocFrameMinMult)
       : DataFrame = {
@@ -328,7 +326,7 @@ private[queries] trait ExtDedup { this: Extensions.type =>
     // candidate join (the streaming cycle's partner fetch) probe their
     // CHEAP constituents themselves — probing `texts` here would
     // execute that join twice.
-    if (!knownHasLong.getOrElse(hasLongDocs(texts, longBytes, memoKey)))
+    if (!knownHasLong.getOrElse(hasLongDocs(texts, longBytes, textsTable)))
       return cand
         .join(texts.select(col("doc_id").as(aCol), col("text").as("__ta")), aCol)
         .join(texts.select(col("doc_id").as(bCol), col("text").as("__tb")), bCol)
@@ -496,11 +494,11 @@ private[queries] trait ExtDedup { this: Extensions.type =>
     * (graft.LongDocBench). Production callers never pass a strategy. */
   private[graft] def pairJaccardStrategy(cand: DataFrame, texts: DataFrame,
       aCol: String, bCol: String, strategy: Option[Boolean],
-      memoKey: Option[String] = None,
+      textsTable: Option[String] = None,
       knownHasLong: Option[Boolean] = None): DataFrame =
     strategy match {
       case None =>
-        pairJaccard(cand, texts, aCol, bCol, memoKey = memoKey,
+        pairJaccard(cand, texts, aCol, bCol, textsTable = textsTable,
           knownHasLong = knownHasLong)
       case Some(false) =>
         pairJaccard(cand, texts, aCol, bCol, knownHasLong = Some(false))
@@ -533,7 +531,7 @@ private[queries] trait ExtDedup { this: Extensions.type =>
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     pairJaccardStrategy(cand, d, "doc_a", "doc_b", strategy,
-      memoKey = Some(dir))
+      textsTable = Some(s"$dir/documents.parquet"))
   }
 
   /** d16's synthesized BOOK-BEARING corpus — the standing fixture that

@@ -291,8 +291,7 @@ private[queries] trait ExtSimilarity { this: Extensions.type =>
 
   def annPq(s: SparkSession, dir: String): DataFrame = {
     val e = quantized(s, dir)
-    val n: Long = corpusCount.computeIfAbsent(dir,
-      _ => Tables.t(s, dir, "embeddings").count())
+    val n = corpusCountOf(s, dir)
     // Codebooks + encoding (the shared construction; s21 reads the
     // same codes from the stored index instead).
     val codes = pqEncodeWith(e, pqCodebooks(e, n))
@@ -1426,7 +1425,7 @@ private[queries] trait ExtSimilarity { this: Extensions.type =>
     }.foreach(_.unpersist(blocking = false))
 
   /** RDD ids of checkpoints that are APPLICATION-SCOPED memo state
-    * (clusterCache today): [[freeCkptFresh]] must never free them —
+    * (clusterLabels today): [[freeCkptFresh]] must never free them —
     * their memo would hand later consumers a frame whose blocks are
     * gone and whose lineage is truncated (unrecoverable). */
   private val pinnedCkpts =
@@ -1940,20 +1939,6 @@ private[queries] trait ExtSimilarity { this: Extensions.type =>
         col("neighbor_id"), col("cos_ppm"), col("rank"))
   }
 
-  /** Materialized ANN index locations, one per corpus dir (built once
-    * per JVM; the build is the offline indexing job, the queries read).
-    * Mirror of the corpusCount/bloomCache memos, with the same
-    * invalidation contract for corpora that grow. */
-  private[queries] val annIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Drop the memoized index for `dir` — REQUIRED before querying a
-    * corpus that has grown since the index was built (a stale index
-    * silently misses every vector ingested after the build; same
-    * staleness contract as invalidateCorpusCount/invalidateBloom). */
-  private[graft] def invalidateAnnIndex(dir: String): Unit =
-    annIndexCache.remove(dir)
-
   /** s08/s09's storage half: materialize the IVF layout as ONE
     * self-describing warehouse artifact, hive-partitioned by `cell` —
     * the engine's analogue of the reference's ORDER-BY-key read
@@ -2227,13 +2212,18 @@ private[queries] trait ExtSimilarity { this: Extensions.type =>
       }
     }
 
+  /** The materialized ANN index location for a corpus dir — built
+    * once per snapshot of its embeddings table (the build is the
+    * offline indexing job, the queries read), so a corpus that grew
+    * gets a fresh index instead of one that silently misses every
+    * vector ingested after the build. */
   private[queries] def annIndexPath(s: SparkSession, dir: String): String =
-    annIndexCache.computeIfAbsent(dir, _ => {
+    graft.Snapshot.memo(s, "annIndex", Seq(s"$dir/embeddings.parquet")) {
       val p = java.nio.file.Files.createTempDirectory("graft-annidx")
         .toFile.getAbsolutePath
       buildAnnIndex(s, dir, p)
       p
-    })
+    }
 
   private[queries] def annIndex(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(annIndexPath(s, dir))

@@ -799,43 +799,23 @@ private[queries] trait ExtText { this: Extensions.type =>
     * instead of re-running a ~3 s checkpointed BSP per query. At
     * 100 TB the label table is a stored artifact maintained
     * incrementally (the corpus service's p.clusters does exactly
-    * that); this memo is the batch-dir stand-in with the same
-    * staleness contract as every per-dir memo: a corpus that grew
-    * needs invalidateClusters first. Keyed by applicationId because
-    * the localCheckpoint dies with its SparkContext. */
-  private[queries] val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def invalidateClusters(dir: String): Unit = {
-    val it = clusterCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.endsWith("@@" + dir)) {
-        unpinCkpt(e.getValue); freeCkpt(e.getValue); it.remove()
-      }
-    }
-  }
-
-  private[queries] def clusterLabels(s: SparkSession, dir: String): DataFrame = {
-    // Expensive-value memo idiom: compute OUTSIDE the map (the CC
-    // fixpoint is a multi-second Spark job; computeIfAbsent would hold
-    // the bucket lock for its whole duration, serializing unrelated
-    // dirs that hash together and deadlocking re-entrant access), then
-    // insert with putIfAbsent and free the loser's checkpoint.
-    val key = s.sparkContext.applicationId + "@@" + dir
-    val cached = clusterCache.get(key)
-    if (cached != null) cached
-    else {
-      val built = dedupClusters(s, dir)
-      val fresh = built.localCheckpoint()
-      // The CC loop's own final-labels checkpoint is now copied into
-      // `fresh` — free it, or every memo build pins two label frames.
-      freeCkpt(built)
-      val winner = clusterCache.putIfAbsent(key, fresh)
-      if (winner != null) { freeCkpt(fresh); winner }
-      else pinCkpt(fresh)
-    }
-  }
+    * that); this memo is the batch-dir stand-in, keyed by the
+    * documents table's snapshot ([[graft.Snapshot]]): a corpus that grew
+    * gets fresh labels, and the superseded label frame is unpinned and
+    * freed. Scoped to the applicationId because the localCheckpoint
+    * dies with its SparkContext. */
+  private[queries] def clusterLabels(s: SparkSession, dir: String): DataFrame =
+    graft.Snapshot.memo(s, "clusterLabels", Seq(s"$dir/documents.parquet"),
+        sparkState = true)(
+      compute = {
+        val built = dedupClusters(s, dir)
+        val fresh = built.localCheckpoint()
+        // The CC loop's own final-labels checkpoint is now copied into
+        // `fresh` — free it, or every memo build pins two label frames.
+        freeCkpt(built)
+        pinCkpt(fresh)
+      },
+      release = (l: DataFrame) => { unpinCkpt(l); freeCkpt(l) })
 
   /** d07's keep/drop rule at FRAME grain: docs ⟕ cluster labels, keep a
     * doc iff it is its component's minimum (docs in no pair are their
@@ -972,15 +952,15 @@ private[queries] trait ExtText { this: Extensions.type =>
 
   /** Memoized parquet-metadata row count of the documents table — the
     * packer's LEVEL-COUNT estimator (column-pruned count, no data
-    * scan; same memo discipline as [[corpusCount]], dropped by
-    * [[invalidateCorpusCount]]). Every registered pack input is a
+    * scan; memoized over the documents table's snapshot like
+    * [[corpusCountOf]]). Every registered pack input is a
     * doc-grain frame (t28/t31 the raw docs, t30/t40 gated subsets,
     * t35 the stored BPE tokens), so the docs count UPPER-BOUNDS the
     * packed row count and can only err toward the scale-safe side. */
   private[graft] def docsCountOf(s: SparkSession, dir: String): Long =
-    docsCount.computeIfAbsent(dir, _ => docs(s, dir).count())
-  private[queries] val docsCount =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    graft.Snapshot.memo(s, "docsCount", Seq(s"$dir/documents.parquet")) {
+      docs(s, dir).count()
+    }
 
   /** t28's core at frame grain — pack any (doc_id, n_toks) frame; t30
     * hands in the gated training manifest, the corpus service its
@@ -1195,7 +1175,7 @@ private[queries] trait ExtText { this: Extensions.type =>
     * Scale shape, and why the Bloom asymmetry flips here: the TEST
     * split is the SMALL side (10% of this corpus; a fixed eval suite in
     * production), so its distinct grams build the broadcast Bloom
-    * (memoized per dir, same machinery as d09) and the unboundedly
+    * (memoized per snapshot, same machinery as d09) and the unboundedly
     * large TRAIN gram stream is filtered below the exact join — the
     * sketch is sized to the eval corpus, not the 100 TB side. No false
     * negatives (Bloom never rejects a member); false positives are
@@ -1212,7 +1192,7 @@ private[queries] trait ExtText { this: Extensions.type =>
     * filters the train gram stream below the exact join. */
   private[graft] def contaminatedTrainDocs(s: SparkSession,
                                            dir: String): DataFrame =
-    contaminatedTrainDocsOf(s, dir + "#test8",
+    contaminatedTrainDocsOf(s, "bloom#test8", Seq(s"$dir/documents.parquet"),
       docs(s, dir).select("doc_id", "text"))
 
   /** [[contaminatedTrainDocs]] at FRAME grain: evidence (both the test
@@ -1220,20 +1200,18 @@ private[queries] trait ExtText { this: Extensions.type =>
     * document frame, so the corpus service can hand in its
     * TOMBSTONE-GATED corpus — a taken-down test doc's grams must stop
     * dropping train docs, exactly as its text stops shaping every other
-    * maintained artifact. `bloomKey` memoizes the test-side sketch:
-    * callers with different evidence frames over one dir MUST use
-    * distinct keys (a sketch built on the smaller frame would silently
-    * miss the larger frame's grams — Bloom false negatives are missed
-    * contamination). Staleness is one-directional: a sketch built
-    * before a DELETE is a superset (safe — the exact join above
-    * rejects), a sketch built before an INGEST misses the new grams,
-    * which is why every drain invalidates the dir's sketches. */
+    * maintained artifact. The test-side sketch is memoized as
+    * `bloomName` over the snapshot of `inputs`, the tables `d` reads
+    * (see [[bloomSketch]]): callers with different evidence frames over
+    * one dir MUST use distinct names (a sketch built on the smaller
+    * frame would silently miss the larger frame's grams — Bloom false
+    * negatives are missed contamination). */
   private[graft] def contaminatedTrainDocsOf(s: SparkSession,
-      bloomKey: String, d: DataFrame): DataFrame = {
+      bloomName: String, inputs: Seq[String], d: DataFrame): DataFrame = {
     val g = grams8OfDocs(
       d.select(col("doc_id"), splitBucket.as("bucket"), col("text")))
     val testGrams = g.filter(col("bucket") >= 90).select("gram").distinct()
-    bloomFiltered(s, bloomKey, testGrams, g.filter(col("bucket") < 80))
+    bloomFiltered(s, bloomName, inputs, testGrams, g.filter(col("bucket") < 80))
       .join(testGrams, "gram")
       .select("doc_id").distinct()
   }
@@ -1272,7 +1250,7 @@ private[queries] trait ExtText { this: Extensions.type =>
       .select(col("a.doc_id").as("new_doc"), col("b.doc_id").as("other_doc"))
       .distinct()
     pairJaccardStrategy(cand, d, "new_doc", "other_doc", strategy,
-      memoKey = Some(dir))
+      textsTable = Some(s"$dir/documents.parquet"))
   }
 
   /** d11: exact-substring duplication detection — the memorization-grade
@@ -1508,27 +1486,16 @@ private[queries] trait ExtText { this: Extensions.type =>
     val grams = grams8(s, dir)
     val trainGrams = grams.filter(col("bucket") < 80)
       .select("gram").distinct()
-    // The sketch is a pure function of `dir`'s (static) train split, so
-    // it is built ONCE per dir and memoized: rebuilding per invocation
-    // cost three driver actions per bench iteration and leaked a new
-    // session-lifetime broadcast each time (the deployed shape builds
-    // the sketch once per corpus refresh too). Build = two bounded
-    // actions over the persisted train grams, then the cache releases —
-    // the returned plan's exact join recomputes trainGrams once, as it
-    // did before the pre-pass.
-    val bloomB = bloomCache.computeIfAbsent(bloomKey(s, dir), { _ =>
-      trainGrams.persist()
-      val bloom = try {
-        val n = trainGrams.count()
-        trainGrams.stat.bloomFilter("gram", math.max(n, 1000L), 0.01)
-      } finally trainGrams.unpersist()
-      s.sparkContext.broadcast(bloom)
-    })
-    val mightContain = udf((g: String) =>
-      g != null && bloomB.value.mightContainString(g))
-      .withName("bloom_might_contain")
-    grams.filter(col("bucket") >= 90)
-      .filter(mightContain(col("gram")))
+    // The sketch is a pure function of `dir`'s train split, so it is
+    // built ONCE per snapshot of the documents table: rebuilding per
+    // invocation cost three driver actions per bench iteration and
+    // leaked a new session-lifetime broadcast each time (the deployed
+    // shape builds the sketch once per corpus refresh too). Build = two
+    // bounded actions over the persisted train grams, then the cache
+    // releases — the returned plan's exact join recomputes trainGrams
+    // once, as it did before the pre-pass.
+    bloomFiltered(s, "bloom#train", Seq(s"$dir/documents.parquet"),
+        trainGrams, grams.filter(col("bucket") >= 90))
       .join(trainGrams, "gram")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shared_8grams"))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.queries.Extensions
+import graft.Snapshot.hasData
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
@@ -35,15 +36,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * doc at ingest). */
 object ChunkTable {
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** The maintained chunk table (t25's schema; empty-safe); distinct
     * absorbs crash-replayed appends. */
   def chunkView(spark: SparkSession, logDir: String): DataFrame =
-    if (exists(spark, logDir)) spark.read.parquet(logDir).distinct()
+    if (hasData(spark, logDir)) spark.read.parquet(logDir).distinct()
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(
@@ -131,7 +127,7 @@ object ChunkTable {
     * is the job. The chunk index builds from THIS table and the RAG
     * rerank fetches full vectors from it by key join. */
   def vecView(spark: SparkSession, vecDir: String): DataFrame =
-    if (exists(spark, vecDir)) spark.read.parquet(vecDir).distinct()
+    if (hasData(spark, vecDir)) spark.read.parquet(vecDir).distinct()
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(
@@ -166,7 +162,7 @@ object ChunkTable {
     * grain-agnostic lexical rankers (bm25Rank) consume it verbatim.
     * Tokens in t25's overlap regions post to BOTH covering chunks. */
   def postingView(spark: SparkSession, dir: String): DataFrame =
-    if (exists(spark, dir)) spark.read.parquet(dir).distinct()
+    if (hasData(spark, dir)) spark.read.parquet(dir).distinct()
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(
@@ -227,7 +223,7 @@ object ChunkTable {
               vecDir: Option[String] = None,
               exclude: Option[org.apache.spark.sql.DataFrame] = None)
       : Unit = {
-    if (!exists(spark, logDir)) return
+    if (!hasData(spark, logDir)) return
     val processed = chunkView(spark, logDir).select("doc_id").distinct()
     val docs = exclude.foldLeft(
         graft.Tables.t(spark, corpusDir, "documents")
@@ -236,7 +232,7 @@ object ChunkTable {
       .join(processed, Seq("doc_id"), "left_semi")
     graft.jobs.Warehouse.replaceReport(spark,
       Extensions.chunksOfDocs(docs), logDir)
-    vecDir.filter(exists(spark, _)).foreach { vd =>
+    vecDir.filter(hasData(spark, _)).foreach { vd =>
       val live = Extensions.chunkVectorsOf(chunkView(spark, logDir))
         .select("vec_id")
       require(graft.jobs.Warehouse.guardedRewrite(spark, vd) { stage =>

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Snapshot.hasData
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -160,20 +161,18 @@ object CorpusService {
 
   /** Quantizer refresh for a GROWN corpus: re-derive the centroid set
     * and rebuild the assignment table (StreamingSemanticDedup.retrain's
-    * epoch semantics — pair log retained, sound across epochs), then
-    * drop every batch-side memo for the corpus dir (count, Bloom
-    * sketches, ANN index — all keyed to the pre-growth corpus). Run in
-    * a quiesced window: no live trigger, no concurrent drain. */
+    * epoch semantics — pair log retained, sound across epochs). The
+    * batch-side memos over the corpus dir (count, Bloom sketches, ANN
+    * index, cluster labels) are keyed by the tables' snapshots and
+    * follow the growth by themselves. Run in a quiesced window: no live
+    * trigger, no concurrent drain. */
   def retrainQuantizer(spark: SparkSession, p: Paths): Unit = {
     StreamingSemanticDedup.retrain(spark, p.base, p.cents, p.assigns)
-    graft.queries.Extensions.invalidateBloom(p.base)
-    graft.queries.Extensions.invalidateAnnIndex(p.base)
-    graft.queries.Extensions.invalidateClusters(p.base)
     // A new quantizer is a new EPOCH: every stored index row's cell is
     // assigned under the old centroid set, so a maintained serving
     // index is REBUILT here (staged swap — readers see old or new,
     // never a mix); the append path is only sound within an epoch.
-    if (exists(spark, p.annIndex)) rebuildIndex(spark, p)
+    if (hasData(spark, p.annIndex)) rebuildIndex(spark, p)
     // The cluster-balanced manifest sample is epoch state too: its
     // cells are the old quantizer's. Delete it — the next capped
     // refresh resamples from scratch under the new cells (the
@@ -182,11 +181,6 @@ object CorpusService {
     val fs = csPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(csPath)) fs.delete(csPath, true)
     recordTrainedCount(spark, p)
-  }
-
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
   }
 
   // ------------------------------------------------------------ deletion
@@ -223,7 +217,7 @@ object CorpusService {
   /** The tombstone set (empty-safe, distinct — absorbs replayed
     * appends). */
   def tombstoneView(spark: SparkSession, p: Paths): DataFrame =
-    if (exists(spark, p.tombstones))
+    if (hasData(spark, p.tombstones))
       spark.read.parquet(p.tombstones).distinct()
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -235,7 +229,7 @@ object CorpusService {
     * so the no-deletions path pays ZERO plan overhead (every filter
     * below folds away). */
   private def tombstonesOpt(spark: SparkSession, p: Paths): Option[DataFrame] =
-    if (exists(spark, p.tombstones)) Some(tombstoneView(spark, p)) else None
+    if (hasData(spark, p.tombstones)) Some(tombstoneView(spark, p)) else None
 
   /** Anti-join `df` against the tombstones on `key` (no-op when no
     * deletion ever happened). */
@@ -264,7 +258,7 @@ object CorpusService {
     val tomb = tombstoneView(spark, p).localCheckpoint()
     val nTomb = tomb.count()
     def purge(path: String, keys: String*): Boolean =
-      !exists(spark, path) ||
+      !hasData(spark, path) ||
         graft.jobs.Warehouse.guardedRewrite(spark, path) { stage =>
           keys.foldLeft(spark.read.parquet(path))((d, k) =>
               d.join(tomb.select(col("doc_id").as(k)), Seq(k), "left_anti"))
@@ -275,7 +269,7 @@ object CorpusService {
     // (tryCompactAnnIndex's shape plus the row filter). Chunk-grain
     // rows key by doc via the vec_id div 4096 packing.
     def purgeIndex(path: String, docOf: org.apache.spark.sql.Column): Boolean =
-      !exists(spark, path) ||
+      !hasData(spark, path) ||
         graft.jobs.Warehouse.guardedRewrite(spark, path) { stage =>
           spark.read.parquet(path).distinct()
             .withColumn("__doc", docOf)
@@ -289,7 +283,7 @@ object CorpusService {
           // tryCompactAnnIndex contract — a purge is a file-layout
           // operation, not a payload-epoch demand).
           Seq("_quantizer", "_sq8", "_pq").foreach { sc =>
-            if (exists(spark, s"$path/$sc"))
+            if (hasData(spark, s"$path/$sc"))
               spark.read.parquet(s"$path/$sc")
                 .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
                 .parquet(s"$stage/$sc")
@@ -321,7 +315,7 @@ object CorpusService {
       purge(p.dsirScoreLog, "doc_id") &&
       purgeIndex(p.annIndex, col("vec_id")) &&
       purgeIndex(p.chunkIndex, expr("CAST(vec_id div 4096 AS BIGINT)")) &&
-      (!exists(spark, p.chunkPostings) ||
+      (!hasData(spark, p.chunkPostings) ||
         graft.jobs.Warehouse.guardedRewrite(spark, p.chunkPostings) { stage =>
           spark.read.parquet(p.chunkPostings)
             .withColumn("__doc", shiftright(col("doc_id"), 12))
@@ -331,7 +325,7 @@ object CorpusService {
             .repartition(sizedParts(spark, p.chunkPostings))
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
         }) &&
-      (!exists(spark, p.chunkVecs) ||
+      (!hasData(spark, p.chunkVecs) ||
         graft.jobs.Warehouse.guardedRewrite(spark, p.chunkVecs) { stage =>
           spark.read.parquet(p.chunkVecs)
             .withColumn("__doc", expr("vec_id div 4096"))
@@ -351,7 +345,7 @@ object CorpusService {
     // cms+seen pattern), so a crash-replayed purge subtracts nothing
     // twice; the "seen" rows stay — like the tombstones themselves,
     // they gate re-ingestion from the append-only corpus store forever.
-    val cmsOk = ok && (!exists(spark, p.cmsLog) || {
+    val cmsOk = ok && (!hasData(spark, p.cmsLog) || {
       val log = spark.read.parquet(p.cmsLog)
       val toDrop = tomb
         .join(log.filter(col("kind") === "seen").select("doc_id"),
@@ -375,7 +369,7 @@ object CorpusService {
     // The length-histogram artifact purges by the same linear-sketch
     // subtraction (refreshLengthHistogram's (lang, bin, cnt) partials
     // sum, so the tombstoned docs' negated partial cancels exactly).
-    val histOk = cmsOk && (!exists(spark, p.histLog) || {
+    val histOk = cmsOk && (!hasData(spark, p.histLog) || {
       val log = spark.read.parquet(p.histLog)
       val toDrop = tomb
         .join(log.filter(col("kind") === "seen").select("doc_id"),
@@ -430,9 +424,9 @@ object CorpusService {
     * maintenance tick after the first deletion; the purge is paid once
     * per new deletion window, as documented. */
   def purgePending(spark: SparkSession, p: Paths): Boolean =
-    exists(spark, p.tombstones) && {
+    hasData(spark, p.tombstones) && {
       val n = tombstoneView(spark, p).count()
-      !exists(spark, p.purgeMark) ||
+      !hasData(spark, p.purgeMark) ||
         spark.read.parquet(p.purgeMark).head.getLong(0) < n
     }
 
@@ -463,7 +457,7 @@ object CorpusService {
     * with the prefix payload, read by queries. They serve different
     * access paths off the same epoch.) */
   def refreshAnnIndex(spark: SparkSession, p: Paths): Unit =
-    if (exists(spark, p.annIndex)) tombstonesOpt(spark, p) match {
+    if (hasData(spark, p.annIndex)) tombstonesOpt(spark, p) match {
       case None =>
         graft.queries.Extensions.appendAnnIndex(spark, p.base, p.annIndex)
       case Some(t) =>
@@ -638,7 +632,7 @@ object CorpusService {
     * an nprobe setting, and the (nprobe, recall_ppm) pairs ARE the
     * priced dial a deployment reads to pick its request-class width. */
   def auditLogView(spark: SparkSession, p: Paths): DataFrame =
-    if (exists(spark, p.auditLog)) {
+    if (hasData(spark, p.auditLog)) {
       // The nprobe column was added after the log format shipped: a log
       // whose older parquet files lack it must read with mergeSchema
       // (plain read infers from a SAMPLED file — the column would
@@ -703,14 +697,6 @@ object CorpusService {
     StreamingDedup.ingestAvailable(spark, p.docs, p.sigs, p.pairs, p.docsCkpt)
     StreamingSemanticDedup.ingestAvailable(spark, p.embeddings, p.cents,
       p.assigns, p.semPairs, p.embCkpt, maxFilesPerTrigger)
-    // The drain may have appended documents, so every memoized Bloom
-    // sketch over this corpus dir is now a potential UNDER-approximation
-    // — and Bloom false negatives below an exact contamination join are
-    // missed contamination (the one error the pre-pass contract
-    // forbids; deletes are the safe direction, a stale superset).
-    // Rebuild cost only lands when a decontaminating refresh actually
-    // runs, and that path is corpus-scale anyway.
-    graft.queries.Extensions.invalidateBloom(p.base)
     contaminationRef.foreach { ref =>
       StreamingContamination.ingestAvailable(spark, p.docs, ref,
         p.contam, p.contamCkpt)
@@ -732,27 +718,27 @@ object CorpusService {
       if (contaminationRef.isDefined)
         require(StreamingContamination.compactLog(spark, p.contam),
           "corpus service: contamination log failed to compact post-drain")
-      if (exists(spark, p.scrubLog))
+      if (hasData(spark, p.scrubLog))
         require(IncrementalScrub.compactLogs(spark, p.scrubPostings, p.scrubLog),
           "corpus service: scrub logs failed to compact post-drain")
       // Like the scrub logs: compact whenever they exist from an earlier
       // fingerprint drain, flag or not.
-      if (exists(spark, p.fpPairs))
+      if (hasData(spark, p.fpPairs))
         require(StreamingFingerprint.compactLogs(spark, p.fpSigs, p.fpPairs),
           "corpus service: fingerprint dedup logs failed to compact post-drain")
-      if (exists(spark, p.noveltyLog))
+      if (hasData(spark, p.noveltyLog))
         require(NoveltyTable.compactLogs(spark, p.noveltyFirstSeen, p.noveltyLog),
           "corpus service: novelty logs failed to compact post-drain")
-      if (exists(spark, p.chunkLog))
+      if (hasData(spark, p.chunkLog))
         require(ChunkTable.compactLog(spark, p.chunkLog),
           "corpus service: chunk log failed to compact post-drain")
-      if (exists(spark, p.postings))
+      if (hasData(spark, p.postings))
         require(PostingTable.compactLog(spark, p.postings),
           "corpus service: posting log failed to compact post-drain")
-      if (exists(spark, p.chunkVecs))
+      if (hasData(spark, p.chunkVecs))
         require(ChunkTable.compactVectors(spark, p.chunkVecs),
           "corpus service: chunk vector store failed to compact post-drain")
-      if (exists(spark, p.chunkPostings))
+      if (hasData(spark, p.chunkPostings))
         require(ChunkTable.compactPostings(spark, p.chunkPostings),
           "corpus service: chunk posting log failed to compact post-drain")
     }
@@ -818,12 +804,8 @@ object CorpusService {
   def refreshCanonicalCorpus(spark: SparkSession, p: Paths,
                              includeSemantic: Boolean = false,
                              includeFingerprint: Boolean = false): Unit = {
-    def exists(dir: String): Boolean = {
-      val path = new org.apache.hadoop.fs.Path(dir)
-      path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
-    }
     def ifPresent(dir: String)(view: => DataFrame): Option[DataFrame] =
-      if (exists(dir)) Some(view) else None
+      if (hasData(spark, dir)) Some(view) else None
     // Deleted docs leave the cluster graph (both endpoints) and the
     // corpus projection below, so the refreshed artifact equals the
     // rebuild-without-the-docs resolution. Removing edges can only
@@ -863,7 +845,7 @@ object CorpusService {
       case Some(pairsNow0) =>
         val pairsNow = pairsNow0.localCheckpoint()
         val out =
-          if (!exists(p.clusters) || !exists(p.clustersPairs))
+          if (!hasData(spark, p.clusters) || !hasData(spark, p.clustersPairs))
             graft.queries.Extensions.clusterPairs(pairsNow)
           else {
             val prevPairs = spark.read.parquet(p.clustersPairs)
@@ -921,8 +903,8 @@ object CorpusService {
     * only pays a key-grain anti-join against the (small) drop list.
     *
     * Scale: all three gates are key-grain semi-/anti-joins; the
-    * decontamination anti-join reuses the memoized test-side Bloom
-    * (invalidated on corpus refresh like every per-dir memo). A trainer
+    * decontamination anti-join reuses the test-side Bloom memoized over
+    * the live corpus's snapshot (documents + tombstones). A trainer
     * reads THIS table — the doc-grain manifest, not the summary — to
     * enumerate its shards. */
   /** `clusterCap` adds the DIVERSITY gate beside quality / canonical /
@@ -988,14 +970,14 @@ object CorpusService {
     // the append-only document log keeps taken-down rows forever
     // (tombstones gate them), and a tombstoned test-bucket doc's grams
     // must not keep dropping train docs after the takedown. Distinct
-    // bloom key from the one-shot's raw-store sketch — the gated gram
-    // set is smaller, and a shared key would hand the one-shot caller
+    // bloom name from the one-shot's raw-store sketch — the gated gram
+    // set is smaller, and a shared name would hand the one-shot caller
     // a sketch with false negatives (missed contamination).
     val decon =
       if (!decontaminate) base
       else base.join(
         graft.queries.Extensions.contaminatedTrainDocsOf(spark,
-          p.base + "#test8@live",
+          "bloom#test8@live", Seq(p.docs, p.tombstones),
           dropTombstoned(spark, p,
             graft.Tables.t(spark, p.base, "documents")
               .select("doc_id", "text"),
@@ -1022,7 +1004,7 @@ object CorpusService {
           .filter(col("rn") === 1)
           .select(col("vec_id").as("doc_id"), col("cent_id").as("cell"))
         val prevKept =
-          if (exists(spark, p.clusterSample))
+          if (hasData(spark, p.clusterSample))
             spark.read.parquet(p.clusterSample)
               .select(col("doc_id")).withColumn("was_kept", lit(1))
           else spark.range(0)
@@ -1146,7 +1128,7 @@ object CorpusService {
   def maybeRefreshTokenizer(spark: SparkSession, p: Paths,
                             factor: Double = 1.25): Boolean = {
     val retrain =
-      if (!exists(spark, p.bpeVocab) || !exists(spark, p.bpeVocabMeta)) true
+      if (!hasData(spark, p.bpeVocab) || !hasData(spark, p.bpeVocabMeta)) true
       else {
         val trained = spark.read.parquet(p.bpeVocabMeta).head().getLong(0)
         trained > 0 && liveDocCount(spark, p) >= factor * trained
@@ -1165,7 +1147,7 @@ object CorpusService {
     * words — which is exactly why the artifact stores merges, not a
     * word table. */
   def tokenCounts(spark: SparkSession, p: Paths): DataFrame = {
-    require(exists(spark, p.bpeVocab),
+    require(hasData(spark, p.bpeVocab),
       s"corpus service: no tokenizer artifact at ${p.bpeVocab} — run " +
         "refreshTokenizer first (training is a maintenance event, not a " +
         "read-path side effect)")
@@ -1192,7 +1174,7 @@ object CorpusService {
     // with the epoch that scored it, so a retrain must mint a new one
     // (monotone counter — the trained count alone can move DOWN after
     // a takedown-driven retrain and would collide with an old epoch).
-    val nextEpoch = 1L + (if (exists(spark, p.dsirWeightsMeta))
+    val nextEpoch = 1L + (if (hasData(spark, p.dsirWeightsMeta))
       dsirEpoch(spark, p) else 0L)
     val corpus = dropTombstoned(spark, p,
       graft.Tables.t(spark, p.base, "documents"), "doc_id")
@@ -1219,7 +1201,7 @@ object CorpusService {
   def maybeRefreshDsirWeights(spark: SparkSession, p: Paths,
                               factor: Double = 1.25): Boolean = {
     val retrain =
-      if (!exists(spark, p.dsirWeights) || !exists(spark, p.dsirWeightsMeta))
+      if (!hasData(spark, p.dsirWeights) || !hasData(spark, p.dsirWeightsMeta))
         true
       else {
         val trained = spark.read.parquet(p.dsirWeightsMeta).head().getLong(0)
@@ -1233,7 +1215,7 @@ object CorpusService {
     * t38's serving path (the tokenCounts pattern: never retrains on
     * read, serves only live documents, covers post-freeze ingests). */
   def importanceScores(spark: SparkSession, p: Paths): DataFrame = {
-    require(exists(spark, p.dsirWeights),
+    require(hasData(spark, p.dsirWeights),
       s"corpus service: no DSIR weight artifact at ${p.dsirWeights} — run " +
         "refreshDsirWeights first (training is a maintenance event, not " +
         "a read-path side effect)")
@@ -1269,7 +1251,7 @@ object CorpusService {
     * read. Crash-replayed appends are absorbed by the view's distinct
     * (deterministic scoring — identical rows). */
   def refreshImportanceScores(spark: SparkSession, p: Paths): Unit = {
-    require(exists(spark, p.dsirWeights) && exists(spark, p.dsirWeightsMeta),
+    require(hasData(spark, p.dsirWeights) && hasData(spark, p.dsirWeightsMeta),
       s"corpus service: no DSIR weight artifact at ${p.dsirWeights} — run " +
         "refreshDsirWeights first (training is a maintenance event, not " +
         "a read-path side effect)")
@@ -1285,7 +1267,7 @@ object CorpusService {
       graft.Tables.t(spark, p.base, "documents").select("doc_id", "text"),
       "doc_id")
     val batch =
-      if (exists(spark, p.dsirScoreLog))
+      if (hasData(spark, p.dsirScoreLog))
         docsF.join(
           spark.read.parquet(p.dsirScoreLog)
             .filter(col("epoch") === epoch).select("doc_id"),
@@ -1315,7 +1297,7 @@ object CorpusService {
     * the maintained twin of [[importanceScores]] (tombstone-gated,
     * stale epochs invisible, replayed appends collapsed). */
   def importanceScoresView(spark: SparkSession, p: Paths): DataFrame = {
-    require(exists(spark, p.dsirWeightsMeta),
+    require(hasData(spark, p.dsirWeightsMeta),
       "corpus service: no DSIR weight artifact — nothing has scored yet")
     dropTombstoned(spark, p,
       spark.read.parquet(p.dsirScoreLog)
@@ -1368,7 +1350,7 @@ object CorpusService {
     * cost is |distinct words| folds + one broadcast join, never a
     * corpus touch. */
   def tokenize(spark: SparkSession, p: Paths, texts: DataFrame): DataFrame = {
-    require(exists(spark, p.bpeVocab),
+    require(hasData(spark, p.bpeVocab),
       s"corpus service: no tokenizer artifact at ${p.bpeVocab} — run " +
         "refreshTokenizer first (training is a maintenance event, not a " +
         "read-path side effect)")
@@ -1380,7 +1362,7 @@ object CorpusService {
     val docsF = graft.Tables.t(spark, p.base, "documents")
       .select("doc_id", "text")
     val batch =
-      if (exists(spark, p.cmsLog))
+      if (hasData(spark, p.cmsLog))
         docsF.join(
           spark.read.parquet(p.cmsLog).filter(col("kind") === "seen")
             .select("doc_id"),
@@ -1409,7 +1391,7 @@ object CorpusService {
     val docsF = graft.Tables.t(spark, p.base, "documents")
       .select("doc_id", "lang", "text")
     val batch =
-      if (exists(spark, p.histLog))
+      if (hasData(spark, p.histLog))
         docsF.join(
           spark.read.parquet(p.histLog).filter(col("kind") === "seen")
             .select("doc_id"),
@@ -1496,7 +1478,7 @@ object CorpusService {
     // runs maintainScrub per drain), the payload is a key join into it
     // — no segment pass at all; otherwise fall back to one-shot t19.
     val clean =
-      if (exists(spark, p.scrubLog))
+      if (hasData(spark, p.scrubLog))
         IncrementalScrub.scrubTable(spark, p.scrubLog)
       else graft.queries.Extensions.scrubbedCorpus(spark, p.base)
     val payload = clean.join(manifest, "doc_id")
@@ -1801,7 +1783,7 @@ object CorpusService {
   def rechunkCorpus(spark: SparkSession, p: Paths): Unit = {
     ChunkTable.rechunk(spark, p.base, p.chunkLog, Some(p.chunkVecs),
       exclude = tombstonesOpt(spark, p))
-    if (exists(spark, p.chunkIndex)) {
+    if (hasData(spark, p.chunkIndex)) {
       val idxPath = new org.apache.hadoop.fs.Path(p.chunkIndex)
       idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(idxPath, true)
@@ -1810,7 +1792,7 @@ object CorpusService {
     // The chunk-posting log keys by the packed chunk id, so a tiling
     // change invalidates it the same way: rebuild its already-posted
     // docs under the current derivation (staged swap).
-    if (exists(spark, p.chunkPostings)) {
+    if (hasData(spark, p.chunkPostings)) {
       val posted = ChunkTable.postingView(spark, p.chunkPostings)
         .select(shiftright(col("doc_id"), 12).as("doc_id")).distinct()
       val docs = tombstonesOpt(spark, p).foldLeft(
@@ -1830,7 +1812,7 @@ object CorpusService {
     * deterministic derivation over the chunk log (the test fixtures'
     * stand-in, identical row-for-row — spec-pinned). */
   def chunkVectorTable(spark: SparkSession, p: Paths): DataFrame =
-    if (exists(spark, p.chunkVecs)) ChunkTable.vecView(spark, p.chunkVecs)
+    if (hasData(spark, p.chunkVecs)) ChunkTable.vecView(spark, p.chunkVecs)
     else graft.queries.Extensions.chunkVectorsOf(
       ChunkTable.chunkView(spark, p.chunkLog))
 
@@ -1855,7 +1837,7 @@ object CorpusService {
       cv0.withColumn("__doc", expr("CAST(vec_id div 4096 AS BIGINT)"))
         .join(t.select(col("doc_id").as("__doc")), Seq("__doc"), "left_anti")
         .drop("__doc"))
-    if (!exists(spark, p.chunkIndex)) {
+    if (!hasData(spark, p.chunkIndex)) {
       val cents = graft.queries.Extensions.codebooksFrom(cv, cv.count())
       graft.jobs.Warehouse.replaceVia(spark, p.chunkIndex) { stage =>
         graft.queries.Extensions.buildAnnIndexFrom(cv, cents, stage)
@@ -2083,15 +2065,15 @@ object CorpusService {
     // same way the logs grow with every micro-batch; the quiesced
     // window is its compaction point too (no refresh can race here —
     // both come only from this driver's lifecycle calls).
-    if (exists(spark, p.annIndex))
+    if (hasData(spark, p.annIndex))
       require(graft.queries.Extensions.tryCompactAnnIndex(spark, p.annIndex),
         "corpus service: ann index failed to compact while quiesced")
     // Likewise the incremental scrub's postings + versioned log, when a
     // caller maintains them alongside the always-on form.
-    if (exists(spark, p.scrubLog))
+    if (hasData(spark, p.scrubLog))
       require(IncrementalScrub.compactLogs(spark, p.scrubPostings, p.scrubLog),
         "corpus service: scrub logs failed to compact while quiesced")
-    if (r.fingerprint.isDefined || exists(spark, p.fpPairs))
+    if (r.fingerprint.isDefined || hasData(spark, p.fpPairs))
       require(StreamingFingerprint.compactLogs(spark, p.fpSigs, p.fpPairs),
         "corpus service: fingerprint logs failed to compact while quiesced")
     start(spark, p, interval, fingerprint = r.fingerprint.isDefined)
@@ -2240,13 +2222,13 @@ object CorpusService {
           // weight epoch (the corpus is one batch deep — the cheapest
           // the train will ever be); plain `importance` keeps weight
           // training strictly on the maintenance cadence.
-          if (importance && importanceSelect && !exists(spark, p.dsirWeights))
+          if (importance && importanceSelect && !hasData(spark, p.dsirWeights))
             refreshDsirWeights(spark, p)
           // Score-on-ingest rides every drain (O(batch) under the
           // frozen weights), once a weight epoch exists to score under
           // — and BEFORE the manifest, so a DSIR-gated refresh reads a
           // selection that covers this drain's docs.
-          if (importance && exists(spark, p.dsirWeights))
+          if (importance && hasData(spark, p.dsirWeights))
             refreshImportanceScores(spark, p)
           // With a gate registered, its drop list flows into the manifest:
           // suite-leaked docs were caught at arrival, excluded here.
@@ -2272,7 +2254,7 @@ object CorpusService {
               retrainQuantizer(spark, p)
               retrains += 1
             } else if (auditFloorPpm.isDefined &&
-                exists(spark, p.annIndex) &&
+                hasData(spark, p.annIndex) &&
                 recordRecallAudit(spark, p, now) < auditFloorPpm.get) {
               // The QUALITY trigger ([[auditRetrain]]'s decision) on the
               // same cadence: growth didn't fire, but the served path's
@@ -2284,7 +2266,7 @@ object CorpusService {
               // disagree: what fired is what was recorded.
               retrainQuantizer(spark, p)
               retrains += 1
-            } else if (exists(spark, p.annIndex)) {
+            } else if (hasData(spark, p.annIndex)) {
               require(
                 graft.queries.Extensions.tryCompactAnnIndex(spark, p.annIndex),
                 "corpus service: scheduled index compaction failed to land " +
@@ -2389,7 +2371,7 @@ object CorpusService {
       .filter(col("doc_a") =!= col("doc_b"))
       .select(col("doc_a"), col("doc_b"), lit("semantic").as("m"))
     val fingerprint =
-      if (exists(spark, p.fpPairs))
+      if (hasData(spark, p.fpPairs))
         StreamingFingerprint.pairsView(spark, p.fpPairs)
           .select(col("doc_a"), col("doc_b"), lit("fingerprint").as("m"))
       else verbatim.limit(0)

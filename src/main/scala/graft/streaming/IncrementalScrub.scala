@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.queries.Extensions
+import graft.Snapshot.hasData
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -45,14 +46,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * physical. */
 object IncrementalScrub {
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Distinct inverted-index view (empty-safe). */
   def postingsView(spark: SparkSession, postingsDir: String): DataFrame =
-    if (exists(spark, postingsDir))
+    if (hasData(spark, postingsDir))
       spark.read.parquet(postingsDir).distinct()
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

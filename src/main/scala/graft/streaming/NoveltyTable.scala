@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.queries.Extensions
+import graft.Snapshot.hasData
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -53,16 +54,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * at segment grain. */
 object NoveltyTable {
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Min-merged first-seen view (empty-safe): one row per shingle with
     * the id of the first document that carried it. min() absorbs both
     * crash-replayed appends and any duplicate rows. */
   def firstSeenView(spark: SparkSession, firstSeenDir: String): DataFrame =
-    if (exists(spark, firstSeenDir))
+    if (hasData(spark, firstSeenDir))
       spark.read.parquet(firstSeenDir)
         .groupBy("shingle").agg(min("first_doc").as("first_doc"))
     else spark.createDataFrame(
@@ -74,7 +70,7 @@ object NoveltyTable {
   /** The maintained novelty table (empty-safe): t21's schema, one
     * immutable row per scored document; distinct absorbs replay. */
   def noveltyView(spark: SparkSession, logDir: String): DataFrame =
-    if (exists(spark, logDir)) spark.read.parquet(logDir).distinct()
+    if (hasData(spark, logDir)) spark.read.parquet(logDir).distinct()
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(

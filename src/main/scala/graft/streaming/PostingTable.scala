@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Snapshot.hasData
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -39,15 +40,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * row-for-row, and service-served hybrid retrieval ≡ one-shot s16. */
 object PostingTable {
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** The maintained posting table (empty-safe); distinct absorbs
     * crash-replayed appends. */
   def postingView(spark: SparkSession, logDir: String): DataFrame =
-    if (exists(spark, logDir)) spark.read.parquet(logDir).distinct()
+    if (hasData(spark, logDir)) spark.read.parquet(logDir).distinct()
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ops.Joins
+import graft.Snapshot.hasData
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,11 +26,6 @@ import org.apache.spark.sql.functions._
   * readers' distinct views (the signature/assignment-log convention).
   */
 object SessionOverlapTable {
-
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
 
   private def asIntervals(sess: DataFrame, tag: String): DataFrame =
     sess.select(col("user_id").as(s"${tag}_user"),
@@ -60,7 +56,7 @@ object SessionOverlapTable {
     if (sessions.isEmpty) return
     val a = asIntervals(sessions, "a")
     val newOld =
-      if (!exists(spark, sessLog)) None
+      if (!hasData(spark, sessLog)) None
       else Some(finish(
         Joins.intervalOverlapJoin(a,
             asIntervals(spark.read.parquet(sessLog), "b"), Seq.empty,
@@ -87,7 +83,7 @@ object SessionOverlapTable {
 
   /** The accumulated pair log (empty-schema frame before any pair). */
   def pairsView(spark: SparkSession, pairLog: String): DataFrame =
-    if (exists(spark, pairLog)) spark.read.parquet(pairLog).distinct()
+    if (hasData(spark, pairLog)) spark.read.parquet(pairLog).distinct()
     else spark.range(0).select(col("id").as("user_a"), col("id").as("a_st"),
       col("id").as("user_b"), col("id").as("b_st"), col("id").as("overlap_us"))
 

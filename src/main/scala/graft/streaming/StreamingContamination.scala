@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * suite (`refDir`, its own documents table): each micro-batch of newly
   * ingested documents is 8-gram'd (Extensions' exact definition, so
   * stream and batch agree bit-for-bit), pre-filtered by the broadcast
-  * Bloom built ONCE over the suite's distinct grams (the suite is fixed
-  * for the life of a run — the sketch memoizes per (application, ref)
-  * and never goes stale the way a growing-corpus sketch would),
+  * Bloom built ONCE over the suite's distinct grams (memoized per
+  * application over the suite table's snapshot — a fixed suite is
+  * sketched once per run, an edited one again),
   * verified by the exact gram join above it, and appended to the
   * contamination log as (doc_id, n_hit_grams).
   *
@@ -46,7 +46,8 @@ object StreamingContamination {
         graft.Tables.t(spark, refDir, "documents").select("doc_id", "text"))
       .select("gram").distinct()
     val g = Extensions.grams8OfDocs(batch.select("doc_id", "text"))
-    Extensions.bloomFiltered(spark, refDir + "#refgrams", refGrams, g)
+    Extensions.bloomFiltered(spark, "bloom#refgrams",
+        Seq(s"$refDir/documents.parquet"), refGrams, g)
       .join(refGrams, "gram")
       .groupBy("doc_id")
       .agg(countDistinct(col("gram")).as("n_hit_grams"))

@@ -99,16 +99,14 @@ object StreamingDedup {
       val allTexts = b.select("doc_id", "text").unionByName(partnerTexts)
         .persist()
       // Routing probe over the CHEAP constituents (the persisted batch,
-      // and the raw store scan memoized per dir) — probing allTexts
-      // itself would execute the candidate join a second time. The
-      // store memo can go stale-false as long docs arrive in later
-      // batches; that is perf-only (both routes exact), and the batch
-      // probe is fresh every cycle.
+      // and the raw store scan memoized over the store's snapshot) —
+      // probing allTexts itself would execute the candidate join a
+      // second time.
       val hasLong =
         Extensions.hasLongDocs(b, Extensions.LongDocVerifyBytes, None) ||
           Extensions.hasLongDocs(
             spark.read.schema(docSchema).parquet(corpusDir),
-            Extensions.LongDocVerifyBytes, Some(corpusDir + "#dedupstore"))
+            Extensions.LongDocVerifyBytes, Some(corpusDir))
       val verified = Extensions
         .pairJaccardStrategy(cand, allTexts, "new_doc", "other_doc",
           strategy, knownHasLong = Some(hasLong))

@@ -72,9 +72,9 @@ object StreamingSemanticDedup {
     * training: as the corpus grows, the frozen centroid set drifts from
     * the data (√n itself grows), degrading cell co-location and with it
     * the probe's recall. `retrain` re-derives the quantizer from the
-    * CURRENT corpus (first invalidating the memoized corpus count — a
-    * stale count silently freezes the √n stride) and REBUILDS the
-    * assignment table to match, via a staged swap. Run in a quiesced
+    * CURRENT corpus (the corpus count behind the √n stride is memoized
+    * over the embeddings table's snapshot, so it is the grown count)
+    * and REBUILDS the assignment table to match, via a staged swap. Run in a quiesced
     * window (no live trigger mid-rebuild — same single-writer contract
     * as Warehouse.migrateLog).
     *
@@ -86,7 +86,6 @@ object StreamingSemanticDedup {
     * cells co-locate it — the same contract s05 itself carries. */
   def retrain(spark: SparkSession, corpusTableDir: String, centDir: String,
               assignDir: String): Unit = {
-    Extensions.invalidateCorpusCount(corpusTableDir)
     trainQuantizer(spark, corpusTableDir, centDir)
     val cents = spark.read.parquet(centDir)
     val all = Extensions.quantizeFrame(

@@ -335,8 +335,7 @@ object OptProfile {
     }
 
     if (sets("s20")) {
-      val n: Long = E.corpusCount.computeIfAbsent(sfDir,
-        _ => graft.Tables.t(spark, sfDir, "embeddings").count())
+      val n = E.corpusCountOf(spark, sfDir)
       time("s20 subvectors")(() => E.pqSubvectors(E.quantized(spark, sfDir)))
       time("s20 +codebooks")(() =>
         E.pqCodebooks(E.quantized(spark, sfDir), n))

@@ -12,7 +12,6 @@ class AnnIndexSpec extends SparkSpec {
 
   test("s08 (indexed) ≡ s07 (recomputed) row-for-row (sf0.001)") {
     val dir = sf("sf0.001")
-    Extensions.invalidateAnnIndex(dir)
     assertSameRows(
       Extensions.annIvfPrefix(spark, dir),
       Extensions.annIvfIndexed(spark, dir),
@@ -21,7 +20,6 @@ class AnnIndexSpec extends SparkSpec {
 
   test("s08 (indexed) ≡ s07 (recomputed) row-for-row (sf0.01)") {
     val dir = sf("sf0.01")
-    Extensions.invalidateAnnIndex(dir)
     assertSameRows(
       Extensions.annIvfPrefix(spark, dir),
       Extensions.annIvfIndexed(spark, dir),
@@ -33,7 +31,6 @@ class AnnIndexSpec extends SparkSpec {
     // a scale-dependent bug (overflow, tie flip, partition skew) in
     // either path would be invisible to the smaller-SF pins.
     val dir = sf("sf0.1")
-    Extensions.invalidateAnnIndex(dir)
     assertSameRows(
       Extensions.annIvfPrefix(spark, dir),
       Extensions.annIvfIndexed(spark, dir),
@@ -49,7 +46,6 @@ class AnnIndexSpec extends SparkSpec {
     // smaller SFs can't see.
     for (d <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val dir = sf(d)
-      Extensions.invalidateAnnIndex(dir)
       assertSameRows(
         Extensions.annIvfSq8(spark, dir),
         Extensions.annIvfSq8Indexed(spark, dir),
@@ -66,7 +62,6 @@ class AnnIndexSpec extends SparkSpec {
     // rerank — so identical output, at both SFs.
     for (d <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val dir = sf(d)
-      Extensions.invalidateAnnIndex(dir)
       assertSameRows(
         Extensions.annIvfFiltered(spark, dir),
         Extensions.annIvfFilteredIndexed(spark, dir),
@@ -87,7 +82,6 @@ class AnnIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-annappend").toString
     val emb = Tables.t(spark, src, "embeddings")
     emb.filter(col("vec_id") % 2 === 0).write.parquet(s"$dir/embeddings.parquet")
-    Extensions.invalidateCorpusCount(dir)
     val base = java.nio.file.Files.createTempDirectory("graft-annidx-t").toString
     val byDiscovery = s"$base/discovered"
     val byBatch = s"$base/batch"
@@ -290,10 +284,10 @@ class AnnIndexSpec extends SparkSpec {
     } finally res.unpersist()
   }
 
-  test("invalidateAnnIndex + invalidateCorpusCount rebuild sees corpus growth") {
-    // Grow a copy of the corpus after the index is built, then exercise
-    // the documented refresh contract (both memos dropped before
-    // querying a grown corpus): the rebuilt index must contain the new
+  test("memoized index rebuild sees corpus growth with no invalidate call") {
+    // Grow a copy of the corpus after the index is built: the index memo
+    // (and the corpus count under it) is keyed by the embeddings table's
+    // snapshot, so the next read must rebuild and contain the new
     // vectors. Each appended vector is an exact copy of an original at
     // a shifted id, so post-growth the true top-5 of every query
     // CONTAINS shifted ids (cos = 1.0 with the twin) — their absence
@@ -302,13 +296,10 @@ class AnnIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-anngrow").toString
     val emb = Tables.t(spark, src, "embeddings")
     emb.write.parquet(s"$dir/embeddings.parquet")
-    Extensions.invalidateAnnIndex(dir)
     val before = Extensions.annIvfIndexed(spark, dir).count()
     emb.withColumn("vec_id",
         org.apache.spark.sql.functions.col("vec_id") + 100000)
       .write.mode("append").parquet(s"$dir/embeddings.parquet")
-    Extensions.invalidateAnnIndex(dir)
-    Extensions.invalidateCorpusCount(dir)
     val grownDf = Extensions.annIvfIndexed(spark, dir)
     assert(grownDf.count() == before,
       "top-5-per-query grain changed across the rebuild")

@@ -72,7 +72,6 @@ class AnnRecallSpec extends SparkSpec {
     // ordering within probed cells, so recall tracks s03's cell-probe
     // floor.
     val dir = sf("sf0.01")
-    Extensions.invalidateAnnIndex(dir)
     val exact = topSets(Extensions.annCosineTopK(spark, dir))
     val pq = topSets(Extensions.annIvfPqIndexed(spark, dir))
     val recalls = exact.map { case (q, truth) =>
@@ -91,7 +90,6 @@ class AnnRecallSpec extends SparkSpec {
     // would silently mis-trigger retrains — the one failure mode a
     // health metric cannot have.)
     val dir = sf("sf0.01")
-    Extensions.invalidateAnnIndex(dir)
     val exact = topSets(Extensions.annCosineTopK(spark, dir))
     val served = topSets(Extensions.annIvfIndexed(spark, dir))
     val audit = Extensions.recallAudit(spark, dir)

@@ -27,7 +27,6 @@ class CorpusServiceSpec extends SparkSpec {
     docs.filter(col("doc_id") % 50 === 0)
       .select((col("doc_id") + 900000).as("doc_id"), col("text"), col("lang"))
       .coalesce(1).write.parquet(s"$refDir/documents.parquet")
-    Extensions.invalidateBloom(refDir)
 
     // Wave 1: ~60% of the corpus, both modalities.
     docs.filter(col("doc_id") % 5 < 3).write.mode("append").parquet(p.docs)
@@ -530,7 +529,6 @@ class CorpusServiceSpec extends SparkSpec {
       .write.mode("append").parquet(p.docs)
     emb.filter(pmod(col("vec_id"), lit(2)) === 0).coalesce(1)
       .write.mode("append").parquet(p.embeddings)
-    Extensions.invalidateCorpusCount(base)
     CorpusService.trainQuantizer(spark, p)
     CorpusService.refreshCanonicalCorpus(spark, p)
     // Uncapped manifest first (the diversity cap is a gate beside the
@@ -557,8 +555,6 @@ class CorpusServiceSpec extends SparkSpec {
       .write.mode("append").parquet(p.docs)
     emb.filter(pmod(col("vec_id"), lit(2)) === 1).coalesce(1)
       .write.mode("append").parquet(p.embeddings)
-    Extensions.invalidateCorpusCount(base)
-    Extensions.invalidateBloom(base)
     CorpusService.refreshCanonicalCorpus(spark, p)
     CorpusService.refreshTrainingSet(spark, p, clusterCap = Some(8))
     val sample2 = spark.read.parquet(p.clusterSample).collect()
@@ -660,7 +656,6 @@ class CorpusServiceSpec extends SparkSpec {
     docs.filter(col("doc_id") % 50 === 0)
       .select((col("doc_id") + 900000).as("doc_id"), col("text"), col("lang"))
       .coalesce(1).write.parquet(s"$refDir/documents.parquet")
-    Extensions.invalidateBloom(refDir)
 
     // Fake clock, 5-minute drains over 10 minutes → ticks at 0/5/10.
     // Later waves arrive through the sleep hook, i.e. BETWEEN ticks —

@@ -98,21 +98,44 @@ class DedupSpec extends SparkSpec {
     assertSameRows(fromOp, direct, "d06 vs CC(lshPairs)")
   }
 
-  test("invalidateBloom drops both per-dir sketch memos (d09 + t16 keys)") {
-    // The staleness hook for growing corpora: a sketch memoized before
-    // an append silently drops NEW grams below the exact join (Bloom
-    // false negatives = missed contamination), so corpus-refresh paths
-    // must be able to drop every key for the dir — the bare d09 key and
-    // t16's '#test8' variant, whatever SparkContext built them.
-    val dir = sf("sf0.001")
-    Extensions.invalidateBloom(dir)
-    assert(!Extensions.bloomCacheKeys.exists(_.contains(dir)))
-    Extensions.contamination(spark, dir)         // builds + memoizes d09's
-    Extensions.corpusDecontaminated(spark, dir)  // ... and t16's
-    assert(Extensions.bloomCacheKeys.count(_.contains(dir)) == 2,
-      s"expected both sketch keys for $dir in ${Extensions.bloomCacheKeys}")
-    Extensions.invalidateBloom(dir)
-    assert(!Extensions.bloomCacheKeys.exists(_.contains(dir)))
+  test("d09/t16 Bloom memos catch a contaminated append with no invalidate call") {
+    // Both sketches (d09's over the train grams, t16's over the test
+    // grams) are memoized over the documents table's snapshot: a sketch
+    // kept across an append would silently drop the NEW grams below the
+    // exact join (Bloom false negatives = missed contamination). Plant,
+    // in a copy of sf0.001, one train-split carrier of a clean test
+    // doc's text and one test-split carrier of a clean train doc's text
+    // (the split is a hash of the text, so a suffix picks it).
+    val src = sf("sf0.001")
+    val dir = java.nio.file.Files.createTempDirectory("graft-bloomgrow").toString
+    val docs = Tables.t(spark, src, "documents")
+    docs.write.parquet(s"$dir/documents.parquet")
+    val d09 = Extensions.contamination(spark, dir)
+      .select("doc_id").as[Long].collect().toSet
+    val t16 = Extensions.contaminatedTrainDocs(spark, dir)
+      .select("doc_id").as[Long].collect().toSet
+    def bucket(t: String): Long = graft.functions.H32Digest.h32(
+      org.apache.spark.unsafe.types.UTF8String.fromString(t)) % 100
+    val texts = docs.select("doc_id", "text").as[(Long, String)].collect()
+      .sortBy(-_._2.length)
+    val (testId, testText) =
+      texts.find { case (id, t) => bucket(t) >= 90 && !d09(id) }.get
+    val (trainId, trainText) =
+      texts.find { case (id, t) => bucket(t) < 80 && !t16(id) }.get
+    def carrier(text: String, inSplit: Long => Boolean): String =
+      Iterator.from(0).map(i => s"$text zq$i").find(c => inSplit(bucket(c))).get
+    def planted(id: Long, text: String) =
+      docs.filter(col("doc_id") === trainId)
+        .withColumn("doc_id", lit(id)).withColumn("text", lit(text))
+    planted(900001L, carrier(testText, _ < 80))
+      .unionByName(planted(900002L, carrier(trainText, _ >= 90)))
+      .write.mode("append").parquet(s"$dir/documents.parquet")
+    assert(Extensions.contamination(spark, dir)
+        .filter(col("doc_id") === testId).count() == 1,
+      "d09 missed a test doc whose grams a new train doc carries — stale sketch")
+    assert(Extensions.contaminatedTrainDocs(spark, dir)
+        .filter(col("doc_id") === trainId).count() == 1,
+      "t16 missed a train doc whose grams a new test doc carries — stale sketch")
   }
 
   test("d12 at 64 bits is a small precise subset of the 32-bit pair flood") {
@@ -140,35 +163,29 @@ class DedupSpec extends SparkSpec {
     } finally { p32.unpersist(); p64.unpersist() }
   }
 
-  test("cluster-label memo serves d07's consumers; invalidate sees growth") {
+  test("cluster-label memo serves d07's consumers; the snapshot key sees growth") {
     // d07/t13/t16 read the memoized label table (the Bloom/ANN-index
     // storage-for-recompute pattern applied to the CC fixpoint); the
-    // memo carries every per-dir memo's staleness contract — a grown
-    // corpus needs invalidateClusters, and after it the resolution
-    // must cover the new documents.
+    // memo is keyed by the documents table's snapshot, so after growth
+    // the resolution must cover the new documents with no invalidate
+    // call.
     val src = sf("sf0.001")
     val dir = java.nio.file.Files.createTempDirectory("graft-clmemo").toString
     val docs = Tables.t(spark, src, "documents").select("doc_id", "text", "lang")
     docs.filter(col("doc_id") % 2 === 0).write.mode("append")
       .parquet(s"$dir/documents.parquet")
-    Extensions.invalidateClusters(dir)
     val before = Extensions.canonicalCorpus(spark, dir).count()
-    // Growth: the memoized labels are now stale by contract — the
-    // resolution still joins the NEW doc spine (left join), but any
-    // new-vs-old near-dup pair is invisible until invalidation.
     docs.filter(col("doc_id") % 2 === 1).write.mode("append")
       .parquet(s"$dir/documents.parquet")
-    Extensions.invalidateClusters(dir)
     val after = Extensions.canonicalCorpus(spark, dir)
     assert(after.count() > before,
-      "post-invalidate resolution must cover the grown corpus")
+      "post-growth resolution must cover the grown corpus")
     // and equals a from-scratch resolution over fresh clusters
     assertSameRows(after,
       Extensions.canonicalResolution(
         Tables.t(spark, dir, "documents").select("doc_id", "lang"),
         Extensions.dedupClusters(spark, dir)),
       "memoized-label resolution vs fresh-cluster resolution")
-    Extensions.invalidateClusters(dir)
   }
 
   test("m04 fingerprint pairs share their window sets (true media near-dups)") {

@@ -392,7 +392,6 @@ class PlanSpec extends SparkSpec {
     // pin) and resolve the label from the index row itself — a plan
     // that joins a corpus-grain label frame at query time re-introduces
     // the scan the index exists to avoid.
-    graft.queries.Extensions.invalidateAnnIndex(dir)
     val df = graft.queries.Extensions.annIvfFilteredIndexed(spark, dir)
     val p = planOf(df)
     assert(p.contains("dynamicpruning") || p.contains("PartitionFilters: [isnotnull(cell"),
@@ -455,7 +454,6 @@ class PlanSpec extends SparkSpec {
     // they come from the query vectors — so DPP, not static pruning, is
     // the correct mechanism). A full-index scan here is the exact
     // linear-work bug the stored index exists to remove.
-    graft.queries.Extensions.invalidateAnnIndex(dir)
     val df = graft.queries.Extensions.annIvfIndexed(spark, dir)
     val p = planOf(df)
     val idxScans = p.linesIterator
@@ -475,7 +473,6 @@ class PlanSpec extends SparkSpec {
     // query-side predicate) are limited to the single exact-rerank
     // key-join fetch. A second corpus-grain scan would be s15's
     // per-query code recomputation, the exact work s17 exists to store.
-    graft.queries.Extensions.invalidateAnnIndex(dir)
     val df = graft.queries.Extensions.annIvfSq8Indexed(spark, dir)
     val p = planOf(df)
     val idxScans = p.linesIterator
@@ -499,7 +496,6 @@ class PlanSpec extends SparkSpec {
     // lookup table — the only corpus-grain embeddings scan is the
     // exact rerank's key-join fetch (a second would be s20's
     // per-invocation code recomputation, the work s21 stores away).
-    graft.queries.Extensions.invalidateAnnIndex(dir)
     val df = graft.queries.Extensions.annIvfPqIndexed(spark, dir)
     val p = planOf(df)
     val idxScans = p.linesIterator
@@ -582,7 +578,6 @@ class PlanSpec extends SparkSpec {
     // of the index's stored (cell, vec_id) rows, verification from key
     // joins. (s08 keeps one legitimate broadcast NLJ: scoring the 10
     // query vectors against the sidecar centroids.)
-    graft.queries.Extensions.invalidateAnnIndex(dir)
     val p = planOf(graft.queries.Extensions.semdedupIndexed(spark, dir))
     assert(!p.contains("CartesianProduct") && !p.contains("NestedLoopJoin"),
       s"s09 re-derives assignment (nested-loop quantizer join):\n$p")

@@ -56,14 +56,12 @@ class PostingSpec extends SparkSpec {
     val docs = Tables.t(spark, src, "documents").select("doc_id", "text", "lang")
     val emb = Tables.t(spark, src, "embeddings")
     // Two waves; each drain maintains index + postings.
-    Extensions.invalidateCorpusCount(base)
     for (k <- Seq(0, 1)) {
       docs.filter(pmod(col("doc_id"), lit(2)) === k).coalesce(1)
         .write.mode("append").parquet(p.docs)
       emb.filter(pmod(col("vec_id"), lit(2)) === k).coalesce(1)
         .write.mode("append").parquet(p.embeddings)
       if (k == 0) CorpusService.trainQuantizer(spark, p)
-      Extensions.invalidateCorpusCount(base)
       CorpusService.drainAvailable(spark, p, index = true, postings = true)
     }
     val queries = Tables.t(spark, base, "documents")
@@ -135,7 +133,6 @@ class PostingSpec extends SparkSpec {
     Tables.t(spark, src, "documents").select("doc_id", "text", "lang")
       .write.parquet(p.docs)
     Tables.t(spark, src, "embeddings").write.parquet(p.embeddings)
-    Extensions.invalidateCorpusCount(base)
     CorpusService.trainQuantizer(spark, p)
     CorpusService.drainAvailable(spark, p, index = true, postings = true)
     // External request: doc 3's text + embedding under a disjoint id.

@@ -14,7 +14,6 @@ class SemDedupIndexSpec extends SparkSpec {
 
   test("s09 (indexed) ≡ s05 (recomputed) row-for-row (sf0.001)") {
     val dir = sf("sf0.001")
-    Extensions.invalidateAnnIndex(dir)
     assertSameRows(
       Extensions.semdedupCells(spark, dir),
       Extensions.semdedupIndexed(spark, dir),
@@ -23,7 +22,6 @@ class SemDedupIndexSpec extends SparkSpec {
 
   test("s09 (indexed) ≡ s05 (recomputed) row-for-row (sf0.01)") {
     val dir = sf("sf0.01")
-    Extensions.invalidateAnnIndex(dir)
     assertSameRows(
       Extensions.semdedupCells(spark, dir),
       Extensions.semdedupIndexed(spark, dir),
@@ -32,7 +30,6 @@ class SemDedupIndexSpec extends SparkSpec {
 
   test("s09 (indexed) ≡ s05 (recomputed) row-for-row (sf0.1, bench scale)") {
     val dir = sf("sf0.1")
-    Extensions.invalidateAnnIndex(dir)
     assertSameRows(
       Extensions.semdedupCells(spark, dir),
       Extensions.semdedupIndexed(spark, dir),

@@ -28,7 +28,6 @@ class StreamingContaminationSpec extends SparkSpec {
     docs.filter(col("doc_id") % 50 === 0)
       .select((col("doc_id") + 900000).as("doc_id"), col("text"), col("lang"))
       .coalesce(1).write.parquet(s"$refDir/documents.parquet")
-    Extensions.invalidateBloom(refDir)
 
     val docsDir = s"$base/documents.parquet"
     val log = s"$base/dedup/contam"

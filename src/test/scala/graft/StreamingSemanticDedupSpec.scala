@@ -129,8 +129,9 @@ class StreamingSemanticDedupSpec extends SparkSpec {
       pairs, ckpt)
 
     // The corpus grows; retrain re-derives the quantizer over the FULL
-    // corpus (memoized count invalidated — a stale count would freeze
-    // the sqrt(n) stride) and rebuilds the assignment table; then the
+    // corpus (the memoized count is keyed by the table's snapshot — a
+    // stale count would freeze the sqrt(n) stride) and rebuilds the
+    // assignment table; then the
     // new files ingest against the rebuilt state.
     emb.filter(pmod(col("vec_id"), lit(3)) === 2)
       .coalesce(1).write.mode("append").parquet(corpus)
