@@ -54,6 +54,14 @@ object Snapshot {
     false
   }
 
+  /** Delete `dir` and everything beneath it: the `release` of a memo
+    * whose value is a directory it built (the ANN index, the BPE vocab),
+    * so a superseded snapshot's build does not stay on disk. */
+  def deleteDir(s: SparkSession)(dir: String): Unit = {
+    val p = new Path(dir)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
   /** A memo's identity: its name (plus variant), the input table
     * directories its compute reads, and the owning applicationId when
     * the value holds Spark state (a broadcast or a checkpoint dies with

@@ -28,16 +28,21 @@ object InitialLoad {
     * (et_initial_totals_oltp, initial_load…py:150-230). Also fixes the
     * reference's missing COALESCE on the initial path (SURVEY P4). */
   def campaignTotals(advertiser: DataFrame, campaign: DataFrame,
-                     impressions: DataFrame, clicks: DataFrame): DataFrame = {
-    val imp = Aggregates.totalsPerCampaign(impressions, "imp_total", "max_imp_at")
-    val clk = Aggregates.totalsPerCampaign(clicks, "clk_total", "max_clk_at")
-    campaign.select(col("id").as("campaign_id"), col("name").as("campaign_name"),
-        col("bid"), col("budget"), col("start_date"), col("end_date"),
-        col("advertiser_id"), col("updated_at"), col("created_at"))
-      .join(broadcast(advertiser.select(col("id").as("advertiser_id"),
-        col("name").as("advertiser_name"))), Seq("advertiser_id"), "left")
-      .join(imp, Seq("campaign_id"), "left")
-      .join(clk, Seq("campaign_id"), "left")
+                     impressions: DataFrame, clicks: DataFrame): DataFrame =
+    totalsFrom(advertiser, campaign,
+      Aggregates.totalsPerCampaign(impressions, "imp_total", "max_imp_at"),
+      Aggregates.totalsPerCampaign(clicks, "clk_total", "max_clk_at"))
+
+  /** The totals row of every campaign from per-campaign fact totals:
+    * `perCampaign` frames keyed by `campaign_id` that together carry
+    * `imp_total`, `max_imp_at`, `clk_total` and `max_clk_at`, each
+    * left-joined onto campaign ⋈ advertiser (a campaign with no facts
+    * counts 0). Shared by the raw-fact reference above and the delta
+    * cycle, which sums its (kind, campaign, day) snapshot instead. */
+  private[jobs] def totalsFrom(advertiser: DataFrame, campaign: DataFrame,
+                               perCampaign: DataFrame*): DataFrame =
+    perCampaign.foldLeft(campaignDim(advertiser, campaign))(
+        _.join(_, Seq("campaign_id"), "left"))
       .select(
         col("advertiser_name"),
         col("campaign_name"),
@@ -54,7 +59,16 @@ object InitialLoad {
         col("campaign_id").as("rtm_campaign_id"),
         Core.changeVersion(col("updated_at"), col("created_at"),
           col("max_imp_at"), col("max_clk_at")).as("rtm_delta"))
-  }
+
+  /** campaign ⋈ advertiser: one row per campaign with its advertiser's
+    * name (NULL for a campaign whose advertiser is missing). */
+  private[jobs] def campaignDim(advertiser: DataFrame,
+                                campaign: DataFrame): DataFrame =
+    campaign.select(col("id").as("campaign_id"), col("name").as("campaign_name"),
+        col("bid"), col("budget"), col("start_date"), col("end_date"),
+        col("advertiser_id"), col("updated_at"), col("created_at"))
+      .join(broadcast(advertiser.select(col("id").as("advertiser_id"),
+        col("name").as("advertiser_name"))), Seq("advertiser_id"), "left")
 
   /** Daily fact grain (et_initial_impressions/clicks, initial_load…py:239-323). */
   def dailyCounts(campaign: DataFrame, facts: DataFrame,

@@ -7,7 +7,7 @@ import graft.Snapshot.hasData
 import graft.gen.{DeltaActions, Generators, OltpState}
 import graft.queries.Extensions
 import graft.schema.Schemas
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The runnable end-to-end pipeline — the reference's user-facing artifact
@@ -19,8 +19,14 @@ import org.apache.spark.sql.functions._
   *   2. initial load (initial_load…py:570-658): derive the OLAP entity
   *      logs + both reports and write them;
   *   3. N cycles of generate (generate_new_data.py's random action every
-  *      3 minutes) + track-delta (track_delta.py:662-664): append-only
-  *      version-log deltas, keep-latest reads, report rebuilds.
+  *      3 minutes) + track-delta (track_delta.py:662-664).
+  *
+  * A track-delta cycle (`deltaStep`) reads the facts ONCE: one
+  * checkpointed (kind, campaign, day) aggregate is its only OLTP
+  * snapshot, and the totals, both CDC diffs and both reports derive from
+  * it. It writes the two reports first and appends to the three version
+  * logs last, so a crash in between is repaired by the next cycle. This
+  * relies on append-only facts and unique campaign ids (see deltaStep).
   *
   * Storage layout under `base`:
   * {{{
@@ -31,9 +37,9 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * Every step is the distributed form: generation is range-based, deltas
-  * are anti/semi joins at key grain, reports read keep-latest views —
-  * nothing driver-side except max-id/branch scalars (same O(1) values the
-  * reference pulls via `RETURNING id` / `SELECT COUNT(*)`).
+  * are anti joins at (key, day) grain, reports are maintained at the
+  * changed keys — nothing driver-side except max-id/branch scalars (same
+  * O(1) values the reference pulls via `RETURNING id` / `SELECT COUNT(*)`).
   */
 object Main {
 
@@ -122,108 +128,74 @@ object Main {
     delta.action
   }
 
-  /** track_delta: recompute totals at key grain, append only changed-key
-    * version rows, then maintain the reports. */
+  /** track_delta: one CDC cycle over a single snapshot of the OLTP store.
+    *
+    *  1. Snapshot: both fact tables, read once, grouped to (kind,
+    *     campaign, day) with the campaign's advertiser
+    *     (`DeltaUpsert.factDays`), localCheckpoint-ed. Nothing else in the
+    *     cycle scans a fact table.
+    *  2. Diffs, each checkpointed once BEFORE anything is written (their
+    *     lineage reads the logs the cycle appends to): the totals rows —
+    *     the snapshot's per-campaign sums joined to campaign ⋈ advertiser
+    *     — absent from the totals log (full row, `DeltaUpsert.deltaRows`),
+    *     and the snapshot rows absent from both daily logs (full tuple,
+    *     `DeltaUpsert.dailyDelta`). A changed row IS the version row to
+    *     append. A fresh daily row with a NULL advertiser or day (an
+    *     orphan fact) never equals a logged row, so its campaign is always
+    *     touched, but it is never appended: the log cannot grow by it
+    *     every cycle, and the touched key matches no report row.
+    *  3. Reports, both incremental: the changed keys' totals rows replace
+    *     theirs in the previous report; the daily report's touched
+    *     campaigns (totals ∪ daily diff keys) re-derive from the snapshot,
+    *     with names from campaign ⋈ advertiser. No log is read.
+    *  4. Log appends, last: totals, then both daily logs.
+    *
+    * Precondition: facts are append-only and campaign ids unique. Then a
+    * (key, day)'s snapshot row has the highest (rtm_delta, count) of any
+    * version in its log, so it is what keep-latest returns after the
+    * append — the reports derived from the snapshot equal those derived
+    * from the logs' keep-latest views (PipelineSpec pins both). A crash
+    * after the reports but before the last append leaves logs that the
+    * next cycle diffs to the same touched set again, so it converges. */
   def deltaStep(spark: SparkSession, p: Paths, today: String): Unit = {
     val st = oltp(spark, p)
-    val totalsNow = InitialLoad.campaignTotals(st.advertiser, st.campaign,
-      st.impressions, st.clicks)
-    val log = Warehouse.read(spark, p.totalsLog)
-    val deltaRows = DeltaUpsert.deltaRows(totalsNow, log).persist()
-    deltaRows.count()
-    // The touched campaign keys survive PAST the log appends below, so
-    // they are localCheckpoint-ed (eager, lineage truncated): a merely
-    // persisted diff would be refreshed by Spark's recache-by-path when
-    // its input log is appended to, and re-read as empty.
-    val touchedTotals = deltaRows
-      .select(col("rtm_advertiser_id"), col("rtm_campaign_id")).distinct()
+    val days = DeltaUpsert.factDays(st.campaign, st.impressions, st.clicks)
+      .localCheckpoint()
+    val totals = DeltaUpsert.deltaRows(
+        InitialLoad.totalsFrom(st.advertiser, st.campaign,
+          DeltaUpsert.campaignFacts(days)),
+        Warehouse.read(spark, p.totalsLog))
+      .localCheckpoint()
+    val dailyLogs = Seq(p.impsDaily, p.clksDaily)  // in FactKinds order
+    val daily = DeltaUpsert.dailyDelta(days,
+        dailyLogs.map(Warehouse.read(spark, _)))
       .localCheckpoint()
 
-    // Daily logs: append day-grain rows whose (key, day, rtm_delta) is new
-    // — the same CDC diff at daily grain (track_delta get_delta_impressions).
-    val touchedImps =
-      appendDailyDelta(spark, st, p.impsDaily, st.impressions, "impressions")
-    val touchedClks =
-      appendDailyDelta(spark, st, p.clksDaily, st.clicks, "clicks")
-
-    // Totals report: O(changed) incremental maintenance — only the delta
-    // keys' rows re-derive, merged keep-latest over the previous report
-    // (Reports.incrementalTotalsReport; WarehouseSpec pins ≡ full
-    // rebuild) — instead of the reference's full DROP+rebuild every
-    // cycle. replaceReport stages the write because the new report reads
-    // the old one. Ordering is load-bearing: this must run BEFORE the
-    // delta is appended to the log — persist() does not protect against
-    // Spark's recache-by-path, which recomputes any cached plan whose
-    // lineage reads a path that was just written; recomputed after the
-    // append, the diff would see an already-updated log and go empty.
     Warehouse.replaceReport(spark,
       Reports.incrementalTotalsReport(
-        Warehouse.read(spark, p.totalsReport), deltaRows, today),
+        Warehouse.read(spark, p.totalsReport), totals, today),
       p.totalsReport)
-    Warehouse.appendVersions(deltaRows, p.totalsLog, DeltaUpsert.Keys)
-    deltaRows.unpersist()
-    val latest = DeltaUpsert.latest(Warehouse.read(spark, p.totalsLog))
-    val dim = latest.select(col("rtm_advertiser_id"), col("rtm_campaign_id"),
-      col("advertiser_name"), col("campaign_name")).distinct()
-    val impsDaily = latestDaily(Warehouse.read(spark, p.impsDaily),
-      "campaign_impressions_date", "campaign_impressions_daily_count")
-    val clksDaily = latestDaily(Warehouse.read(spark, p.clksDaily),
-      "campaign_clicks_date", "campaign_clicks_daily_count")
-      .withColumnRenamed("campaign_clicks_date", "campaign_impressions_date")
-    // Daily report: O(changed campaigns) incremental maintenance at
-    // CAMPAIGN grain (the report's per-campaign day ordinal forbids
-    // day-grain patching — Reports.incrementalDailyCtrReport). Touched =
-    // totals delta keys ∪ both day-grain CDC key sets, so the cover
-    // holds even if a day row changed without a totals change.
-    val touched = touchedTotals.unionByName(touchedImps)
-      .unionByName(touchedClks)
+    val dim = InitialLoad.campaignDim(st.advertiser, st.campaign)
+      .select(col("advertiser_id").as("rtm_advertiser_id"),
+        col("campaign_id").as("rtm_campaign_id"),
+        col("advertiser_name"), col("campaign_name"))
     Warehouse.replaceReport(spark,
       Reports.incrementalDailyCtrReport(
-        Warehouse.read(spark, p.dailyCtrReport), touched,
-        dim, impsDaily, clksDaily),
+        Warehouse.read(spark, p.dailyCtrReport),
+        totals.select(DeltaUpsert.Keys.map(col): _*)
+          .unionByName(daily.select(DeltaUpsert.Keys.map(col): _*)),
+        dim, DeltaUpsert.dailyRows(days, "impressions").drop("rtm_delta"),
+        DeltaUpsert.dailyRows(days, "clicks").drop("rtm_delta")
+          .withColumnRenamed("campaign_clicks_date", "campaign_impressions_date")),
       p.dailyCtrReport)
-    // The key-set checkpoints are tiny, but an always-on service must
-    // not leak one per delta tick.
-    Seq(touchedTotals, touchedImps, touchedClks).foreach(Extensions.freeCkpt)
-  }
 
-  /** Keep-latest daily rows; ties on rtm_delta break by the (monotone)
-    * daily count — same rationale as DeltaUpsert.latest. */
-  private def latestDaily(log: DataFrame, dateCol: String,
-                          cntCol: String): DataFrame =
-    graft.ops.Core.latestView(log,
-        Seq("rtm_advertiser_id", "rtm_campaign_id", dateCol), "rtm_delta",
-        tiebreak = Seq(cntCol))
-      .select(col("rtm_advertiser_id"), col("rtm_campaign_id"),
-        col(dateCol), col(cntCol))
-
-  /** Day-grain CDC: append daily rows whose FULL (key, day, count, delta)
-    * tuple is new — a (key, day, rtm_delta) diff alone misses a count
-    * change from a fact landing at-or-before its day's max timestamp
-    * (same late-arrival blind spot DeltaUpsert.changedKeys documents).
-    * Returns the changed CAMPAIGN keys (localCheckpoint-ed BEFORE the
-    * append — the diff's lineage reads the log being appended to), the
-    * input to the daily report's incremental maintenance. */
-  private def appendDailyDelta(spark: SparkSession, st: OltpState,
-                               path: String, facts: DataFrame,
-                               what: String): DataFrame = {
-    val dateCol = s"campaign_${what}_date"
-    val cntCol = s"campaign_${what}_daily_count"
-    val diffCols = Seq("rtm_advertiser_id", "rtm_campaign_id", dateCol,
-      cntCol, "rtm_delta")
-    val fresh = InitialLoad.dailyCounts(st.campaign, facts, what)
-    val existing = Warehouse.read(spark, path)
-      .select(diffCols.map(col): _*)
-    val changed = graft.ops.Joins.deltaKeys(
-      fresh.select(diffCols.map(col): _*), existing, diffCols)
-    val touchedKeys = changed
-      .select(col("rtm_advertiser_id"), col("rtm_campaign_id")).distinct()
-      .localCheckpoint()
-    Warehouse.appendDaily(
-      graft.ops.Joins.restrictToChanged(fresh, changed,
-        Seq("rtm_advertiser_id", "rtm_campaign_id", dateCol)),
-      path, dateCol, DeltaUpsert.Keys)
-    touchedKeys
+    Warehouse.appendVersions(totals, p.totalsLog, DeltaUpsert.Keys)
+    DeltaUpsert.FactKinds.zip(dailyLogs).foreach { case (kind, log) =>
+      Warehouse.appendDaily(DeltaUpsert.dailyAppend(daily, kind), log,
+        DeltaUpsert.dailyCols(kind)._1, DeltaUpsert.Keys)
+    }
+    // Tiny, but an always-on service must not leak three per tick.
+    Seq(days, totals, daily).foreach(Extensions.freeCkpt)
   }
 
   /** Compact EVERY version log the batch cycle writes — the totals log

@@ -83,26 +83,19 @@ object Reports {
     * DROPs and fully re-derives the report every delta cycle
     * (track_delta.py:438-537, O(all keys) every 5 minutes). The report is a
     * per-row projection of the totals grain, so maintaining it only needs
-    * the CHANGED keys' rows re-derived and merged keep-latest over the
-    * previous report (same rtm_delta versioning as the OLAP log):
-    * O(changed + |report|) with no fact scan, and identical output to a
-    * full rebuild (WarehouseSpec pins the equivalence).
+    * the CHANGED keys' rows re-derived: they replace those keys' previous
+    * rows, every other row passes through. O(changed + |report|) with no
+    * fact scan and no shuffle, and identical output to a full rebuild
+    * (WarehouseSpec pins the equivalence). `changedTotals` holds one row
+    * per key, newest version — what a totals CDC diff yields.
     *
     * Clock invariant: equivalence holds for a FIXED report clock. The
     * today-derived columns (elapsed/remaining/period status) of UNCHANGED
     * keys are as of their last derivation; when the reporting day rolls
-    * over, pass all totals as changed (= full re-derive) once. A fresh row
-    * whose rtm_delta ties the previous one (re-derivation without new
-    * facts) deterministically wins via the freshness tiebreak. */
+    * over, pass all totals as changed (= full re-derive) once. */
   def incrementalTotalsReport(prevReport: DataFrame, changedTotals: DataFrame,
                               today: String): DataFrame =
-    Core.latestView(
-      prevReport.withColumn("__fresh", lit(0))
-        .unionByName(totalsReport(changedTotals, today)
-          .withColumn("__fresh", lit(1))),
-      Seq("rtm_advertiser_id", "rtm_campaign_id"), "rtm_delta",
-      tiebreak = Seq("__fresh"))
-      .drop("__fresh")
+    replaceKeys(prevReport, changedTotals, totalsReport(changedTotals, today))
 
   /** Incremental daily-CTR maintenance — the daily twin of
     * incrementalTotalsReport, beyond the reference's every-cycle full
@@ -111,28 +104,40 @@ object Reports {
     * ordinal (`campaign_day` = row_number over its dates), so one
     * changed day re-ranks every row of its campaign — day-grain
     * patching would corrupt the ordinal. Campaigns in `touchedKeys`
-    * re-derive in full (their daily views restricted by semi-join);
-    * every other campaign's rows pass through untouched. Cost is
-    * O(changed campaigns' days + |report|) with no full log collapse —
-    * at 100 TB a 5-minute delta touches a handful of campaigns, not
-    * the fleet. Identical to a full rebuild (WarehouseSpec pins it;
+    * re-derive in full from `impsDaily`/`clksDaily` (each restricted to
+    * them by semi join); every other campaign's rows pass through
+    * untouched. Identical to a full rebuild (WarehouseSpec pins it;
     * PipelineSpec pins the lifecycle-level form).
     *
-    * `touchedKeys` must cover every campaign whose report could change:
-    * the totals delta keys qualify — any daily-count change moves the
-    * lifetime count, and a name change versions the totals row — but
-    * callers union the day-grain CDC keys in too, making the cover
-    * independent of that inference. */
+    * The daily inputs must hold the CURRENT rows of every touched
+    * campaign. `Main.deltaStep` passes its (kind, campaign, day) fact
+    * snapshot, not the daily logs' keep-latest views: with append-only
+    * facts the two agree on every touched campaign, and the snapshot
+    * needs no window over the logs. `touchedKeys` must cover every
+    * campaign whose report could change; deltaStep passes the totals
+    * diff's keys (a name change or a count change versions the totals
+    * row) united with the daily diff's, so the cover does not rest on
+    * that inference alone. Duplicate keys are harmless.
+    *
+    * Scale posture: the touched campaigns are a delta's worth (a handful
+    * per 5-minute cycle, not the fleet), so the keys and the restricted
+    * dim and click rows are broadcast and the only shuffle is the day
+    * ordinal's window over the touched campaigns' rows. */
   def incrementalDailyCtrReport(prevReport: DataFrame, touchedKeys: DataFrame,
                                 dim: DataFrame, impsDaily: DataFrame,
                                 clksDaily: DataFrame): DataFrame = {
-    val keys = Seq("rtm_advertiser_id", "rtm_campaign_id")
-    val touched = touchedKeys.select(keys.map(col): _*).distinct()
-    prevReport.join(touched, keys, "left_anti")
-      .unionByName(dailyCtrReport(dim,
-        impsDaily.join(touched, keys, "left_semi"),
-        clksDaily.join(touched, keys, "left_semi")))
+    val touched = broadcast(touchedKeys.select(DeltaUpsert.Keys.map(col): _*))
+    def only(df: DataFrame) = df.join(touched, DeltaUpsert.Keys, "left_semi")
+    replaceKeys(prevReport, touched, dailyCtrReport(broadcast(only(dim)),
+      only(impsDaily), broadcast(only(clksDaily))))
   }
+
+  /** `prev` without the keys in `keys`, plus `fresh` (their new rows). */
+  private def replaceKeys(prev: DataFrame, keys: DataFrame,
+                          fresh: DataFrame): DataFrame =
+    prev.join(broadcast(keys.select(DeltaUpsert.Keys.map(col): _*)),
+        DeltaUpsert.Keys, "left_anti")
+      .unionByName(fresh)
 
   /** W1+J5+J6 daily CTR report: `dim` is the distinct (advertiser, campaign,
     * names) lookup; daily click rows are date-aligned onto daily impression

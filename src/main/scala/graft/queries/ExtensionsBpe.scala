@@ -255,14 +255,15 @@ private[queries] trait ExtBpe { this: Extensions.type =>
     * job; queries read). A FROZEN vocab would stay valid for serving —
     * new words still tokenize; retraining is a quality event, not a
     * correctness one (the quantizer-epoch asymmetry) — but a one-shot
-    * query reads the vocab of the corpus as it is. */
+    * query reads the vocab of the corpus as it is. The superseded
+    * vocab's temp dir is deleted when the fresh one replaces it. */
   private[graft] def bpeVocabPath(s: SparkSession, dir: String): String =
-    graft.Snapshot.memo(s, "bpeVocab", Seq(s"$dir/documents.parquet")) {
+    graft.Snapshot.memo(s, "bpeVocab", Seq(s"$dir/documents.parquet"))({
       val p = java.nio.file.Files.createTempDirectory("graft-bpevocab")
         .toFile.getAbsolutePath
       buildBpeVocab(s, docs(s, dir), p)
       p
-    }
+    }, graft.Snapshot.deleteDir(s))
 
   /** The stored merge list, rank-ordered — driver-side tokenizer config
     * (the broadcast-ADC-lookup size class: `rounds` rows, never corpus

@@ -2216,14 +2216,15 @@ private[queries] trait ExtSimilarity { this: Extensions.type =>
     * once per snapshot of its embeddings table (the build is the
     * offline indexing job, the queries read), so a corpus that grew
     * gets a fresh index instead of one that silently misses every
-    * vector ingested after the build. */
-  private[queries] def annIndexPath(s: SparkSession, dir: String): String =
-    graft.Snapshot.memo(s, "annIndex", Seq(s"$dir/embeddings.parquet")) {
+    * vector ingested after the build. The superseded index's temp dir is
+    * deleted when the fresh one replaces it in the memo. */
+  private[graft] def annIndexPath(s: SparkSession, dir: String): String =
+    graft.Snapshot.memo(s, "annIndex", Seq(s"$dir/embeddings.parquet"))({
       val p = java.nio.file.Files.createTempDirectory("graft-annidx")
         .toFile.getAbsolutePath
       buildAnnIndex(s, dir, p)
       p
-    }
+    }, graft.Snapshot.deleteDir(s))
 
   private[queries] def annIndex(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(annIndexPath(s, dir))

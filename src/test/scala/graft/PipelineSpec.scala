@@ -168,4 +168,120 @@ class PipelineSpec extends SparkSpec {
     assertSameRows(once, DeltaUpsert.latest(once), "idempotent")
     assert(once.count() == totals.count())
   }
+
+  private val Today = Generators.DefaultNow.take(10)
+
+  /** A seeded, initial-loaded store under a fresh base. */
+  private def loadedStore(seed: Long): jobs.Main.Paths = {
+    val p = jobs.Main.Paths(
+      java.nio.file.Files.createTempDirectory("graft-delta").toString)
+    jobs.Main.seed(spark, p, Generators.DefaultNow, seed)
+    jobs.Main.initialLoad(spark, p, Today)
+    p
+  }
+
+  /** Append fact rows (campaign, created_at) with fresh ids. */
+  private def appendFacts(path: String, rows: Seq[(Long, java.sql.Timestamp)]): Unit = {
+    import spark.implicits._
+    val from = spark.read.parquet(path).agg(max("id")).head.getLong(0)
+    rows.zipWithIndex.map { case ((c, t), i) => (from + 1 + i, c, t) }
+      .toDF("id", "campaign_id", "created_at")
+      .write.mode("append").parquet(path)
+  }
+
+  /** The keep-latest view of a daily log, in `dailyCounts`' columns. */
+  private def latestDailyLog(path: String, what: String): DataFrame = {
+    val (dateCol, cntCol) = DeltaUpsert.dailyCols(what)
+    graft.ops.Core.latestView(jobs.Warehouse.read(spark, path),
+        Seq("rtm_advertiser_id", "rtm_campaign_id", dateCol), "rtm_delta",
+        tiebreak = Seq(cntCol))
+      .select(col("rtm_advertiser_id"), col("rtm_campaign_id"),
+        col(dateCol), col(cntCol), col("rtm_delta"))
+  }
+
+  /** The store's current rows of every OLAP artifact, for equality checks. */
+  private def artifacts(p: jobs.Main.Paths): Seq[Seq[String]] =
+    Seq(p.totalsLog, p.impsDaily, p.clksDaily, p.totalsReport, p.dailyCtrReport)
+      .map(jobs.Warehouse.read(spark, _).collect().map(_.toString).toSeq.sorted)
+
+  test("deltaStep: late-arriving facts reach every log and both reports") {
+    val p = loadedStore(5L)
+    // Per (campaign, day) newest fact timestamps of each fact table.
+    def dayMax(path: String) = spark.read.parquet(path)
+      .groupBy(col("campaign_id"), to_date(col("created_at")).as("d"))
+      .agg(max("created_at").as("m"))
+      .orderBy(col("campaign_id"), col("d")).collect()
+    val imp = dayMax(p.impressions).head
+    val clk = dayMax(p.clicks).last
+    val earliest = spark.read.parquet(p.impressions)
+      .agg(min("created_at")).head.getTimestamp(0)
+    // A backfilled impression and click AT their day's current max (the
+    // count moves, the version timestamp does not), a click below it,
+    // and an impression ten days before any fact.
+    appendFacts(p.impressions, Seq(
+      imp.getLong(0) -> imp.getTimestamp(2),
+      imp.getLong(0) -> new java.sql.Timestamp(earliest.getTime - 10L * 86400000L)))
+    appendFacts(p.clicks, Seq(
+      clk.getLong(0) -> clk.getTimestamp(2),
+      clk.getLong(0) -> new java.sql.Timestamp(clk.getTimestamp(2).getTime - 1000L)))
+    jobs.Main.deltaStep(spark, p, Today)
+
+    val st = jobs.Main.oltp(spark, p)
+    assertSameRows(DeltaUpsert.latest(jobs.Warehouse.read(spark, p.totalsLog)),
+      InitialLoad.campaignTotals(st.advertiser, st.campaign, st.impressions,
+        st.clicks), "totals log keep-latest vs recompute")
+    Seq(p.impsDaily -> "impressions", p.clksDaily -> "clicks").foreach {
+      case (log, what) =>
+        val facts = if (what == "impressions") st.impressions else st.clicks
+        assertSameRows(latestDailyLog(log, what),
+          InitialLoad.dailyCounts(st.campaign, facts, what),
+          s"$what daily log keep-latest vs recompute")
+    }
+    val olap = InitialLoad.run(st.advertiser, st.campaign, st.impressions,
+      st.clicks, Today)
+    assertSameRows(jobs.Warehouse.read(spark, p.totalsReport),
+      olap.totalsReport, "totals report vs initial load")
+    assertSameRows(jobs.Warehouse.read(spark, p.dailyCtrReport),
+      olap.dailyCtrReport, "daily report vs initial load")
+  }
+
+  test("deltaStep: a repeat appends nothing; one step stays in its action budget") {
+    val p = loadedStore(9L)
+    jobs.Main.deltaStep(spark, p, Today)  // warm: the first step after a load
+    val camp = spark.read.parquet(p.campaign).agg(min("id")).head.getLong(0)
+    appendFacts(p.impressions, Seq(
+      camp -> java.sql.Timestamp.valueOf(Generators.DefaultNow)))
+    // Count the SQL executions (actions) of one steady step. The listener
+    // bus is asynchronous: a marked sentinel query's callback arrives
+    // after every earlier one.
+    val Mark = "graft_action_budget_sentinel"
+    val actions = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def seen(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
+        if (qe.logical.toString.contains(Mark)) sentinel.countDown()
+        else actions.incrementAndGet()
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = seen(qe)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = seen(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      jobs.Main.deltaStep(spark, p, Today)
+      spark.range(1).select(lit(Mark)).collect()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    // 3 checkpoints (snapshot, totals diff, daily diff), 2 report
+    // replaces, 3 log appends.
+    val ActionBudget = 8
+    assert(actions.get() <= ActionBudget,
+      s"one deltaStep ran ${actions.get()} actions (budget $ActionBudget)")
+
+    // A second step over the same store appends no row to any log and
+    // leaves both reports' rows as they were.
+    val before = artifacts(p)
+    jobs.Main.deltaStep(spark, p, Today)
+    assert(artifacts(p) == before, "a repeated deltaStep changed an artifact")
+  }
 }

@@ -59,6 +59,9 @@ class SnapshotSpec extends SparkSpec {
     Extensions.contaminationAgainst(spark, dir, dir)
     Extensions.annIvfIndexed(spark, dir).count()  // s08: index, count
     assert(before("hasLongDocs") == false, "sf0.001 has no long doc")
+    def builtDirs(): Seq[String] = Seq(Extensions.annIndexPath(spark, dir),
+      Extensions.bpeVocabPath(spark, dir))
+    val dirsBefore = builtDirs()
 
     // Rewrite both tables in place: drop a third, shift every vector id
     // but s08's ten query ids, and add one doc over the long-doc
@@ -89,6 +92,14 @@ class SnapshotSpec extends SparkSpec {
 
     val after = memoized(dir)
     val expected = memoized(cold)
+    // The rebuilt index and vocab replaced the pre-rewrite temp dirs,
+    // which the registry's release deleted.
+    val dirsAfter = builtDirs()
+    def exists(d: String) = new java.io.File(d).exists()
+    dirsBefore.zip(dirsAfter).foreach { case (old, now) =>
+      assert(old != now && !exists(old) && exists(now),
+        s"superseded $old (exists: ${exists(old)}) → $now (exists: ${exists(now)})")
+    }
     for (k <- expected.keys) {
       assert(after(k) == expected(k), s"$k: memo over the rewritten dir " +
         "differs from its cold recompute — stale snapshot")
