@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -17,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * queries whose plans had not changed; shared-JVM carry-over state was
   * the only remaining suspect.
   *
-  * Each query runs SPARK_GRAFT_ITERS times (default 3) and reports the
+  * Each query runs SPARK_GRAFT_ITERS times (default 5) and reports the
   * MEDIAN plus the MIN and the successful-iteration count: a single shot
   * in a shared JVM cannot tell a plan regression from a GC pause, and
   * min-vs-median divergence in the artifact is how noise is diagnosed
@@ -31,35 +29,22 @@ import org.apache.spark.sql.SparkSession
   * OR when the current median exceeds 1.5× its prior-round time (the
   * suspected-drift case — exactly the one a current-median gate misses,
   * because the drifted query is no longer sub-second). The prior artifact
-  * is the highest-numbered BENCH_r*.json in the working directory
-  * (override with SPARK_GRAFT_PRIOR_JSON; queries absent from it fall
-  * back to the current-median-sub-second rule).
+  * is found by [[priorTimes]]; queries absent from it fall back to the
+  * current-median-sub-second rule.
   *
-  * REGRESSION COMPARE: when a prior artifact exists (newest by
-  * default; SPARK_GRAFT_COMPARE=<prev.json> pins one), queries whose
-  * min-grain ratio vs prior exceeds 1.25× (and ≥ 0.15 s absolute) get
-  * two extra interleaved confirm iterations, and BENCH_LOCAL.json
-  * carries a "regressions" object with each suspect's prior/current/
-  * confirmed mins, its drift-adjusted ratio, and a "real"/"host"/
-  * "cross-host" verdict. The host normalizer is the median cur/prior
-  * ratio over ALL compared queries — the same workload mix on both
-  * hosts — which tracks memory-bound drift the arithmetic sentinel
-  * cannot (round-13's t02 false alarm burned a judge round on exactly
-  * this). "real" additionally requires the prior artifact to be
-  * SAME-HOST ATTESTED — host FINGERPRINT equality (hostname +
-  * boot-id) plus both sentinels in band (arithmetic 1.25×,
-  * memory-bound 1.4×); a sentinel band alone is NOT a host identity
-  * (round 15: two boxes within 1.21× on arithmetic shipped nine
-  * false "real" convictions on untouched code). An over-band suspect
-  * against an unattested prior is "cross-host". Either way, over-band
-  * suspects are then AUTO-ADJUDICATED: when the prior artifact names
-  * its commit, Bench invokes the cross-commit same-host A/B
-  * (tools/ab_bench.sh — the PRIOR BUILD interleaved against the
-  * current one in alternating JVMs on this machine, bounded to the
-  * worst [[AutoAbMaxQueries]] suspects at 3 rounds × 2 iters;
-  * SPARK_GRAFT_AUTO_AB=0 disables) and the A/B verdict supersedes the
-  * banded one — the artifact ships pre-adjudicated, with each
-  * adjudicated suspect carrying its "ab_ratio"/"ab" fields.
+  * REGRESSION COMPARE: when a prior artifact exists (the same lookup
+  * as above, restricted to artifacts at this run's scale factor),
+  * queries whose min-grain ratio vs prior exceeds 1.25× the host drift
+  * (and ≥ 0.15 s absolute) get two extra interleaved confirm
+  * iterations, and BENCH_LOCAL.json carries a "regressions" object with
+  * each suspect's prior/current/confirmed mins, its drift-adjusted
+  * ratio, and a "host"/"suspect" verdict. The host normalizer is the
+  * median cur/prior ratio over ALL compared queries — the same workload
+  * mix on both runs. A prior artifact may come from another machine, so
+  * the compare pass never convicts: a "suspect" is settled by the
+  * same-host cross-commit A/B (tools/ab_bench.sh — the prior BUILD
+  * interleaved against this one on this machine), whose command line the
+  * artifact names under "adjudicate".
   *
   * Output formatting is part of the contract — the driver captures only
   * a ~2000-char TAIL of stdout, so the artifact layout is split:
@@ -85,18 +70,23 @@ object Bench {
     * the single line to ~5.6 KB. */
   private[graft] val TailWindow = 2000
 
-  /** Per-query medians from the best available prior artifact (empty
-    * when none exists — first round, or running outside the repo root).
+  /** Per-query times from the best available prior artifact (empty
+    * when none exists — first round, or running outside the repo root):
+    * the "queries" medians for the widen rule, or (`key` = "mins") the
+    * compare pass's min grain — a median moves with GC pauses, the min
+    * only with plan or host changes.
+    *
     * Preference order: the SPARK_GRAFT_PRIOR_JSON override, then
     * `BENCH_LOCAL.json` (this program's own full-fidelity file from the
     * previous run — never truncated), then the highest-numbered driver
-    * artifact BENCH_r*.json. A driver artifact WRAPS the stdout tail
-    * inside a JSON string field ("tail"), so every quote arrives
-    * backslash-escaped — unescape before anchoring on the first
-    * "queries" object (always the median map; "mins"/"iters" come
-    * later). Works on the raw line, the wrapped form, and any
-    * whitespace-pretty variant. */
-  private[graft] def priorTimes(dir: String = "."): Map[String, Double] = {
+    * artifact BENCH_r*.json. The first candidate whose parse yields
+    * times wins — a present but corrupt/empty BENCH_LOCAL.json must not
+    * mask a usable driver artifact (an empty prior silently downgrades
+    * the widen rule). A non-empty `sf` skips candidates recorded at a
+    * DIFFERENT scale factor: an sf0.001 run compared against an sf0.1
+    * baseline produces ratio garbage in both directions. */
+  private[graft] def priorTimes(dir: String = ".", key: String = "queries",
+                                sf: String = ""): Map[String, Double] = {
     def readAll(p: String): String =
       try new String(
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
@@ -111,20 +101,26 @@ object Bench {
         })
         .sortBy(_._1).lastOption.map(_._2)
     }
-    // First candidate whose parse yields medians wins — a present but
-    // corrupt/empty BENCH_LOCAL.json must not mask a usable driver
-    // artifact (an empty prior silently downgrades the widen rule).
     val candidates =
       sys.env.get("SPARK_GRAFT_PRIOR_JSON").toSeq ++
         Option(local.getPath).filter(_ => local.isFile).toSeq ++
         driverArtifact.toSeq
-    candidates.iterator.map(p => parsePrior(readAll(p)))
+    candidates.iterator.map(readAll)
+      .filter(raw => sf.isEmpty ||
+        parsePriorSf(raw).forall(_ == new java.io.File(sf).getName))
+      .map(parsePriorKey(_, key))
       .find(_.nonEmpty).getOrElse(Map.empty)
   }
 
   private[graft] def parsePrior(raw: String): Map[String, Double] =
     parsePriorKey(raw, "queries")
 
+  /** The first `key` object of an artifact as name → seconds. A driver
+    * artifact WRAPS the stdout tail inside a JSON string field ("tail"),
+    * so every quote arrives backslash-escaped — unescape before
+    * anchoring. The first "queries" object is always the median map
+    * ("mins"/"iters" come later). Works on the raw line, the wrapped
+    * form, and any whitespace-pretty variant. */
   private[graft] def parsePriorKey(raw: String,
                                    key: String): Map[String, Double] = {
     val text = raw.replace("\\\"", "\"")
@@ -134,220 +130,26 @@ object Bench {
         val end = text.indexOf('}', start)
         val body = if (end < 0) text.substring(start)
                    else text.substring(start, end)
-        "\"([^\"]+)\":(-?[0-9.]+)".r.findAllMatchIn(body)
+        "\"([^\"]+)\"\\s*:\\s*(-?[0-9.]+)".r.findAllMatchIn(body)
           .map(x => x.group(1) -> x.group(2).toDouble).toMap
       }
   }
 
-  /** The prior artifact's load-sentinel seconds, or None (a clipped
-    * driver tail that lost the final stdout line). The HOST FINGERPRINT
-    * of the compare pass: a prior whose sentinel sits outside the
-    * same-host band cannot support a "real" regression verdict — the
-    * round-14 driver artifact carried eight "real" flags on untouched
-    * code whose prior mins came from a different machine, exactly the
-    * memory-bound drift class the workload-median normalizer is
-    * documented not to fully correct. */
-  private[graft] def parsePriorSentinel(raw: String): Option[Double] = {
-    val text = raw.replace("\\\"", "\"")
-    """"sentinel"\s*:\s*([0-9.]+)""".r.findFirstMatchIn(text)
-      .map(_.group(1).toDouble)
-  }
-
-  /** The prior artifact's host FINGERPRINT ("hostname/boot-id"), or
-    * None (pre-round-16 artifact, or a clipped driver tail). The
-    * identity the compare pass requires for a "real" verdict: round 15
-    * proved a sentinel BAND is not a host identity — the builder and
-    * driver boxes sat within the 1.25× arithmetic band (0.374 vs 0.31)
-    * and the band-only check shipped nine false "real" convictions
-    * that the interleaved A/B refuted 6-for-6. */
-  private[graft] def parsePriorHost(raw: String): Option[String] = {
-    val text = raw.replace("\\\"", "\"")
-    """"host"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(text)
-      .map(_.group(1))
-  }
-
-  /** The prior artifact's memory-bound sentinel seconds, or None. The
-    * arithmetic sentinel is pure ALU work and reads flat across
-    * machines and load regimes that differ 1.5× on shuffle-heavy
-    * queries; this one (a fixed wide hash-agg through an exchange) is
-    * bounded by the same resources the suite is. */
-  private[graft] def parsePriorMemSentinel(raw: String): Option[Double] = {
-    val text = raw.replace("\\\"", "\"")
-    """"mem_sentinel"\s*:\s*([0-9.]+)""".r.findFirstMatchIn(text)
-      .map(_.group(1).toDouble)
-  }
-
-  /** The prior artifact's git commit ("abc1234", "-dirty" suffixed when
-    * the tree wasn't clean), or None. The auto-A/B adjudicator's
-    * prior-build ref: an over-band suspect is settled by RUNNING the
-    * prior commit interleaved with this one (tools/ab_bench.sh), and
-    * the artifact itself must say which commit produced it. */
-  private[graft] def parsePriorCommit(raw: String): Option[String] = {
-    val text = raw.replace("\\\"", "\"")
-    """"commit"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(text)
-      .map(_.group(1))
-  }
-
-  /** The prior artifact's scale-factor basename ("sf0.1"), or None.
-    * The compare pass only runs against a SAME-SF prior — an sf0.001
-    * iteration run against an sf0.1 baseline produces ratio garbage
-    * in both directions. */
+  /** The prior artifact's scale-factor basename ("sf0.1"), or None. */
   private[graft] def parsePriorSf(raw: String): Option[String] = {
     val text = raw.replace("\\\"", "\"")
     """"sf"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(text)
       .map(m => new java.io.File(m.group(1)).getName)
   }
 
-  /** Per-query MINS from the best available prior artifact — the
-    * regression gate's grain (a median moves with GC pauses; the min
-    * only moves with plan or host changes). Same candidate order as
-    * [[priorTimes]]; artifacts without a "mins" object (a clipped
-    * driver tail) or with a DIFFERENT scale factor than `sf` yield
-    * empty and the compare pass skips. */
-  private[graft] def priorMinTimes(dir: String = ".",
-                                   sf: String = ""): Map[String, Double] =
-    priorMinsAndSentinel(dir, sf)._1
-
-  /** Everything the compare pass consults from the prior artifact —
-    * all fields from the SAME file that supplied the mins, so the host
-    * fingerprint the verdict column consults can never describe a
-    * different file than the numbers it qualifies. Pre-round-16
-    * artifacts carry only (mins, sentinel); the absent fingerprint
-    * fails attestation by design. */
-  private[graft] final case class PriorBench(
-      mins: Map[String, Double],
-      sentinel: Option[Double],
-      memSentinel: Option[Double],
-      host: Option[String],
-      commit: Option[String])
-
-  private[graft] def priorMinsAndSentinel(dir: String = ".", sf: String = "")
-      : (Map[String, Double], Option[Double]) = {
-    val p = priorBenchInfo(dir, sf)
-    (p.mins, p.sentinel)
-  }
-
-  private[graft] def priorBenchInfo(dir: String = ".", sf: String = "")
-      : PriorBench = {
-    def readAll(p: String): String =
-      try new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
-      catch { case _: Exception => "" }
-    val local = new java.io.File(dir, "BENCH_LOCAL.json")
-    val rx = "BENCH_r(\\d+)\\.json".r
-    val driverArtifact = Option(new java.io.File(dir).listFiles()).toSeq
-      .flatten
-      .flatMap(f => f.getName match {
-        case rx(n) => Some(n.toInt -> f.getPath)
-        case _     => None
-      })
-      .sortBy(_._1).lastOption.map(_._2)
-    val candidates =
-      sys.env.get("SPARK_GRAFT_COMPARE").toSeq ++
-        sys.env.get("SPARK_GRAFT_PRIOR_JSON").toSeq ++
-        Option(local.getPath).filter(_ => local.isFile).toSeq ++
-        driverArtifact.toSeq
-    candidates.iterator.map(readAll)
-      .filter(raw => sf.isEmpty ||
-        parsePriorSf(raw).forall(_ == new java.io.File(sf).getName))
-      .map(raw => PriorBench(parsePriorKey(raw, "mins"),
-        parsePriorSentinel(raw), parsePriorMemSentinel(raw),
-        parsePriorHost(raw), parsePriorCommit(raw)))
-      .find(_.mins.nonEmpty).getOrElse(
-        PriorBench(Map.empty, None, None, None, None))
-  }
-
-  /** This run's host fingerprint: hostname (capped at 24 chars — the
-    * stdout-line budget is spec-pinned and hostnames are unbounded)
-    * plus the first 8 hex of the kernel's boot UUID. Two artifacts
-    * with equal fingerprints were produced on the same machine IN THE
-    * SAME BOOT SESSION — the identity "real" verdicts require.
-    * (Hostname alone is weak — every cloud box here is named "vm" —
-    * and a sentinel band is weaker still: round 15's false
-    * convictions. 8 hex of a v4 UUID keeps accidental-collision odds
-    * at ~2^-32 against a same-named host, plenty for an honest-error
-    * guard.) Falls back to hostname-only off Linux. */
-  private[graft] def hostFingerprint(): String = {
-    val host =
-      (try java.net.InetAddress.getLocalHost.getHostName
-       catch { case _: Exception => "unknown" }).take(24)
-    val boot =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/sys/kernel/random/boot_id")),
-        "UTF-8").trim.take(8)
-      catch { case _: Exception => "" }
-    if (boot.isEmpty) host else s"$host/$boot"
-  }
-
-  /** This build's git commit ("-dirty" suffixed when the working tree
-    * differs from HEAD — such an artifact's code cannot be recovered
-    * from the ref, so the auto-A/B skips it as a prior), or None when
-    * the bench runs outside a git checkout (A/B scratch legs). */
-  private[graft] def gitCommit(): Option[String] = {
-    def run(cmd: String*): Option[String] =
-      try {
-        val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-        val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
-        if (p.waitFor() == 0) Some(out) else None
-      } catch { case _: Exception => None }
-    run("git", "rev-parse", "--short=9", "HEAD").map { sha =>
-      // Dirty means BUILD-AFFECTING dirt only: an unscoped porcelain
-      // check counts untracked scratch and the bench's own artifact
-      // churn (BENCH_LOCAL.json is modified by every run), so nearly
-      // every artifact recorded "-dirty" and the next round's
-      // auto-A/B adjudicator silently disabled (ADVICE r16). -uno
-      // drops untracked files; the pathspec scopes to the sources and
-      // build definition that decide what the compiled classes are.
-      val dirty = run("git", "status", "--porcelain", "-uno", "--",
-          "src", "tools", "build.sbt")
-        .exists(_.nonEmpty)
-      if (dirty) s"$sha-dirty" else sha
-    }
-  }
-
-  /** Pathspec of the sources whose bytes decide MEASURED query plans:
-    * src/main minus the bench harness itself (Bench, LongDocBench, the
-    * tools subpackage). Tests and repo-root artifacts never affect a
-    * compiled query; harness-only edits affect how queries are TIMED,
-    * never what plan they run. */
-  private[graft] val QueryPathSpec: Seq[String] = Seq(
-    "src/main",
-    ":(exclude)src/main/scala/graft/Bench.scala",
-    ":(exclude)src/main/scala/graft/LongDocBench.scala",
-    ":(exclude)src/main/scala/graft/tools")
-
-  /** Source-diff gate for the auto-A/B (VERDICT r16 #1a): true iff the
-    * working tree — the bytes the current classes were compiled from —
-    * is identical to `priorRef` over [[QueryPathSpec]]. An over-band
-    * suspect whose prior build is query-source-identical CANNOT carry a
-    * plan regression, so the adjudicator short-circuits to a
-    * "harness-only" verdict instead of running an A/B whose legs differ
-    * only in harness behavior — exactly the asymmetry class that
-    * produced round 16's two false "real" convictions (q16 1.163,
-    * t33 1.24 vs a byte-identical df1f4cd; the judge's equalized A/B
-    * read 0.85×/0.70×). Any git failure (unknown ref, not a checkout)
-    * returns false — the gate only ever SKIPS work it can prove
-    * pointless, never suppresses a real adjudication. */
-  private[graft] def querySourcesIdentical(
-      priorRef: String, workDir: Option[java.io.File] = None): Boolean =
-    try {
-      val cmd = Seq("git", "diff", "--quiet", priorRef, "--") ++ QueryPathSpec
-      val pb = new ProcessBuilder(cmd: _*)
-      workDir.foreach(pb.directory)
-      val p = pb.start()
-      p.getInputStream.readAllBytes()
-      p.waitFor() == 0
-    } catch { case _: Exception => false }
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Session.sfDir
     // Default raised 3 → 5 in round 10: the round-9 artifact recorded a
     // 1.27× phantom regression on untouched code (host-load noise; 40
     // unrelated sub-second queries slowed in lockstep) — two more
     // iterations per query move the median far enough from single-pause
     // territory that the gate number stops tracking the host.
-    val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "5").toInt.max(1)
+    val iters = Session.iters(5)
     // A/B HARNESS HOOKS. SPARK_GRAFT_ONLY=<a,b,...> restricts the run to
     // the named queries (full names or short keys) — the cross-commit
     // A/B orchestrator (tools/ab_bench.sh) uses it to interleave a PRIOR
@@ -364,20 +166,13 @@ object Bench {
     // A restricted (SPARK_GRAFT_ONLY) run writes its partial mins map
     // to a DISTINCT default: run from the repo root it would otherwise
     // silently overwrite the full-suite BENCH_LOCAL.json, and the next
-    // round's priorBenchInfo would read the partial file first and
-    // blind the compare pass for every unlisted query (ab_bench.sh
-    // avoids this with scratch cwds and an explicit SPARK_GRAFT_OUT; a
+    // round's prior lookup would read the partial file first and blind
+    // the compare pass for every unlisted query (ab_bench.sh avoids
+    // this with scratch cwds and an explicit SPARK_GRAFT_OUT; a
     // hand-run restricted bench did not).
     val outPath = sys.env.getOrElse("SPARK_GRAFT_OUT",
       if (only.isDefined) "BENCH_ONLY.json" else "BENCH_LOCAL.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
 
     // Warm-up: JIT the code paths every query shares — parquet scan,
     // hash-aggregate shuffle, noop sink — on a tiny table, so that cost
@@ -388,53 +183,32 @@ object Bench {
       .write.format("noop").mode("overwrite").save()
 
     val prior = priorTimes()
+    def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
 
-    // LOAD SENTINEL: a fixed, data-independent job (spark.range agg over
-    // a constant row count) timed exactly like a query, half the samples
-    // before the suite and half after. Its code never changes round to
-    // round, so its round-over-round ratio measures the HOST (co-tenant
-    // load, thermal state), not the engine — the normalizer two rounds
-    // of verdicts had to reconstruct from circumstantial drift patterns.
-    // Recorded in BENCH_LOCAL.json and on the driver-contract line as
-    // "sentinel" (seconds).
-    def med(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
-    def sentinelOnce(): Double = {
+    /** One measured run: GC outside the timed section (late in the suite
+      * the heap carries tens of queries' floating garbage, and a
+      * shuffle-heavy query otherwise pays its predecessors' collections
+      * inside its own measurement — observed: t13 steady at 3.5 s in a
+      * fresh JVM vs ~11 s as query #50 of this one), then build + noop
+      * sink + release of the run's per-invocation eager checkpoints (the
+      * free is timed; it is a handful of async unpersist calls). Each
+      * run rebuilds from scratch, so without the release a 5-iteration
+      * run of a checkpointing query pins 5 generations of blocks and
+      * later queries pay the GC; memoized frames are pinned and survive
+      * (their reuse across iterations is part of the measured design).
+      * Seconds, or the failure's message. */
+    def runOnce(spec: graft.queries.QuerySpec): Either[String, Double] = {
       System.gc()
       val t0 = System.nanoTime()
-      spark.range(200000000L)
-        .selectExpr("sum(id * 3 + 1)", "count(if(id % 7 = 0, 1, null))")
-        .collect()
-      (System.nanoTime() - t0) / 1e9
+      try {
+        val df = spec.build(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        graft.queries.Extensions.freeCkptFresh(df)
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch {
+        case e: Throwable => Left(String.valueOf(e.getMessage))
+      }
     }
-    val sentinelPre = (1 to 3).map(_ => sentinelOnce())
-
-    // MEMORY-BOUND SENTINEL: a fixed wide hash-agg through a real
-    // exchange (4M distinct keys at the suite's own partition count) —
-    // bounded by hash-table build and shuffle write/read bandwidth,
-    // the resource class the arithmetic sentinel is blind to (round
-    // 15: two boxes within 1.21× on arithmetic differed up to 1.5× on
-    // memory-bound queries). Recorded as "mem_sentinel"; attestation
-    // requires BOTH sentinels in band on top of fingerprint equality.
-    // SPARK_GRAFT_MEM_SENTINEL=0 skips the sampling — the A/B legs set
-    // it so both builds' harnesses do IDENTICAL pre-suite work (a
-    // build whose legs alone run 6 extra heavy hash-aggs measures its
-    // own queries in a differently-shaped heap; attestation is
-    // meaningless inside a leg anyway, its artifact carries no
-    // compare pass).
-    val memSentinelOn =
-      sys.env.getOrElse("SPARK_GRAFT_MEM_SENTINEL", "1") != "0"
-    def memSentinelOnce(): Double = {
-      System.gc()
-      val t0 = System.nanoTime()
-      spark.range(4000000L)
-        .selectExpr("hash(id) as k", "id as v")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("v").as("sv"))
-        .selectExpr("count(*)", "sum(sv)")
-        .collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val memSentinelPre =
-      if (memSentinelOn) (1 to 3).map(_ => memSentinelOnce()) else Nil
 
     // A failed query must be visible IN the JSON (not only stderr): its
     // per-query entry becomes JSON `null` — never a numeric sentinel a
@@ -456,42 +230,18 @@ object Bench {
       // runOnce.
       spark.catalog.clearCache()
       var firstErr: Option[String] = None
-      def runOnce(): Double = {
-        // GC before EVERY iteration, outside the timed section: late in
-        // the suite the heap carries tens of queries' floating garbage,
-        // and a shuffle-heavy query otherwise pays its predecessors'
-        // collections inside its own measurement (observed: t13 steady
-        // at 3.5 s in a fresh JVM vs ~11 s as query #50 of this one).
-        System.gc()
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            val df = spec.build(spark, sfDir)
-            df.write.format("noop").mode("overwrite").save()
-            // Release the iteration's per-invocation eager checkpoints
-            // once the measured action is done (OUTSIDE nothing — the
-            // free itself is timed; it is a handful of async unpersist
-            // calls): each iteration rebuilds from scratch, so without
-            // this a 5-iteration run of a checkpointing query pins 5
-            // generations of blocks and later queries pay the GC.
-            // Memoized frames are pinned and survive (their reuse
-            // across iterations is part of the measured design).
-            graft.queries.Extensions.freeCkptFresh(df)
-            true
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] ${spec.name} failed: ${e.getMessage}")
-              if (firstErr.isEmpty)
-                firstErr = Some(String.valueOf(e.getMessage)
-                  .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200))
-              false
-          }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        if (ok) elapsed else -elapsed
+      def sample(n: Int): Seq[Option[Double]] = (1 to n).map { _ =>
+        runOnce(spec) match {
+          case Right(t) => Some(t)
+          case Left(msg) =>
+            System.err.println(s"[bench] ${spec.name} failed: $msg")
+            if (firstErr.isEmpty)
+              firstErr = Some(msg.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200))
+            None
+        }
       }
-      def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
-      val base = (1 to iters).map(_ => runOnce())
-      val baseGood = base.filter(_ >= 0)
+      val base = sample(iters)
+      val baseGood = base.flatten
       // Widen the sample before judging, keyed off the PRIOR round where
       // one exists: prior sub-second (noise-dominated) or current median
       // >1.5× prior (suspected drift — re-measure, don't re-report).
@@ -501,15 +251,13 @@ object Bench {
       val widen = baseGood.nonEmpty &&
         widenRule(prior.get(spec.name)
           .orElse(prior.get(shortName(spec.name))), median(baseGood))
-      val times =
-        if (widen) base ++ (1 to (subSecIters - iters)).map(_ => runOnce())
-        else base
+      val times = if (widen) base ++ sample(subSecIters - iters) else base
       // Median of the successful runs; an all-fail query carries NO
       // number — `null` in every map, absent from the total — so no
       // downstream consumer can mis-aggregate a sentinel as a timing
       // (round 7's negative sentinels made a 7-query-short total look
       // like a 12% speedup).
-      val good = times.filter(_ >= 0)
+      val good = times.flatten
       if (good.isEmpty) firstErr.foreach(m => errors :+= (spec.name -> m))
       else if (good.size < times.size)
         flaky :+= (spec.name -> (times.size - good.size))
@@ -517,30 +265,27 @@ object Bench {
       val mn = if (good.isEmpty) None else Some(good.min)
       (spec.name, med, mn, good.size)
     }
-    // REGRESSION COMPARE (SPARK_GRAFT_COMPARE=<prev.json> to pin the
-    // baseline; defaults to the newest prior artifact): separate real
-    // cost changes from host drift WITHOUT burning a judge round on it.
-    // Grain is the per-query MIN (medians move with GC pauses).
+    // REGRESSION COMPARE against the prior artifact's mins: separate
+    // real cost changes from host drift WITHOUT burning a judge round
+    // on it. Grain is the per-query MIN (medians move with GC pauses).
     //  - host-drift normalizer: the median cur/prior ratio over ALL
     //    compared queries — the same workload mix measured on both
-    //    hosts, so it normalizes memory-bound drift the arithmetic
-    //    sentinel cannot (the round-13 t02 lesson). Over ALL, not a
-    //    "flat band": under a whole-host slowdown a band-limited set
-    //    self-selects the least-affected queries and under-estimates
-    //    the drift (measured: sentinel 2.6× worse flagged 21 false
-    //    "real"s under the band form). The median stays honest as
-    //    long as a true regression hits under half the suite.
+    //    runs. Over ALL, not a "flat band": under a whole-host slowdown
+    //    a band-limited set self-selects the least-affected queries and
+    //    under-estimates the drift (measured: a 2.6× slower host
+    //    flagged 21 false "real"s under the band form). The median
+    //    stays honest as long as a true regression hits under half the
+    //    suite.
     //  - suspects (ratio > 1.25 × host drift AND ≥ 0.15 s absolute —
     //    tiny queries breathe ±50 ms on scheduling alone) get a
-    //    CONFIRM pass: two
-    //    extra iterations each, interleaved round-robin so a transient
-    //    co-tenant burst cannot sit on one query's whole sample.
-    //  - verdict "real" iff the confirmed min still exceeds
+    //    CONFIRM pass: two extra iterations each, interleaved
+    //    round-robin so a transient co-tenant burst cannot sit on one
+    //    query's whole sample.
+    //  - verdict "suspect" iff the confirmed min still exceeds
     //    1.15 × prior × hostDrift; otherwise "host".
-    val priorInfo =
-      if (only.isDefined) PriorBench(Map.empty, None, None, None, None)
-      else priorBenchInfo(sf = sfDir)
-    val priorMin = priorInfo.mins
+    val priorMin =
+      if (only.isDefined) Map.empty[String, Double]
+      else priorTimes(key = "mins", sf = sfDir)
     val curMinByName = results.collect {
       case (k, _, Some(mn), _) => k -> mn
     }.toMap
@@ -550,7 +295,7 @@ object Bench {
     }
     val allRatios = compared.values.map(_._3).toSeq
     val hostDrift =
-      if (allRatios.isEmpty) 1.0 else med(allRatios)
+      if (allRatios.isEmpty) 1.0 else median(allRatios)
     // Suspect threshold rides ON TOP of the host drift: a uniformly
     // loaded host must not send half the suite through confirm runs.
     val suspects = compared.filter { case (_, (p, cur, r)) =>
@@ -561,72 +306,17 @@ object Bench {
     for (pass <- 1 to 2; name <- suspects) {
       specByName.get(name).foreach { spec =>
         spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        val ok = try {
-          val df = spec.build(spark, sfDir)
-          df.write.format("noop").mode("overwrite").save()
-          graft.queries.Extensions.freeCkptFresh(df)
-          true
-        } catch { case _: Throwable => false }
-        val t = (System.nanoTime() - t0) / 1e9
-        if (ok) confirmMin = confirmMin.updated(name,
-          math.min(t, confirmMin.getOrElse(name, Double.MaxValue)))
+        runOnce(spec).foreach(t => confirmMin = confirmMin.updated(name,
+          math.min(t, confirmMin.getOrElse(name, Double.MaxValue))))
       }
     }
-    // The post-suite sentinel samples land here (after the confirm pass
-    // — still "after the workload", which is what the pre/post split
-    // exists to bracket) so the verdict column can consult the CURRENT
-    // host fingerprint against the prior artifact's.
-    val sentinelRaw = med(sentinelPre ++ (1 to 3).map(_ => sentinelOnce()))
-    val memSentinelRaw =
-      if (memSentinelOn)
-        med(memSentinelPre ++ (1 to 3).map(_ => memSentinelOnce()))
-      else 0.0
-    val curHost = hostFingerprint()
-    val curCommit = gitCommit()
-    val hostAttested = sameHost(priorInfo.host, curHost, priorInfo.sentinel,
-      sentinelRaw, priorInfo.memSentinel, memSentinelRaw)
-    val regressions0 = suspects.map { name =>
+    val regressions = suspects.map { name =>
       val (p, cur, _) = compared(name)
       val confirmed = math.min(cur, confirmMin.getOrElse(name, cur))
       val adj = confirmed / (p * math.max(hostDrift, 1e-9))
-      (name, p, cur, confirmed, adj, regressionVerdict(adj, hostAttested))
+      (name, p, cur, confirmed, adj, regressionVerdict(adj))
     }
-    // AUTO-ADJUDICATION: every over-band suspect — would-be "real" or
-    // "cross-host" — is settled by the same-host cross-commit A/B
-    // right here, so the artifact ships with zero verdicts a judge
-    // still has to run the tool for. Same-commit priors need no run
-    // (identical code cannot have a plan regression). The A/B is
-    // bounded (worst suspects first, 3 rounds × 2 iters) and skipped
-    // when the prior's commit is unknown/dirty, the tool is absent, or
-    // SPARK_GRAFT_AUTO_AB=0.
-    val overBand = regressions0.filter(r => r._6 == "real" || r._6 == "cross-host")
-    val autoAbOn = sys.env.getOrElse("SPARK_GRAFT_AUTO_AB", "1") != "0"
-    val abResults: Map[String, (Option[Double], String)] =
-      if (overBand.isEmpty || !autoAbOn) Map.empty
-      else priorInfo.commit match {
-        case Some(pc) if curCommit.contains(pc) && !pc.endsWith("-dirty") =>
-          overBand.map(r => r._1 -> (None: Option[Double], "same-commit"))
-            .toMap
-        case Some(pc) if !pc.endsWith("-dirty") =>
-          // SOURCE-DIFF GATE before any A/B run: identical query-path
-          // sources ⇒ identical plans ⇒ the over-band reading is
-          // harness or host, by construction — no measurement needed
-          // (and an A/B against a harness-divergent prior build could
-          // only re-measure the harness difference).
-          if (querySourcesIdentical(pc))
-            overBand.map(r => r._1 -> (None: Option[Double], "harness-only"))
-              .toMap
-          else
-            runAutoAb(overBand.sortBy(-_._5).take(AutoAbMaxQueries)
-              .map(_._1), pc, sfDir)
-        case _ => Map.empty
-      }
-    val regressions = regressions0.map { case (name, p, cur, conf, adj, v) =>
-      val ab = abResults.get(name)
-      (name, p, cur, conf, adj, finalVerdictOf(ab.map(_._2), v), ab)
-    }
+    val toAdjudicate = regressions.collect { case r if r._6 == "suspect" => r._1 }
 
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
     def j(v: Option[Double]): String = v.fold("null")(x => r3(x).toString)
@@ -641,22 +331,17 @@ object Bench {
     val flakyJson = flaky.map { case (k, n) => "\"" + k + "\":" + n }
       .mkString("{", ",", "}")
     val total = r3(results.flatMap { case (_, med, _, _) => med }.sum)
-    val sentinel = r3(sentinelRaw)
-    val memSentinel = r3(memSentinelRaw)
-    val regJson = regressions.map { case (k, p, cur, conf, adj, v, ab) =>
-      val abJson = ab.fold("") { case (ratio, note) =>
-        ratio.fold("")(r => s""","ab_ratio":${r3(r)}""") +
-          s""","ab":"$note""""
-      }
+    val regJson = regressions.map { case (k, p, cur, conf, adj, v) =>
       "\"" + k + "\":{\"prior_min\":" + r3(p) + ",\"min\":" + r3(cur) +
         ",\"confirmed_min\":" + r3(conf) + ",\"drift_adj_ratio\":" + r3(adj) +
-        abJson + ",\"verdict\":\"" + v + "\"}"
+        ",\"verdict\":\"" + v + "\"}"
     }.mkString("{", ",", "}")
-    val priorSentJson =
-      priorInfo.sentinel.fold("")(p => s""","prior_sentinel":${r3(p)}""")
-    val commitJson = curCommit.fold("")(c => s""","commit":"$c"""")
+    val adjudicate = adjudicator(toAdjudicate)
+    val adjJson = adjudicate.fold("")(c => s""","adjudicate":"$c"""")
+    adjudicate.foreach(c => System.err.println(
+      s"[bench] ${toAdjudicate.size} suspect regression(s); adjudicate on this host: $c"))
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","sentinel":$sentinel,"mem_sentinel":$memSentinel,"host":"$curHost"$commitJson$priorSentJson,"host_drift":${r3(hostDrift)},"queries":$qs,"mins":$mins,"iters":$ns,"errors":$errJson,"flaky":$flakyJson,"regressions":$regJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","host_drift":${r3(hostDrift)},"queries":$qs,"mins":$mins,"iters":$ns,"errors":$errJson,"flaky":$flakyJson,"regressions":$regJson$adjJson,"sf":"$sfDir"}"""
     // Full-fidelity artifact, immune to stdout-tail truncation; next
     // round's priorTimes reads it first.
     try java.nio.file.Files.write(
@@ -670,8 +355,7 @@ object Bench {
     // driver-contract line LAST — and it must fit the window whole.
     println(s"""{"mins":$mins,"iters":$ns}""")
     println(stdoutLine(total, results.map { case (k, med, _, _) => k -> med },
-      errors, flaky, sfDir, sentinel, memSentinel, curHost,
-      curCommit.getOrElse("")))
+      errors, flaky, sfDir))
     spark.stop()
     // A bench with errored queries must not pass the round gate silently:
     // the total covers only the queries that ran, so comparing it against
@@ -681,168 +365,22 @@ object Bench {
     if (errors.nonEmpty) sys.exit(1)
   }
 
-  /** Two sentinel readings within a multiplicative band (both present
-    * and positive). */
-  private[graft] def band(p: Double, c: Double, w: Double = 1.25): Boolean =
-    p > 0 && c > 0 && math.max(p / c, c / p) <= w
-
-  /** Same-host attestation for the compare pass. "real" requires a
-    * HOST IDENTITY, not a sentinel band: round 15's builder and driver
-    * boxes sat within the 1.25× arithmetic band by coincidence
-    * (0.374 vs 0.31 = 1.21×) and the band-only check shipped nine
-    * false "real" convictions on untouched code that the interleaved
-    * A/B refuted 6-for-6 — two machines can share ALU throughput and
-    * differ 1.5× on memory-bound work. Attested means ALL of:
-    *  - fingerprint EQUALITY (hostname + boot-id — same machine, same
-    *    boot session);
-    *  - arithmetic sentinel within 1.25× (same machine, but pinned to
-    *    a different CPU budget, is still not a baseline);
-    *  - memory-bound sentinel within 1.4× when the prior carries one
-    *    (memory-bound co-tenant load is exactly the drift class the
-    *    arithmetic sentinel cannot see; the wider band reflects its
-    *    higher intrinsic noise).
-    * A prior without a fingerprint (pre-round-16 artifact, clipped
-    * driver tail) fails: "real" is reserved for evidence that can
-    * prove same-host, never defaulted to — such suspects print
-    * "cross-host" and go to the same-host A/B (tools/ab_bench.sh),
-    * which the compare pass now invokes itself when the prior's
-    * commit is known. */
-  private[graft] def sameHost(priorHost: Option[String], curHost: String,
-                              priorSentinel: Option[Double],
-                              curSentinel: Double,
-                              priorMem: Option[Double] = None,
-                              curMem: Double = 0.0): Boolean =
-    curHost.nonEmpty && priorHost.contains(curHost) &&
-      priorSentinel.exists(band(_, curSentinel)) &&
-      priorMem.forall(band(_, curMem, 1.4))
-
-  /** Auto-A/B bound: the adjudicator costs one prior-build compile plus
-    * rounds × legs × suite time — worst suspects first, the rest keep
-    * their banded verdict. */
-  private[graft] val AutoAbMaxQueries = 6
-
-  /** Per-query (ratio, verdict) rows from a BENCH_AB*.json artifact
-    * (tools/ab_aggregate.py's output): entries under "queries" shaped
-    * {"prior_min":…,"cur_min":…,"ratio":…,"verdict":"flat"}. */
-  private[graft] def parseAbQueries(raw: String)
-      : Map[String, (Option[Double], String)] =
-    ("\"([^\"]+)\"\\s*:\\s*\\{[^{}]*\"ratio\"\\s*:\\s*(null|[0-9.]+)" +
-      "[^{}]*\"verdict\"\\s*:\\s*\"([^\"]+)\"").r
-      .findAllMatchIn(raw).map { m =>
-        val ratio = m.group(2) match {
-          case "null" => None
-          case v      => Some(v.toDouble)
-        }
-        m.group(1) -> (ratio, m.group(3))
-      }.toMap
-
-  /** Run the same-host cross-commit A/B (tools/ab_bench.sh) for the
-    * given suspects against the prior artifact's commit, and return its
-    * per-query verdicts. The subprocess's chatter goes to a log file —
-    * Bench's stdout contract (final line = driver contract) must stay
-    * clean — and the artifact lands in BENCH_AB_AUTO.json at the repo
-    * root (never clobbering a hand-run BENCH_AB.json). Empty map when
-    * the tool cannot run here (no git checkout, script absent, prior
-    * ref unknown to this clone, timeout) — the suspect then keeps its
-    * banded verdict, visibly unadjudicated. */
-  private[graft] def runAutoAb(names: Seq[String], priorRef: String,
-                               sfDir: String)
-      : Map[String, (Option[Double], String)] = {
-    if (names.isEmpty) return Map.empty
-    def readAll(p: java.io.File): String =
-      try new String(java.nio.file.Files.readAllBytes(p.toPath), "UTF-8")
-      catch { case _: Exception => "" }
-    val root =
-      try {
-        val p = new ProcessBuilder("git", "rev-parse", "--show-toplevel")
-          .redirectErrorStream(true).start()
-        val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
-        if (p.waitFor() == 0 && out.nonEmpty) Some(new java.io.File(out))
-        else None
-      } catch { case _: Exception => None }
-    def runOnce(r: java.io.File, qs: Seq[String], rounds: Int,
-                outName: String): Map[String, (Option[Double], String)] = {
-      val out = new java.io.File(r, outName)
-      val log = new java.io.File(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_auto_ab.log")
-      System.err.println(s"[bench] auto-A/B vs $priorRef ($rounds rounds): " +
-        qs.mkString(",") + s" (log: $log)")
-      try {
-        val pb = new ProcessBuilder("bash", "tools/ab_bench.sh", priorRef,
-          qs.mkString(","), rounds.toString, "2", sfDir, out.getPath)
-        pb.directory(r)
-        pb.redirectErrorStream(true)
-        pb.redirectOutput(log)
-        val proc = pb.start()
-        val done =
-          proc.waitFor(25, java.util.concurrent.TimeUnit.MINUTES)
-        if (!done) {
-          // Kill the TREE, not just the bash wrapper: the script's
-          // child sbt/Spark JVM legs would survive as orphans burning
-          // CPU on the host and skewing every later same-host
-          // measurement (ADVICE r16). Descendants first — destroying
-          // the parent first reparents them to init and loses the
-          // handle.
-          proc.descendants().forEach(h => { h.destroyForcibly(); () })
-          proc.destroyForcibly()
-          Map.empty
-        }
-        else if (proc.exitValue() != 0) Map.empty
-        else parseAbQueries(readAll(out))
-      } catch { case _: Exception => Map.empty }
-    }
-    root.filter(r => new java.io.File(r, "tools/ab_bench.sh").isFile)
-      .fold(Map.empty[String, (Option[Double], String)]) { r =>
-        val first = runOnce(r, names, 3, "BENCH_AB_AUTO.json")
-        // WIDEN AT THE LINE (VERDICT r16 #1c): a first-pass ratio
-        // within ±0.1 of the 1.15 threshold is one co-tenant wobble
-        // from flipping — re-measure those suspects at 5 rounds and
-        // let the wider sample supersede, instead of convicting (or
-        // acquitting) at 3×2.
-        val near = names.filter(n => nearThreshold(first.get(n).flatMap(_._1)))
-        if (near.isEmpty) first
-        else first ++ runOnce(r, near, 5, "BENCH_AB_AUTO2.json")
-      }
-  }
-
-  /** A suspect's verdict after the confirm pass. "real" iff its
+  /** A suspect's verdict after the confirm pass: "suspect" iff its
     * drift-adjusted ratio (confirmed min / (prior min × host drift))
-    * still exceeds the band AND the prior artifact is same-host
-    * attested ([[sameHost]]); an over-band ratio against a DIFFERENT
-    * host's prior is "cross-host" — a suspect worth a same-host A/B
-    * (tools/ab_bench.sh), never a conviction (round 14 shipped eight
+    * still exceeds 1.15, else "host". Never a conviction: the prior
+    * artifact may come from a different machine (round 14 shipped eight
     * "real" flags on untouched code whose priors came from another
-    * machine; a verdict that flips with the host is not a verdict). */
-  private[graft] def regressionVerdict(driftAdjRatio: Double,
-                                       sameHost: Boolean): String =
-    if (driftAdjRatio <= 1.15) "host"
-    else if (sameHost) "real"
-    else "cross-host"
+    * host), so a suspect goes to the same-host A/B ([[adjudicator]]). */
+  private[graft] def regressionVerdict(driftAdjRatio: Double): String =
+    if (driftAdjRatio <= 1.15) "host" else "suspect"
 
-  /** A suspect's FINAL verdict given its auto-A/B note (None when no
-    * A/B ran). Only an A/B "real" convicts; "flat"/"faster" refute to
-    * "host", and the two no-measurement-needed notes — "same-commit"
-    * (identical build) and "harness-only" (identical query-path
-    * sources, only Bench/tools differ: a plan regression is logically
-    * impossible, round 16's q16/t33 false convictions) — refute the
-    * same way. Anything else (A/B couldn't run, "incomplete" rows)
-    * leaves the banded verdict standing, visibly unadjudicated. */
-  private[graft] def finalVerdictOf(ab: Option[String],
-                                    banded: String): String = ab match {
-    case Some("real")                      => "real"
-    case Some("flat") | Some("faster") |
-         Some("same-commit") |
-         Some("harness-only")              => "host"
-    case _                                 => banded
-  }
-
-  /** Whether an A/B ratio sits too close to the 1.15 conviction line to
-    * trust at the base sample size (VERDICT r16: q16 was convicted at
-    * 1.163 from 3 rounds × 2 iters — one co-tenant wobble from the
-    * threshold). Within ±0.1 of the line, [[runAutoAb]] re-runs the
-    * suspect at a wider sample instead of shipping the first verdict. */
-  private[graft] def nearThreshold(ratio: Option[Double]): Boolean =
-    ratio.exists(r => r >= 1.05 && r <= 1.25)
+  /** The command that settles `suspects` — the same-host cross-commit
+    * A/B of the prior build against this one — or None when there is
+    * nothing to settle. The prior ref is the commit that produced the
+    * prior artifact, which only the person running the bench knows. */
+  private[graft] def adjudicator(suspects: Seq[String]): Option[String] =
+    if (suspects.isEmpty) None
+    else Some(s"tools/ab_bench.sh <prior-ref> ${suspects.mkString(",")}")
 
   /** Whether a query's sample should widen past the base iteration
     * count. Keyed off the PRIOR round's median where one exists: prior
@@ -886,11 +424,7 @@ object Bench {
       medians0: Seq[(String, Option[Double])],
       errors: Seq[(String, String)],
       flaky: Seq[(String, Int)],
-      sfDir: String,
-      sentinel: Double = 0.0,
-      memSentinel: Double = 0.0,
-      host: String = "",
-      commit: String = ""): String = {
+      sfDir: String): String = {
     val shorts = medians0.map { case (k, _) => shortName(k) }
     val medians =
       if (shorts.distinct.size == shorts.size)
@@ -922,16 +456,6 @@ object Bench {
     // round-over-round comparison (VERDICT r17 #4/#8). Two characters
     // buy immunity from an integer-hostile "value" regex forever.
     val totalStr = { val s = c2(total); if (s.contains('.')) s else s + ".0" }
-    val sent = if (sentinel > 0) s""","sentinel":${c2(sentinel)}""" else ""
-    // The host fingerprint, memory-bound sentinel, and producing commit
-    // ride the FINAL line because the driver artifact is this line's
-    // tail capture — next round's attestation and auto-A/B read them
-    // from there (an earlier line would be clipped). ~110 chars against
-    // the spec-pinned 600-char headroom.
-    val memS =
-      if (memSentinel > 0) s""","mem_sentinel":${c2(memSentinel)}""" else ""
-    val hostS = if (host.nonEmpty) s""","host":"$host"""" else ""
-    val commitS = if (commit.nonEmpty) s""","commit":"$commit"""" else ""
-    s"""{"metric":"total","value":$totalStr,"unit":"sec","queries":$qs$err$flk$sent$memS$hostS$commitS,"sf":"$sf"}"""
+    s"""{"metric":"total","value":$totalStr,"unit":"sec","queries":$qs$err$flk,"sf":"$sf"}"""
   }
 }

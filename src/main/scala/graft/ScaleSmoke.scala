@@ -147,15 +147,7 @@ object ScaleSmoke {
     val reps = sys.env.getOrElse("SPARK_GRAFT_SMOKE_REPS", "10").toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_SMOKE_ITERS", "3").toInt
     val out = java.nio.file.Files.createTempDirectory("graft-sf1").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
 
     buildScaled(spark, src, out, reps)
     // Warm-up: one tiny shuffle so JIT/codegen isn't billed to query 1.

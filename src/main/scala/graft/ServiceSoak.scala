@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.CorpusService
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1 SERVICE SOAK — the per-tick wall-clock record for the always-on
@@ -39,18 +38,9 @@ import org.apache.spark.sql.functions._
 object ServiceSoak {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val sfDir = args.headOption.getOrElse(Session.sfDir)
     val waves = sys.env.getOrElse("SPARK_GRAFT_SOAK_WAVES", "4").toInt.max(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
 
     val base = java.nio.file.Files.createTempDirectory("graft-soak").toString
     val p = CorpusService.Paths(base)

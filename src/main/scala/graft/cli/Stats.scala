@@ -190,13 +190,7 @@ object Stats {
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/tmp/graft_pipeline")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.start()
     run(spark, base, args.drop(1).toSeq).foreach(println)
     spark.stop()
   }

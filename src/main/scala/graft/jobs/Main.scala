@@ -426,13 +426,7 @@ object Main {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/tmp/graft_pipeline")
     val cycles = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.start()
     val actions = run(spark, base, cycles, seedVal = 42L)
     val latest = DeltaUpsert.latest(Warehouse.read(spark, Paths(base).totalsLog))
     println(s"[main] actions: ${actions.mkString(", ")}")

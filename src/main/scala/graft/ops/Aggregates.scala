@@ -20,14 +20,4 @@ object Aggregates {
     facts.groupBy("campaign_id").agg(
       count(lit(1)).as(countAs),
       max(col("created_at")).as(maxAs))
-
-  /** A2: daily counts per (campaign, day) — the grouping key includes the
-    * computed `to_date` bucket, i.e. a tumbling 1-day event-time window
-    * (initial_load…py:252-273). */
-  def dailyPerCampaign(facts: DataFrame, dateAs: String, countAs: String,
-                       maxAs: String): DataFrame =
-    facts.groupBy(col("campaign_id"),
-        to_date(col("created_at")).as(dateAs))
-      .agg(count(lit(1)).as(countAs),
-        max(col("created_at")).as(maxAs))
 }

@@ -334,9 +334,9 @@ private[queries] trait ExtDedup { this: Extensions.type =>
           graft.functions.ShingleJaccardPpm(col("__ta"), col("__tb"))
             .as("jaccard_ppm"))
     // MATERIALIZED at candidate grain before the fan-out (round-16
-    // LongDocBench finding): the routed plan references the candidate
-    // frame in the multiplicity census, both verify branches, and the
-    // long route's shingle restriction — left lazy, every reference
+    // long-doc bench, LONGDOC_BENCH.md): the routed plan references the
+    // candidate frame in the multiplicity census, both verify branches,
+    // and the long route's shingle restriction — left lazy, every reference
     // re-executes the whole upstream chain (the LSH self-join, or the
     // streaming cycle's signature probe + corpus-store partner fetch).
     // Measured on the mixed 32-256 KiB book corpus: the streaming
@@ -483,15 +483,14 @@ private[queries] trait ExtDedup { this: Extensions.type =>
     short.unionByName(longVerified)
   }
 
-  /** The long-doc BENCH's strategy dial, mapped onto [[pairJaccard]]'s
-    * existing knobs so the measured plans are exactly the production
-    * ones: None = routed (production), Some(false) = always-kernel
-    * (corpus attested all-short — every pair through the row-local
+  /** d16's verify-strategy dial, mapped onto [[pairJaccard]]'s
+    * existing knobs so the plans are exactly the production ones:
+    * None = routed (production), Some(false) = always-kernel (corpus
+    * attested all-short — every pair through the row-local
     * ShingleJaccardPpm kernel), Some(true) = always-frame (every pair
     * flagged long — the pre-round-15 frame-grain verify). All three are
-    * EXACT; only cost differs, which is the whole point of measuring
-    * them against each other on a mixed-length corpus
-    * (graft.LongDocBench). Production callers never pass a strategy. */
+    * EXACT; DedupSpec pins routed ≡ kernel ≡ frame on d16's fixture
+    * through [[dedupLongdocRoutedMode]]. */
   private[graft] def pairJaccardStrategy(cand: DataFrame, texts: DataFrame,
       aCol: String, bCol: String, strategy: Option[Boolean],
       textsTable: Option[String] = None,
@@ -507,13 +506,7 @@ private[queries] trait ExtDedup { this: Extensions.type =>
           knownHasLong = Some(true), frameMinMult = 0L)
     }
 
-  def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
-    dedupMinhashLshMode(s, dir, None)
-
-  /** d03's body with the bench strategy dial — the registered query is
-    * the routed (None) form. */
-  private[graft] def dedupMinhashLshMode(s: SparkSession, dir: String,
-                                         strategy: Option[Boolean]): DataFrame = {
+  def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).select("doc_id", "text")
     // One self-join on (band, 4-minhash signature) over the band-exploded
     // table instead of four separate self-joins: a single shuffle whose
@@ -530,7 +523,7 @@ private[queries] trait ExtDedup { this: Extensions.type =>
       .join(banded.as("b"), bandEq && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    pairJaccardStrategy(cand, d, "doc_a", "doc_b", strategy,
+    pairJaccard(cand, d, "doc_a", "doc_b",
       textsTable = Some(s"$dir/documents.parquet"))
   }
 
@@ -539,7 +532,8 @@ private[queries] trait ExtDedup { this: Extensions.type =>
     * every round (VERDICT r16 #4: the driver corpora max out at 577
     * bytes/doc, so without this row the frame route and its
     * materialization discipline had perf evidence only in the manually
-    * run LongDocBench). Deterministic and ORACLE-REPLICABLE: every
+    * run long-doc bench, LONGDOC_BENCH.md). Deterministic and
+    * ORACLE-REPLICABLE: every
     * token is derived from md5 over a (seed, position, variant) key —
     * the one hash both engines compute byte-identically (the h32
     * portability contract) — so the DuckDB twin regenerates the exact

@@ -1227,14 +1227,7 @@ private[queries] trait ExtText { this: Extensions.type =>
     * the batch frame comes straight from the ingest micro-batch).
     * Canonical orientation: the new doc is `new_doc`; a new-new pair is
     * emitted once (smaller id first). */
-  def dedupIncremental(s: SparkSession, dir: String): DataFrame =
-    dedupIncrementalMode(s, dir, None)
-
-  /** d10's body with the bench strategy dial (see
-    * [[pairJaccardStrategy]]) — the registered query is the routed
-    * (None) form. */
-  private[graft] def dedupIncrementalMode(s: SparkSession, dir: String,
-                                          strategy: Option[Boolean]): DataFrame = {
+  def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).select("doc_id", "text")
     // Native signatures + pair-grain verification (the d03 rationale:
     // no exploded shingle frame, no corpus-wide verify joins; the
@@ -1249,7 +1242,7 @@ private[queries] trait ExtText { this: Extensions.type =>
           col("a.doc_id") < col("b.doc_id")))
       .select(col("a.doc_id").as("new_doc"), col("b.doc_id").as("other_doc"))
       .distinct()
-    pairJaccardStrategy(cand, d, "new_doc", "other_doc", strategy,
+    pairJaccard(cand, d, "new_doc", "other_doc",
       textsTable = Some(s"$dir/documents.parquet"))
   }
 

@@ -49,13 +49,9 @@ object StreamingDedup {
     StructField("lang", StringType)))
 
   /** One micro-batch of the cycle (also the unit StreamingDedupSpec
-    * drives directly): batch docs in, pairs + signatures appended.
-    * `strategy` is the long-doc BENCH dial (Extensions
-    * .pairJaccardStrategy — None = production routing); streaming
-    * callers never pass it. */
+    * drives directly): batch docs in, pairs + signatures appended. */
   def processBatch(spark: SparkSession, batch: DataFrame, corpusDir: String,
-                   sigDir: String, pairsDir: String,
-                   strategy: Option[Boolean] = None): Unit = {
+                   sigDir: String, pairsDir: String): Unit = {
     if (batch.isEmpty) return
     val b = batch.select(col("doc_id"), col("text"), col("lang")).persist()
     try {
@@ -108,8 +104,8 @@ object StreamingDedup {
             spark.read.schema(docSchema).parquet(corpusDir),
             Extensions.LongDocVerifyBytes, Some(corpusDir))
       val verified = Extensions
-        .pairJaccardStrategy(cand, allTexts, "new_doc", "other_doc",
-          strategy, knownHasLong = Some(hasLong))
+        .pairJaccard(cand, allTexts, "new_doc", "other_doc",
+          knownHasLong = Some(hasLong))
         .filter(col("jaccard_ppm") >= 800000)
       // Order is load-bearing (recache-by-path): the pair plan reads the
       // signature table lazily, so it must be fully consumed by its write

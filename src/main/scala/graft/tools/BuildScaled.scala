@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Materialize ScaleSmoke's `reps`× character-preserving scaled corpus
   * to a FIXED directory (ScaleSmoke itself builds into a fresh temp
   * dir and measures in-process) — the round-18 scale probes need the
@@ -21,14 +19,7 @@ object BuildScaled {
     val d = new java.io.File(out)
     require(!d.exists || d.listFiles.forall(_ => false),
       s"outDir $out exists and is non-empty (buildScaled appends)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.start()
     graft.ScaleSmoke.buildScaled(spark, src, out, reps)
     println(s"""{"metric":"build_scaled","src":"$src","out":"$out","reps":$reps}""")
     spark.stop()

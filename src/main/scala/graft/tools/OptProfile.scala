@@ -1,10 +1,10 @@
 package graft.queries
 
-// NOTE: lives under src/main/scala/graft/tools (excluded from the
-// bench's QueryPathSpec — harness tooling, not query code) but in the
-// queries package so it can time private helper legs in isolation.
+// NOTE: lives under src/main/scala/graft/tools (harness tooling, not
+// query code) but in the queries package so it can time private helper
+// legs in isolation.
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Leg-level profiler for the round-17 optimization targets — the
@@ -17,21 +17,14 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.queries.OptProfile [legset...]
   *   legsets: d16, s20, topk, t26, q05, q07, t40, pack (default: d16 + s20
   *   only — the others are one-off decision probes, run by name)
-  *   env SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / SPARK_GRAFT_ITERS. */
+  *   env SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / SPARK_GRAFT_ITERS (see
+  *   [[graft.Session]]). */
 object OptProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt.max(1)
+    val sfDir = graft.Session.sfDir
+    val iters = graft.Session.iters(3)
     val sets = if (args.isEmpty) Set("d16", "s20") else args.toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.start()
     val E = Extensions
 
     // Warm-up

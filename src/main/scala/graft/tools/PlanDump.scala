@@ -8,8 +8,7 @@ import java.nio.file.{Files, Paths}
   * / _after.txt; the judge checks plan claims against these files).
   *
   * Usage: runMain graft.tools.PlanDump <outDir> [names] [suffix]
-  *   env SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *   SPARK_GRAFT_CPUS (default 32).
+  *   env SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS (see [[graft.Session]]).
   *
   * The dump is the INITIAL plan (AQE not yet executed) — exactly what
   * `df.explain("formatted")` prints before an action — plus a short
@@ -26,16 +25,8 @@ object PlanDump {
       Some(args(1).split(",").map(_.trim).filter(_.nonEmpty).toSet)
     else None
     val suffix = if (args.length > 2) args(2) else "before"
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = graft.Session.sfDir
+    val spark = graft.Session.start()
     Files.createDirectories(Paths.get(outDir))
     val specs = graft.SparkEntry.specs.filter(sp =>
       only.forall(o => o(sp.name) || o(sp.name.takeWhile(_ != '_'))))

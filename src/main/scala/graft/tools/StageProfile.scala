@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stage profiler for the composed curation pipeline (t40) — VERDICT
@@ -20,21 +20,13 @@ import org.apache.spark.sql.functions._
   * (default 3) runs per row.
   *
   * Usage: runMain graft.tools.StageProfile
-  *   env SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *   SPARK_GRAFT_CPUS (default 32). Prints one line per stage. */
+  *   env SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS (see [[graft.Session]]).
+  *   Prints one line per stage. */
 object StageProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = graft.Session.sfDir
+    val iters = graft.Session.iters(3)
+    val spark = graft.Session.start()
     val E = graft.queries.Extensions
 
     def time(label: String)(build: () => DataFrame): Double = {

@@ -13,6 +13,9 @@ class BenchSpec extends AnyFunSuite {
   test("parses the raw bench line") {
     val line = """{"metric":"total","value":6.0,"unit":"sec","queries":{"q01":1.25,"d10":1.53},"mins":{"q01":1.1,"d10":1.4},"sf":"x"}"""
     assert(Bench.parsePrior(line) == Map("q01" -> 1.25, "d10" -> 1.53))
+    // A pretty-printed artifact (": " separators) parses the same.
+    assert(Bench.parsePrior("""{"queries": {"q01": 1.25, "d10": 1.53}}""") ==
+      Map("q01" -> 1.25, "d10" -> 1.53))
   }
 
   test("parses the driver-wrapped (escaped) artifact shape") {
@@ -52,131 +55,31 @@ class BenchSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-bench").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "BENCH_LOCAL.json"), line)
-    assert(Bench.priorMinTimes(dir, sf = "/root/testdata/sf0.1") ==
+    assert(Bench.priorTimes(dir, "mins", sf = "/td/sf0.1") ==
       Map("a" -> 1.0))
-    assert(Bench.priorMinTimes(dir, sf = "/root/testdata/sf0.001").isEmpty)
+    assert(Bench.priorTimes(dir, "mins", sf = "/td/sf0.001").isEmpty)
   }
 
   test("regression verdicts: host drift absolves, residual cost convicts") {
-    // 1.4x raw but the flat band moved 1.3x too -> host.
-    assert(Bench.regressionVerdict(1.4 / 1.3, sameHost = true) == "host")
-    // 2x raw on a flat, same-host-attested prior -> real.
-    assert(Bench.regressionVerdict(2.0, sameHost = true) == "real")
+    // 1.4x raw but the whole suite moved 1.3x too -> host.
+    assert(Bench.regressionVerdict(1.4 / 1.3) == "host")
+    // 2x raw against a flat suite -> suspect, sent to the same-host A/B.
+    assert(Bench.regressionVerdict(2.0) == "suspect")
     // Exactly at the band edge stays host (no false alarm on noise).
-    assert(Bench.regressionVerdict(1.15, sameHost = true) == "host")
+    assert(Bench.regressionVerdict(1.15) == "host")
   }
 
   test("a cross-host prior can NEVER yield a real verdict") {
     // Round 14: eight "real" flags on untouched code, every prior min
-    // from a different machine. An over-band ratio against an
-    // unattested prior is a suspect to A/B, not a conviction.
-    assert(Bench.regressionVerdict(2.0, sameHost = false) == "cross-host")
-    // In-band ratio is "host" regardless of attestation — there is
-    // nothing to adjudicate.
-    assert(Bench.regressionVerdict(1.1, sameHost = false) == "host")
-  }
-
-  test("attestation is a host IDENTITY, not a sentinel band") {
-    val fp = "vm/5030ce0f-1e28-487d-ada5-bdc7ac455496"
-    // Fingerprint equal, both sentinels in band -> attested.
-    assert(Bench.sameHost(Some(fp), fp, Some(0.40), 0.45, Some(1.0), 1.2))
-    // THE ROUND-15 FALSE-CONVICTION CASE: arithmetic sentinels within
-    // the 1.25x band (0.374 vs 0.31 = 1.21x) but DIFFERENT machines —
-    // the band-only check passed this pair and shipped nine "real"
-    // flags the interleaved A/B refuted 6-for-6. Fingerprint
-    // inequality must fail attestation no matter how close the
-    // sentinels sit.
-    assert(!Bench.sameHost(Some("vm/aaaa-1111"), "vm/bbbb-2222",
-      Some(0.374), 0.31, Some(1.0), 1.0))
-    // Same sentinel VALUES exactly, different fingerprint -> still no.
-    assert(!Bench.sameHost(Some("vm/aaaa-1111"), "vm/bbbb-2222",
-      Some(0.31), 0.31, Some(1.0), 1.0))
-    // A pre-round-16 prior carries no fingerprint: no proof, no "real".
-    assert(!Bench.sameHost(None, fp, Some(0.31), 0.31, Some(1.0), 1.0))
-    // Same machine, arithmetic sentinel out of band (different CPU
-    // budget / load regime) -> not a baseline.
-    assert(!Bench.sameHost(Some(fp), fp, Some(0.216), 0.469, Some(1.0), 1.0))
-    // Same machine, arithmetic flat, MEMORY-BOUND sentinel 1.5x out —
-    // the drift class the arithmetic sentinel cannot see.
-    assert(!Bench.sameHost(Some(fp), fp, Some(0.31), 0.32, Some(1.0), 1.5))
-    // Memory sentinel tolerates its wider 1.4x band (noisier job)...
-    assert(Bench.sameHost(Some(fp), fp, Some(0.31), 0.32, Some(1.0), 1.35))
-    // ...and an absent prior mem sentinel (fingerprinted artifact with
-    // a clipped field) does not veto on its own.
-    assert(Bench.sameHost(Some(fp), fp, Some(0.31), 0.32, None, 1.0))
-    // Absent arithmetic sentinel: no proof.
-    assert(!Bench.sameHost(Some(fp), fp, None, 0.30, Some(1.0), 1.0))
-  }
-
-  test("host fingerprint / commit / mem sentinel parse from artifacts") {
-    val line = """{"metric":"total","value":6.0,"sentinel":0.31,"mem_sentinel":0.52,"host":"vm/5030ce0f-1e28","commit":"61cead5ab","queries":{"a":1.0},"mins":{"a":0.9},"host_drift":1.01,"sf":"x"}"""
-    assert(Bench.parsePriorHost(line).contains("vm/5030ce0f-1e28"))
-    assert(Bench.parsePriorCommit(line).contains("61cead5ab"))
-    assert(Bench.parsePriorMemSentinel(line).contains(0.52))
-    // "host_drift" must not satisfy the "host" lookup (and vice versa).
-    val driftOnly = """{"sentinel":0.3,"host_drift":1.2,"mins":{"a":1.0}}"""
-    assert(Bench.parsePriorHost(driftOnly).isEmpty)
-    // Driver-wrapped (escaped) shape.
-    val wrapped =
-      """{"tail": "\"mins\":{\"a\":1.1},\"sentinel\":0.32,\"mem_sentinel\":0.5,\"host\":\"vm/boot-1\",\"commit\":\"abc123def\",\"sf\":\"x\"}"}"""
-    assert(Bench.parsePriorHost(wrapped).contains("vm/boot-1"))
-    assert(Bench.parsePriorCommit(wrapped).contains("abc123def"))
-    assert(Bench.parsePriorMemSentinel(wrapped).contains(0.5))
-    // priorBenchInfo carries every field from the SAME artifact.
-    val dir = java.nio.file.Files.createTempDirectory("graft-bench-fp")
-    java.nio.file.Files.writeString(dir.resolve("BENCH_LOCAL.json"), line)
-    val p = Bench.priorBenchInfo(dir.toString, sf = "/td/x")
-    assert(p.mins == Map("a" -> 0.9))
-    assert(p.sentinel.contains(0.31) && p.memSentinel.contains(0.52))
-    assert(p.host.contains("vm/5030ce0f-1e28") &&
-      p.commit.contains("61cead5ab"))
-  }
-
-  test("auto-A/B artifact verdicts parse (ab_aggregate.py's layout)") {
-    val ab =
-      """{
-        | "mode": "same-host cross-commit A/B",
-        | "prior_ref": "61cead5",
-        | "rounds": 2,
-        | "runs_ok": {"prior": 2, "current": 2},
-        | "queries": {
-        |  "q30_cube_monthly": {"prior_min": 0.61, "cur_min": 0.63, "ratio": 1.033, "verdict": "flat"},
-        |  "s02_ann_lsh_buckets": {"prior_min": 1.2, "cur_min": 1.5, "ratio": 1.25, "verdict": "real"},
-        |  "t27_hard_negatives_indexed": {"prior_min": null, "cur_min": 1.0, "ratio": null, "verdict": "incomplete"}
-        | }
-        |}""".stripMargin
-    val m = Bench.parseAbQueries(ab)
-    assert(m("q30_cube_monthly") == (Some(1.033), "flat"))
-    assert(m("s02_ann_lsh_buckets") == (Some(1.25), "real"))
-    assert(m("t27_hard_negatives_indexed") == (None, "incomplete"))
-    // runs_ok / top-level scalars never masquerade as query rows.
-    assert(!m.contains("runs_ok") && !m.contains("mode"))
-    assert(Bench.parseAbQueries("").isEmpty)
-  }
-
-  test("this host's fingerprint is stable and boot-scoped") {
-    val fp = Bench.hostFingerprint()
-    assert(fp.nonEmpty && fp == Bench.hostFingerprint())
-    // On Linux the boot UUID rides along — same machine across reboots
-    // must NOT attest (a reboot changes clocks/thermal/ASLR posture,
-    // and more importantly equality-after-reboot would be untestable).
-    if (new java.io.File("/proc/sys/kernel/random/boot_id").isFile)
-      assert(fp.contains("/") && fp.split("/", 2)(1).nonEmpty)
-  }
-
-  test("prior sentinel parses from raw and driver-wrapped artifacts") {
-    val line = """{"metric":"total","value":6.0,"sentinel":0.469,"queries":{"a":1.0},"mins":{"a":0.9},"sf":"x"}"""
-    assert(Bench.parsePriorSentinel(line).contains(0.469))
-    val wrapped =
-      """{"tail": "\"queries\":{\"a\":2.0},\"mins\":{\"a\":1.1},\"sentinel\":0.32,\"sf\":\"x\"}"}"""
-    assert(Bench.parsePriorSentinel(wrapped).contains(0.32))
-    assert(Bench.parsePriorSentinel("{\"n\":1}").isEmpty)
-    // ...and priorMinsAndSentinel pairs the sentinel with the SAME
-    // artifact that supplied the mins.
-    val dir = java.nio.file.Files.createTempDirectory("graft-bench-sent")
-    java.nio.file.Files.writeString(dir.resolve("BENCH_LOCAL.json"), line)
-    assert(Bench.priorMinsAndSentinel(dir.toString, sf = "/td/x") ==
-      (Map("a" -> 0.9), Some(0.469)))
+    // from a different machine. The compare pass cannot prove where a
+    // prior came from, so it never convicts: an over-band ratio is a
+    // suspect, and the artifact names the same-host A/B that settles it.
+    for (r <- Seq(1.1, 1.16, 2.0, 50.0))
+      assert(Bench.regressionVerdict(r) != "real")
+    assert(Bench.adjudicator(Seq("q01_campaign_totals", "d03_x")).contains(
+      "tools/ab_bench.sh <prior-ref> q01_campaign_totals,d03_x"))
+    // In-band ratios leave nothing to adjudicate.
+    assert(Bench.adjudicator(Nil).isEmpty)
   }
 
   // --- round-7 layout: the final stdout line must survive the driver's
@@ -193,14 +96,7 @@ class BenchSpec extends AnyFunSuite {
         s.name -> Some(if (i % 2 == 0) 9.99 else 99.94)
       },
       errors = Nil, flaky = Nil,
-      sfDir = "/root/testdata/sf0.1",
-      // The attestation fields ride the final line (the driver tail is
-      // where next round reads them) — pin the budget WITH them, at a
-      // worst-case-length fingerprint (a 36-char UUID boot id) and a
-      // dirty-suffixed commit.
-      sentinel = 0.469, memSentinel = 1.25,
-      host = "a-24-char-capped-hostnam/5030ce0f",
-      commit = "123abc456-dirty")
+      sfDir = "/x/sf0.1")
 
   test("short query keys are unique across the real registry") {
     // The stdout line keys medians by the operator id prefix; a
@@ -217,12 +113,9 @@ class BenchSpec extends AnyFunSuite {
     val line = worstCaseLine
     // Hard bound plus explicit headroom: at ~11 chars per short-keyed
     // entry there must be room for dozens of future queries before
-    // this pin forces the layout to shrink again. (Headroom re-set
-    // 600 -> 400 in round 16: the 120-query registry plus the
-    // attestation fields — host fingerprint, mem sentinel, commit,
-    // which MUST ride the final line for next round's compare pass to
-    // read them from the driver tail — consume ~1500 of the 2000-char
-    // window; 400 still covers ~35 more queries.)
+    // this pin forces the layout to shrink again. (Headroom 400: the
+    // 120-query registry consumes ~1400 of the 2000-char window; 400
+    // still covers ~35 more queries.)
     assert(line.length < Bench.TailWindow - 400,
       s"stdout line ${line.length} chars >= ${Bench.TailWindow - 400}: the " +
         "median map is at risk of being sliced by the driver capture")
@@ -306,72 +199,6 @@ class BenchSpec extends AnyFunSuite {
     // a corrupt/empty local file must NOT mask the driver artifact
     put("BENCH_LOCAL.json", "not json at all")
     assert(Bench.priorTimes(dir.getPath) == Map("a" -> 9.0))
-  }
-
-  test("final verdict: only an A/B 'real' convicts; harness-only refutes") {
-    // Round 16 shipped two "real" convictions (q16/t33) against a prior
-    // whose query-path source was byte-identical to HEAD — the
-    // "harness-only" note exists so that class of suspect is refuted
-    // WITHOUT a measurement, like same-commit.
-    assert(Bench.finalVerdictOf(Some("real"), "cross-host") == "real")
-    assert(Bench.finalVerdictOf(Some("flat"), "real") == "host")
-    assert(Bench.finalVerdictOf(Some("faster"), "real") == "host")
-    assert(Bench.finalVerdictOf(Some("same-commit"), "real") == "host")
-    assert(Bench.finalVerdictOf(Some("harness-only"), "real") == "host")
-    // A/B couldn't run / incomplete row: banded verdict stands, visibly.
-    assert(Bench.finalVerdictOf(None, "cross-host") == "cross-host")
-    assert(Bench.finalVerdictOf(Some("incomplete"), "real") == "real")
-  }
-
-  test("near-threshold A/B ratios trigger a wider sample, not a verdict") {
-    // q16's round-16 conviction: 1.163 against the 1.15 line from
-    // 3 rounds x 2 iters — inside the +-0.1 wobble band.
-    assert(Bench.nearThreshold(Some(1.163)))
-    assert(Bench.nearThreshold(Some(1.05)) && Bench.nearThreshold(Some(1.25)))
-    assert(!Bench.nearThreshold(Some(1.04)))  // clearly flat
-    assert(!Bench.nearThreshold(Some(1.3)))   // clearly real
-    assert(!Bench.nearThreshold(Some(0.7)))   // clearly faster
-    assert(!Bench.nearThreshold(None))        // incomplete: nothing to widen
-  }
-
-  test("source-diff gate: harness-only edits do not defeat it") {
-    // A temp repo shaped like ours: a query-path file, the bench
-    // harness, a tools main. The gate must read IDENTICAL when only
-    // harness files changed since the ref, and NOT identical when a
-    // query-path file did.
-    val dir = java.nio.file.Files.createTempDirectory("graft-srcdiff").toFile
-    def sh(cmd: String*): Unit = {
-      val p = new ProcessBuilder(cmd: _*).directory(dir)
-        .redirectErrorStream(true).start()
-      p.getInputStream.readAllBytes()
-      assert(p.waitFor() == 0, s"${cmd.mkString(" ")} failed")
-    }
-    def put(rel: String, body: String): Unit = {
-      val f = new java.io.File(dir, rel)
-      f.getParentFile.mkdirs()
-      java.nio.file.Files.write(f.toPath, body.getBytes("UTF-8"))
-    }
-    sh("git", "init", "-q", "-b", "main")
-    put("src/main/scala/graft/Q.scala", "object Q")
-    put("src/main/scala/graft/Bench.scala", "object Bench")
-    put("src/main/scala/graft/LongDocBench.scala", "object LongDocBench")
-    put("src/main/scala/graft/tools/T.scala", "object T")
-    sh("git", "add", "-A")
-    sh("git", "-c", "user.email=t@t", "-c", "user.name=t",
-      "commit", "-q", "-m", "base")
-    val w = Some(dir)
-    assert(Bench.querySourcesIdentical("HEAD", w))
-    // Harness-only edits: still identical over the query paths.
-    put("src/main/scala/graft/Bench.scala", "object Bench { val x = 1 }")
-    put("src/main/scala/graft/LongDocBench.scala", "object LongDocBench {}")
-    put("src/main/scala/graft/tools/T.scala", "object T { val y = 2 }")
-    assert(Bench.querySourcesIdentical("HEAD", w))
-    // A query-path edit defeats the gate.
-    put("src/main/scala/graft/Q.scala", "object Q { val changed = true }")
-    assert(!Bench.querySourcesIdentical("HEAD", w))
-    // Unknown ref / broken git: false — the gate only ever skips work
-    // it can prove pointless.
-    assert(!Bench.querySourcesIdentical("no-such-ref", w))
   }
 
   test("widen rule fires on prior-sub-second, got-faster, and drift") {

@@ -17,12 +17,8 @@ class ExtensionsRuleSpec extends SparkSpec {
     val base = spark // force base session creation first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val s = Session.start(Session.builder(cpus = 4)
+      .withExtensions(new GraftExtensions))
     SparkSession.setDefaultSession(base)
     SparkSession.setActiveSession(base)
     s

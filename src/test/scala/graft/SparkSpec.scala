@@ -19,17 +19,9 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+  lazy val session: SparkSession =
+    Session.start(Session.builder(cpus = 4)
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh-cat").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+        java.nio.file.Files.createTempDirectory("graft-wh-cat").toString))
 }

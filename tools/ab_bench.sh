@@ -10,15 +10,16 @@
 #     rounds  interleaved (prior, current) JVM pairs        (default 3)
 #     iters   Bench iterations per query inside each JVM    (default 2)
 #     sfdir   data directory                                 (default /root/testdata/sf0.1)
-#     out     result artifact path                           (default <repo>/BENCH_AB.json;
-#             Bench's auto-adjudicator passes BENCH_AB_AUTO.json so a
-#             hand-run BENCH_AB.json is never clobbered)
+#     out     result artifact path                           (default <repo>/BENCH_AB.json)
+#
+# Bench's compare pass marks an over-band regression "suspect" and names
+# this command under "adjudicate" in BENCH_LOCAL.json; the prior ref is the
+# commit that produced the prior artifact.
 #
 # Mechanics:
-#  - The prior build compiles in a detached git worktree. Its Bench harness
-#    gets the SPARK_GRAFT_ONLY query filter grafted in (tools/patch_bench_only.py
-#    — harness-only; the MEASURED query code stays the prior commit's,
-#    byte-for-byte).
+#  - The prior build compiles in a detached git worktree, so the MEASURED
+#    query code is the prior commit's, byte-for-byte. Its Bench must read
+#    the SPARK_GRAFT_ONLY query filter (every commit since 9bcce09 does).
 #  - Each JVM leg runs in its own empty scratch cwd, so neither harness can
 #    discover a BENCH_LOCAL.json / BENCH_r*.json prior (no widen-rule or
 #    compare-pass asymmetry between legs), and each writes its artifact there.
@@ -35,12 +36,15 @@ QUERIES="${2:?query list required (comma-separated, short or full names)}"
 ROUNDS="${3:-3}"
 ITERS="${4:-2}"
 SFDIR="${5:-/root/testdata/sf0.1}"
-CPUS="${SPARK_GRAFT_CPUS:-32}"
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"  # Bench's own default: every core
 MEM="${SPARK_DRIVER_MEM:-8g}"
 
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 OUT="${6:-$REPO/BENCH_AB.json}"
 SHORTREF="$(git -C "$REPO" rev-parse --short "$REF")"
+git -C "$REPO" grep -q SPARK_GRAFT_ONLY "$REF" -- src/main/scala/graft/Bench.scala \
+  || { echo "[ab] $REF's Bench.scala lacks the SPARK_GRAFT_ONLY filter (added in 9bcce09); pick a later prior ref" >&2; exit 1; }
+
 WT="/tmp/graft_ab_${SHORTREF}"
 SCRATCH="/tmp/graft_ab_runs_$$"
 mkdir -p "$SCRATCH"
@@ -57,11 +61,6 @@ if [ ! -d "$WT" ]; then
   echo "[ab] adding worktree for $REF at $WT"
   git -C "$REPO" worktree add --detach "$WT" "$REF"
 fi
-# Outside the guard: each graft is independently idempotent, and a CACHED
-# worktree from an earlier run must still pick up grafts added since
-# (round 17: the SPARK_GRAFT_MEM_SENTINEL toggle — a cached prior leg
-# without it does non-identical pre-suite work vs the current leg).
-python3 "$REPO/tools/patch_bench_only.py" "$WT/src/main/scala/graft/Bench.scala"
 echo "[ab] compiling prior build ($REF)"
 (cd "$WT" && sbt -batch compile >"$SCRATCH/prior_compile.log" 2>&1) \
   || { tail -20 "$SCRATCH/prior_compile.log"; exit 1; }
@@ -72,6 +71,10 @@ echo "[ab] compiling current build"
 run_leg() { # $1 = leg name (prior|current), $2 = classes dir, $3 = round no
   local dir="$SCRATCH/$1-r$3"
   mkdir -p "$dir"
+  # SPARK_GRAFT_AUTO_AB=0 and SPARK_GRAFT_MEM_SENTINEL=0 reach only prior
+  # builds whose Bench predates their removal: without them such a leg
+  # runs the heavy hash-agg sentinel (and its own A/B) that the current
+  # leg no longer runs.
   (cd "$dir" && \
     SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_ITERS="$ITERS" \
     SPARK_GRAFT_ITERS_SUB1="$ITERS" SPARK_GRAFT_SF_DIR="$SFDIR" \
