@@ -54,14 +54,19 @@ object DeltaUpsert {
   /** The fact tables a delta cycle tracks, as `kind` tags. */
   val FactKinds: Seq[String] = Seq("impressions", "clicks")
 
+  /** The key of a daily fact row: one version per (kind, campaign, day). */
+  val DailyKeys: Seq[String] = "kind" +: Keys :+ "day"
+
   /** A delta cycle's one OLTP snapshot: both fact tables read once as a
     * tagged union and grouped to (kind, campaign, day) with the count and
     * the newest `created_at`, plus the campaign's advertiser (NULL for an
     * orphan fact). It is tiny — campaigns × days × 2 rows — and every
     * other frame of the cycle derives from it: the totals (its per-
     * campaign sums, [[campaignFacts]]), the daily diff ([[dailyDelta]])
-    * and the daily report's rows ([[dailyRows]]). Each (kind, campaign,
-    * day) row equals the row `InitialLoad.dailyCounts` derives for it. */
+    * and the daily report's rows. Each (kind, campaign, day) row equals
+    * the row `InitialLoad.dailyCounts` derives for it. Its columns are
+    * the daily fact log's format (`Main.Paths.factsDaily`: partitioned by
+    * day, keep-latest on [[DailyKeys]] with the count as tiebreak). */
   def factDays(campaign: DataFrame, impressions: DataFrame,
                clicks: DataFrame): DataFrame =
     FactKinds.zip(Seq(impressions, clicks))
@@ -91,40 +96,21 @@ object DeltaUpsert {
       max(of("clicks", "rtm_delta")).as("max_clk_at"))
   }
 
-  /** Day-grain CDC: the [[factDays]] rows whose FULL row is in neither
-    * daily log (`logs`, one per [[FactKinds]] entry). A (key, day,
-    * rtm_delta) diff alone would miss a count change from a fact landing
-    * at or before its day's max timestamp (the late-arrival blind spot
-    * [[deltaRows]] documents). The equality is NOT null-safe: a row with
-    * a NULL advertiser or day never matches, so it is always in the diff
-    * (its campaign counts as touched) — and [[dailyAppend]] never
-    * appends it, so it cannot grow the log every cycle. */
-  def dailyDelta(days: DataFrame, logs: Seq[DataFrame]): DataFrame =
-    days.join(FactKinds.zip(logs).map { case (kind, log) =>
-        val (dateCol, cntCol) = dailyCols(kind)
-        log.select(lit(kind).as("kind"), col("rtm_advertiser_id"),
-          col("rtm_campaign_id"), col(dateCol).as("day"),
-          col(cntCol).as("daily_count"), col("rtm_delta"))
-      }.reduce(_ unionByName _), days.columns.toSeq, "left_anti")
+  /** Day-grain CDC: the [[factDays]] rows whose FULL row is not in the
+    * daily fact log. A (key, day, rtm_delta) diff alone would miss a
+    * count change from a fact landing at or before its day's max
+    * timestamp (the late-arrival blind spot [[deltaRows]] documents). The
+    * equality is NOT null-safe: a row with a NULL advertiser or day never
+    * matches, so it is always in the diff (its campaign counts as
+    * touched) — and [[dailyAppend]] never appends it, so it cannot grow
+    * the log every cycle. */
+  def dailyDelta(days: DataFrame, log: DataFrame): DataFrame =
+    days.join(log, days.columns.toSeq, "left_anti")
 
-  /** One kind's rows of a [[factDays]]-shaped frame as daily-log rows
-    * (its date and count column names). */
-  def dailyRows(days: DataFrame, kind: String): DataFrame = {
-    val (dateCol, cntCol) = dailyCols(kind)
-    days.filter(col("kind") === kind)
-      .select(col("rtm_advertiser_id"), col("rtm_campaign_id"),
-        col("day").as(dateCol), col("daily_count").as(cntCol), col("rtm_delta"))
-  }
-
-  /** One kind's rows of a [[dailyDelta]] as daily-log version rows; rows
-    * with a NULL key or day are left out (see [[dailyDelta]]). */
-  def dailyAppend(delta: DataFrame, kind: String): DataFrame =
-    dailyRows(delta.filter(col("rtm_advertiser_id").isNotNull &&
-      col("rtm_campaign_id").isNotNull && col("day").isNotNull), kind)
-
-  /** A daily log's (date, count) column names for a fact kind. */
-  def dailyCols(kind: String): (String, String) =
-    (s"campaign_${kind}_date", s"campaign_${kind}_daily_count")
+  /** A [[dailyDelta]]'s daily-log version rows: the rows with a NULL key
+    * or day are left out (see [[dailyDelta]]). */
+  def dailyAppend(delta: DataFrame): DataFrame =
+    delta.filter((Keys :+ "day").map(col(_).isNotNull).reduce(_ && _))
 
   /** Keep-latest read over the append-only version log. Two versions of a
     * key can share an rtm_delta (the full-row diff above emits a new

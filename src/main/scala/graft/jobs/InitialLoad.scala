@@ -19,8 +19,7 @@ object InitialLoad {
 
   final case class Olap(
       advertiserCampaigns: DataFrame,
-      impressionsDaily: DataFrame,
-      clicksDaily: DataFrame,
+      factsDaily: DataFrame,
       totalsReport: DataFrame,
       dailyCtrReport: DataFrame)
 
@@ -70,33 +69,32 @@ object InitialLoad {
       .join(broadcast(advertiser.select(col("id").as("advertiser_id"),
         col("name").as("advertiser_name"))), Seq("advertiser_id"), "left")
 
-  /** Daily fact grain (et_initial_impressions/clicks, initial_load…py:239-323). */
+  /** Daily fact grain (et_initial_impressions/clicks, initial_load…py:239-323)
+    * of one raw fact table, tagged `kind`, in `DeltaUpsert.factDays`' columns. */
   def dailyCounts(campaign: DataFrame, facts: DataFrame,
-                  what: String): DataFrame =
+                  kind: String): DataFrame =
     facts.join(campaign.select(col("id").as("campaign_id"),
         col("advertiser_id")), Seq("campaign_id"), "left")
       .groupBy(col("advertiser_id").as("rtm_advertiser_id"),
         col("campaign_id").as("rtm_campaign_id"),
-        to_date(col("created_at")).as(s"campaign_${what}_date"))
-      .agg(count(lit(1)).as(s"campaign_${what}_daily_count"),
+        to_date(col("created_at")).as("day"))
+      .agg(count(lit(1)).as("daily_count"),
         max(col("created_at")).as("rtm_delta"))
+      .select(lit(kind).as("kind"), col("rtm_advertiser_id"),
+        col("rtm_campaign_id"), col("day"), col("daily_count"), col("rtm_delta"))
 
   /** The whole DAG: entity tables + both reports, derived once. */
   def run(advertiser: DataFrame, campaign: DataFrame, impressions: DataFrame,
           clicks: DataFrame, today: String): Olap = {
     val totals = campaignTotals(advertiser, campaign, impressions, clicks)
-    val impsDaily = dailyCounts(campaign, impressions, "impressions")
-    val clksDaily = dailyCounts(campaign, clicks, "clicks")
+    val daily = dailyCounts(campaign, impressions, "impressions")
+      .unionByName(dailyCounts(campaign, clicks, "clicks"))
     val dim = totals.select(col("rtm_advertiser_id"), col("rtm_campaign_id"),
       col("advertiser_name"), col("campaign_name")).distinct()
     Olap(
       advertiserCampaigns = totals,
-      impressionsDaily = impsDaily,
-      clicksDaily = clksDaily,
+      factsDaily = daily,
       totalsReport = Reports.totalsReport(totals, today),
-      dailyCtrReport = Reports.dailyCtrReport(dim,
-        impsDaily.drop("rtm_delta"),
-        clksDaily.drop("rtm_delta")
-          .withColumnRenamed("campaign_clicks_date", "campaign_impressions_date")))
+      dailyCtrReport = Reports.dailyCtrReport(dim, daily))
   }
 }

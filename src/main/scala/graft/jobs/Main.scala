@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * A track-delta cycle (`deltaStep`) reads the facts ONCE: one
   * checkpointed (kind, campaign, day) aggregate is its only OLTP
   * snapshot, and the totals, both CDC diffs and both reports derive from
-  * it. It writes the two reports first and appends to the three version
+  * it. It writes the two reports first and appends to the two version
   * logs last, so a crash in between is repaired by the next cycle. This
   * relies on append-only facts and unique campaign ids (see deltaStep).
   *
@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * {{{
   *   base/oltp/{advertiser,campaign,impressions,clicks}      row tables
   *   base/olap/advertiser_campaigns                          version log
-  *   base/olap/{impressions_daily,clicks_daily}              daily logs (date-partitioned)
+  *   base/olap/facts_daily                                   kind-tagged daily log (day-partitioned)
   *   base/reports/{campaign_totals_report,campaign_daily_ctr_report}
   * }}}
   *
@@ -51,8 +51,7 @@ object Main {
     val impressions = s"$base/oltp/impressions"
     val clicks = s"$base/oltp/clicks"
     val totalsLog = s"$base/olap/advertiser_campaigns"
-    val impsDaily = s"$base/olap/impressions_daily"
-    val clksDaily = s"$base/olap/clicks_daily"
+    val factsDaily = s"$base/olap/facts_daily"
     val totalsReport = s"$base/reports/campaign_totals_report"
     val dailyCtrReport = s"$base/reports/campaign_daily_ctr_report"
     val impsStreamLog = s"$base/olap/impressions_daily_stream"
@@ -96,20 +95,10 @@ object Main {
       st.clicks, today)
     Warehouse.appendVersions(olap.advertiserCampaigns, p.totalsLog,
       DeltaUpsert.Keys)
-    Warehouse.appendDaily(olap.impressionsDaily, p.impsDaily,
-      "campaign_impressions_date", DeltaUpsert.Keys)
-    Warehouse.appendDaily(olap.clicksDaily, p.clksDaily,
-      "campaign_clicks_date", DeltaUpsert.Keys)
+    Warehouse.appendDaily(olap.factsDaily, p.factsDaily, "day",
+      DeltaUpsert.Keys)
     Warehouse.overwriteReport(olap.totalsReport, p.totalsReport)
     Warehouse.overwriteReport(olap.dailyCtrReport, p.dailyCtrReport)
-  }
-
-  /** One generate + track-delta cycle. Returns the action name taken. */
-  def cycle(spark: SparkSession, p: Paths, now: String, today: String,
-            rng: scala.util.Random): String = {
-    val a = generateStep(spark, p, now, rng)
-    deltaStep(spark, p, today)
-    a
   }
 
   /** generate_new_data: one random action appended to the OLTP store.
@@ -138,7 +127,7 @@ object Main {
     *     lineage reads the logs the cycle appends to): the totals rows —
     *     the snapshot's per-campaign sums joined to campaign ⋈ advertiser
     *     — absent from the totals log (full row, `DeltaUpsert.deltaRows`),
-    *     and the snapshot rows absent from both daily logs (full tuple,
+    *     and the snapshot rows absent from the daily log (full row,
     *     `DeltaUpsert.dailyDelta`). A changed row IS the version row to
     *     append. A fresh daily row with a NULL advertiser or day (an
     *     orphan fact) never equals a logged row, so its campaign is always
@@ -148,15 +137,16 @@ object Main {
     *     theirs in the previous report; the daily report's touched
     *     campaigns (totals ∪ daily diff keys) re-derive from the snapshot,
     *     with names from campaign ⋈ advertiser. No log is read.
-    *  4. Log appends, last: totals, then both daily logs.
+    *  4. Log appends, last: totals, then the daily log.
     *
     * Precondition: facts are append-only and campaign ids unique. Then a
-    * (key, day)'s snapshot row has the highest (rtm_delta, count) of any
-    * version in its log, so it is what keep-latest returns after the
-    * append — the reports derived from the snapshot equal those derived
-    * from the logs' keep-latest views (PipelineSpec pins both). A crash
-    * after the reports but before the last append leaves logs that the
-    * next cycle diffs to the same touched set again, so it converges. */
+    * (kind, key, day)'s snapshot row has the highest (rtm_delta, count)
+    * of any version in its log, so it is what keep-latest returns after
+    * the append — the reports derived from the snapshot equal those
+    * derived from the logs' keep-latest views (PipelineSpec pins both).
+    * A crash after the reports but before the last append leaves logs
+    * that the next cycle diffs to the same touched set again, so it
+    * converges. */
   def deltaStep(spark: SparkSession, p: Paths, today: String): Unit = {
     val st = oltp(spark, p)
     val days = DeltaUpsert.factDays(st.campaign, st.impressions, st.clicks)
@@ -166,9 +156,7 @@ object Main {
           DeltaUpsert.campaignFacts(days)),
         Warehouse.read(spark, p.totalsLog))
       .localCheckpoint()
-    val dailyLogs = Seq(p.impsDaily, p.clksDaily)  // in FactKinds order
-    val daily = DeltaUpsert.dailyDelta(days,
-        dailyLogs.map(Warehouse.read(spark, _)))
+    val daily = DeltaUpsert.dailyDelta(days, Warehouse.read(spark, p.factsDaily))
       .localCheckpoint()
 
     Warehouse.replaceReport(spark,
@@ -184,49 +172,36 @@ object Main {
         Warehouse.read(spark, p.dailyCtrReport),
         totals.select(DeltaUpsert.Keys.map(col): _*)
           .unionByName(daily.select(DeltaUpsert.Keys.map(col): _*)),
-        dim, DeltaUpsert.dailyRows(days, "impressions").drop("rtm_delta"),
-        DeltaUpsert.dailyRows(days, "clicks").drop("rtm_delta")
-          .withColumnRenamed("campaign_clicks_date", "campaign_impressions_date")),
+        dim, days),
       p.dailyCtrReport)
 
     Warehouse.appendVersions(totals, p.totalsLog, DeltaUpsert.Keys)
-    DeltaUpsert.FactKinds.zip(dailyLogs).foreach { case (kind, log) =>
-      Warehouse.appendDaily(DeltaUpsert.dailyAppend(daily, kind), log,
-        DeltaUpsert.dailyCols(kind)._1, DeltaUpsert.Keys)
-    }
+    Warehouse.appendDaily(DeltaUpsert.dailyAppend(daily), p.factsDaily, "day",
+      DeltaUpsert.Keys)
     // Tiny, but an always-on service must not leak three per tick.
     Seq(days, totals, daily).foreach(Extensions.freeCkpt)
   }
 
   /** Compact EVERY version log the batch cycle writes — the totals log
-    * plus both daily logs (date-partitioned rewrite, so reader pruning
+    * plus the daily log (day-partitioned rewrite, so reader pruning
     * survives). The reference's background merges collapse ALL its
     * MergeTree tables (initial_load_generate_postgres_data.py:97-119),
     * not one: a compactor that bounds only the totals log leaves the
-    * daily logs growing without bound, the exact defect compaction
+    * daily log growing without bound, the exact defect compaction
     * exists to fix. Runs at the quiescent point of the cycle loop —
     * single writer, no live cached reader. */
   def compactBatchLogs(spark: SparkSession, p: Paths,
                        retainVersions: Int = 1): Unit = {
-    // Guarded per log: a log that never received a row (a corpus whose
-    // seeded clicks happen to be empty, or a caller compacting a fresh
-    // base) has nothing to bound — compacting it would only turn a
-    // vacuous state into a read error.
+    // Guarded per log: a log that never received a row (a caller
+    // compacting a fresh base) has nothing to bound — compacting it would
+    // only turn a vacuous state into a read error.
     if (hasData(spark, p.totalsLog))
       Warehouse.compact(spark, p.totalsLog, DeltaUpsert.Keys, "rtm_delta",
         retainVersions, tiebreak = DeltaUpsert.Tiebreak)
-    if (hasData(spark, p.impsDaily))
-      Warehouse.compact(spark, p.impsDaily,
-        Seq("rtm_advertiser_id", "rtm_campaign_id", "campaign_impressions_date"),
-        "rtm_delta", retainVersions,
-        tiebreak = Seq("campaign_impressions_daily_count"),
-        partitionCol = Some("campaign_impressions_date"))
-    if (hasData(spark, p.clksDaily))
-      Warehouse.compact(spark, p.clksDaily,
-        Seq("rtm_advertiser_id", "rtm_campaign_id", "campaign_clicks_date"),
-        "rtm_delta", retainVersions,
-        tiebreak = Seq("campaign_clicks_daily_count"),
-        partitionCol = Some("campaign_clicks_date"))
+    if (hasData(spark, p.factsDaily))
+      Warehouse.compact(spark, p.factsDaily, DeltaUpsert.DailyKeys,
+        "rtm_delta", retainVersions, tiebreak = Seq("daily_count"),
+        partitionCol = Some("day"))
   }
 
   /** The streamed daily logs have a LIVE writer (the two ingesters), so
@@ -242,13 +217,60 @@ object Main {
           "rtm_delta", retainVersions, tiebreak = Seq("daily_count"))
     }
 
-  /** Full lifecycle. Idempotent branch points mirror the reference:
-    * seeds only when OLTP is empty, initial-loads only when the OLAP log
-    * is absent, then runs `cycles` generate+delta rounds with the clock
-    * advancing 3 minutes per cycle (the reference's schedule_interval).
+  /** Branch-on-empty, shared by every lifecycle (initial_load…py:29-55):
+    * seeds only when an OLTP table is empty, initial-loads only when the
+    * totals log is absent. */
+  private def bootstrap(spark: SparkSession, p: Paths, now: String,
+                        seedVal: Long): Unit = {
+    if (!p.oltpAll.forall(hasData(spark, _))) seed(spark, p, now, seedVal)
+    if (!hasData(spark, p.totalsLog)) initialLoad(spark, p, now.take(10))
+  }
+
+  /** `cycles` generate + delta rounds with the clock advancing 3 minutes
+    * per cycle from `now`; returns the generate actions taken. `compact`
+    * runs after every `compactEvery`-th cycle (never when it is 0). */
+  private def runCycles(spark: SparkSession, p: Paths, cycles: Int,
+                        seedVal: Long, now: String, compactEvery: Int)
+                       (compact: => Unit): Seq[String] = {
+    val t0 = LocalDateTime.parse(now, NowFmt)
+    val rng = new scala.util.Random(seedVal)
+    (1 to cycles).map { i =>
+      val a = generateStep(spark, p, t0.plusMinutes(3L * i).format(NowFmt), rng)
+      deltaStep(spark, p, now.take(10))
+      if (compactEvery > 0 && i % compactEvery == 0) compact
+      a
+    }
+  }
+
+  /** Runs `body` while both streaming ingesters drain the fact dirs into
+    * their streamed daily logs, then drains every committed file and stops
+    * each stream (its checkpoint resumes exactly-once on the next start).
+    * Every stream is drained and stopped even when `body` or another
+    * stream failed, so no query leaks onto the shared session; the first
+    * error is thrown with the later ones suppressed, so none masks another. */
+  private def withIngesters[A](spark: SparkSession, p: Paths,
+                               interval: String)(body: => A): A = {
+    def start(facts: String, log: String, ckpt: String) =
+      graft.streaming.FileIngest.startDailyIngest(spark, facts, log, ckpt,
+        interval = interval)
+    val queries = Seq(start(p.impressions, p.impsStreamLog, p.impsStreamCkpt),
+      start(p.clicks, p.clksStreamLog, p.clksStreamCkpt))
+    val errors = scala.collection.mutable.ArrayBuffer.empty[Throwable]
+    def guarded[B](f: => B): Option[B] =
+      try Some(f) catch { case e: Throwable => errors += e; None }
+    val result = guarded(body)
+    queries.foreach(q => guarded(try q.processAllAvailable() finally q.stop()))
+    errors.reduceOption { (first, e) => first.addSuppressed(e); first }
+      .foreach(throw _)
+    result.get
+  }
+
+  /** Full lifecycle: [[bootstrap]], then `cycles` generate+delta rounds
+    * with the clock advancing 3 minutes per cycle (the reference's
+    * schedule_interval).
     *
     * `compactEvery` > 0 compacts every batch-side version log (totals +
-    * both dailies, compactBatchLogs) every that many cycles, keeping
+    * daily, compactBatchLogs) every that many cycles, keeping
     * `retainVersions` versions per key — the scheduled stand-in for
     * ClickHouse's background merges, run at the one point in the loop
     * where the logs have no other writer and no live cached reader (the
@@ -257,18 +279,9 @@ object Main {
           now: String = Generators.DefaultNow, compactEvery: Int = 0,
           retainVersions: Int = 1): Seq[String] = {
     val p = Paths(base)
-    val t0 = LocalDateTime.parse(now, NowFmt)
-    val today = now.take(10)
-    if (!p.oltpAll.forall(hasData(spark, _))) seed(spark, p, now, seedVal)
-    if (!hasData(spark, p.totalsLog)) initialLoad(spark, p, today)
-    val rng = new scala.util.Random(seedVal)
-    (1 to cycles).map { i =>
-      val nowI = t0.plusMinutes(3L * i).format(NowFmt)
-      val a = cycle(spark, p, nowI, today, rng)
-      if (compactEvery > 0 && i % compactEvery == 0)
-        compactBatchLogs(spark, p, retainVersions)
-      a
-    }
+    bootstrap(spark, p, now, seedVal)
+    runCycles(spark, p, cycles, seedVal, now, compactEvery)(
+      compactBatchLogs(spark, p, retainVersions))
   }
 
   /** Always-on service mode. The reference is a SCHEDULED system — a
@@ -280,12 +293,10 @@ object Main {
     * tracks both fact tables through the identical delta machinery,
     * track_delta.py:327-427) WHILE the generate + track-delta cycle
     * appends to the OLTP store and maintains the reports. Shutdown is
-    * graceful: drain every file already committed to the store, then
-    * stop — each stream's checkpoint resumes exactly-once on the next
-    * start, so stop/start loses nothing.
+    * graceful ([[withIngesters]]), so stop/start loses nothing.
     *
-    * The streamed logs complement the batch daily logs (the exact-parity
-    * path): FileIngestSpec pins that both keep-latest views converge to
+    * The streamed logs complement the batch daily log (the exact-parity
+    * path): FileIngestSpec pins that all keep-latest views converge to
     * the batch recompute of the final store, and
     * `FileIngest.streamedDailyCtr` joins them into the continuously-
     * maintained form of the daily CTR report. `interval` is the trigger
@@ -295,37 +306,11 @@ object Main {
                  now: String = Generators.DefaultNow, compactEvery: Int = 0,
                  retainVersions: Int = 1): Seq[String] = {
     val p = Paths(base)
-    val t0 = LocalDateTime.parse(now, NowFmt)
-    val today = now.take(10)
-    if (!p.oltpAll.forall(hasData(spark, _))) seed(spark, p, now, seedVal)
-    if (!hasData(spark, p.totalsLog)) initialLoad(spark, p, today)
-    val qImps = graft.streaming.FileIngest.startDailyIngest(spark,
-      p.impressions, p.impsStreamLog, p.impsStreamCkpt, interval = interval)
-    val qClks = graft.streaming.FileIngest.startDailyIngest(spark,
-      p.clicks, p.clksStreamLog, p.clksStreamCkpt, interval = interval)
-    try {
-      val rng = new scala.util.Random(seedVal)
-      (1 to cycles).map { i =>
-        val nowI = t0.plusMinutes(3L * i).format(NowFmt)
-        val a = cycle(spark, p, nowI, today, rng)
-        if (compactEvery > 0 && i % compactEvery == 0) {
-          compactBatchLogs(spark, p, retainVersions)
-          tryCompactStreamedLogs(spark, p, retainVersions)
-        }
-        a
-      }
-    } finally {
-      // Drain-then-stop per stream, each stop() in its own finally: if a
-      // query already failed, processAllAvailable() rethrows its
-      // exception — which must not mask the cycle loop's error, skip the
-      // other stream's shutdown, NOR leak a live query registered on the
-      // shared session.
-      try {
-        try qImps.processAllAvailable()
-        finally qImps.stop()
-      } finally {
-        try qClks.processAllAvailable()
-        finally qClks.stop()
+    bootstrap(spark, p, now, seedVal)
+    withIngesters(spark, p, interval) {
+      runCycles(spark, p, cycles, seedVal, now, compactEvery) {
+        compactBatchLogs(spark, p, retainVersions)
+        tryCompactStreamedLogs(spark, p, retainVersions)
       }
     }
   }
@@ -348,7 +333,7 @@ object Main {
     * clock jump runs one missed tick per loop pass until caught up —
     * Airflow's catchup behavior. Both DAGs fire immediately at start
     * (the reference's first scheduled run), and ticks due at the same
-    * instant run generate-then-delta, preserving cycle()'s ordering.
+    * instant run generate-then-delta, as in run's cycles.
     *
     * Compaction rides the delta cadence: every `compactEvery` delta
     * ticks (default 12 — hourly at the reference's 5-minute delta), all
@@ -372,20 +357,14 @@ object Main {
     val p = Paths(base)
     val t0 = clock()
     val today = t0.format(NowFmt).take(10)
-    if (!p.oltpAll.forall(hasData(spark, _))) seed(spark, p,
-      t0.format(NowFmt), seedVal)
-    if (!hasData(spark, p.totalsLog)) initialLoad(spark, p, today)
-    val qImps = graft.streaming.FileIngest.startDailyIngest(spark,
-      p.impressions, p.impsStreamLog, p.impsStreamCkpt, interval = interval)
-    val qClks = graft.streaming.FileIngest.startDailyIngest(spark,
-      p.clicks, p.clksStreamLog, p.clksStreamCkpt, interval = interval)
+    bootstrap(spark, p, t0.format(NowFmt), seedVal)
     val rng = new scala.util.Random(seedVal)
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
     var deltaTicks = 0
     var compactTicks = 0
     var nextGen = t0
     var nextDelta = t0
-    try {
+    withIngesters(spark, p, interval) {
       while (!stop()) {
         val now = clock()
         if (!now.isBefore(nextGen)) {
@@ -409,15 +388,6 @@ object Main {
         val wake = if (nextGen.isBefore(nextDelta)) nextGen else nextDelta
         val d = java.time.Duration.between(clock(), wake)
         if (!d.isNegative && !stop()) sleep(d)
-      }
-    } finally {
-      // Same per-stream drain-then-stop discipline as runService.
-      try {
-        try qImps.processAllAvailable()
-        finally qImps.stop()
-      } finally {
-        try qClks.processAllAvailable()
-        finally qClks.stop()
       }
     }
     ScheduleStats(actions.toSeq, deltaTicks, compactTicks)

@@ -104,32 +104,33 @@ object Reports {
     * ordinal (`campaign_day` = row_number over its dates), so one
     * changed day re-ranks every row of its campaign — day-grain
     * patching would corrupt the ordinal. Campaigns in `touchedKeys`
-    * re-derive in full from `impsDaily`/`clksDaily` (each restricted to
-    * them by semi join); every other campaign's rows pass through
+    * re-derive in full from the kind-tagged daily rows `days` (restricted
+    * to them by semi join); every other campaign's rows pass through
     * untouched. Identical to a full rebuild (WarehouseSpec pins it;
     * PipelineSpec pins the lifecycle-level form).
     *
-    * The daily inputs must hold the CURRENT rows of every touched
-    * campaign. `Main.deltaStep` passes its (kind, campaign, day) fact
-    * snapshot, not the daily logs' keep-latest views: with append-only
-    * facts the two agree on every touched campaign, and the snapshot
-    * needs no window over the logs. `touchedKeys` must cover every
-    * campaign whose report could change; deltaStep passes the totals
-    * diff's keys (a name change or a count change versions the totals
-    * row) united with the daily diff's, so the cover does not rest on
-    * that inference alone. Duplicate keys are harmless.
+    * `days` must hold the CURRENT rows of every touched campaign.
+    * `Main.deltaStep` passes its (kind, campaign, day) fact snapshot, not
+    * the daily log's keep-latest view: with append-only facts the two
+    * agree on every touched campaign, and the snapshot needs no window
+    * over the log. `touchedKeys` must cover every campaign whose report
+    * could change; deltaStep passes the totals diff's keys (a name change
+    * or a count change versions the totals row) united with the daily
+    * diff's, so the cover does not rest on that inference alone.
+    * Duplicate keys are harmless.
     *
     * Scale posture: the touched campaigns are a delta's worth (a handful
     * per 5-minute cycle, not the fleet), so the keys and the restricted
     * dim and click rows are broadcast and the only shuffle is the day
     * ordinal's window over the touched campaigns' rows. */
   def incrementalDailyCtrReport(prevReport: DataFrame, touchedKeys: DataFrame,
-                                dim: DataFrame, impsDaily: DataFrame,
-                                clksDaily: DataFrame): DataFrame = {
+                                dim: DataFrame, days: DataFrame): DataFrame = {
     val touched = broadcast(touchedKeys.select(DeltaUpsert.Keys.map(col): _*))
     def only(df: DataFrame) = df.join(touched, DeltaUpsert.Keys, "left_semi")
-    replaceKeys(prevReport, touched, dailyCtrReport(broadcast(only(dim)),
-      only(impsDaily), broadcast(only(clksDaily))))
+    val touchedDays = only(days)
+    replaceKeys(prevReport, touched, ctrReport(broadcast(only(dim)),
+      kindRows(touchedDays, "impressions"),
+      broadcast(kindRows(touchedDays, "clicks"))))
   }
 
   /** `prev` without the keys in `keys`, plus `fresh` (their new rows). */
@@ -139,24 +140,34 @@ object Reports {
         DeltaUpsert.Keys, "left_anti")
       .unionByName(fresh)
 
-  /** W1+J5+J6 daily CTR report: `dim` is the distinct (advertiser, campaign,
-    * names) lookup; daily click rows are date-aligned onto daily impression
-    * rows (days with clicks but no impressions drop, by reference design —
-    * SURVEY J6). */
-  def dailyCtrReport(dim: DataFrame, impsDaily: DataFrame,
-                     clksDaily: DataFrame): DataFrame = {
+  /** W1+J5+J6 daily CTR report over kind-tagged daily rows (the
+    * `DeltaUpsert.factDays` columns): `dim` is the distinct (advertiser,
+    * campaign, names) lookup; daily click rows are day-aligned onto daily
+    * impression rows (days with clicks but no impressions drop, by
+    * reference design — SURVEY J6; a row with a NULL advertiser or day
+    * matches none). */
+  def dailyCtrReport(dim: DataFrame, days: DataFrame): DataFrame =
+    ctrReport(dim, kindRows(days, "impressions"), kindRows(days, "clicks"))
+
+  /** One kind's rows of kind-tagged daily rows: keys, day and the count
+    * as `campaign_<kind>_daily_count`, the report's column. */
+  private def kindRows(days: DataFrame, kind: String): DataFrame =
+    days.filter(col("kind") === kind)
+      .select(col("rtm_advertiser_id"), col("rtm_campaign_id"), col("day"),
+        col("daily_count").as(s"campaign_${kind}_daily_count"))
+
+  private def ctrReport(dim: DataFrame, imps: DataFrame,
+                        clks: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("rtm_advertiser_id"), col("rtm_campaign_id"))
-      .orderBy(col("campaign_impressions_date"))
-    impsDaily
-      .join(dim, Seq("rtm_advertiser_id", "rtm_campaign_id"), "left")
-      .join(clksDaily,
-        Seq("rtm_advertiser_id", "rtm_campaign_id", "campaign_impressions_date"),
-        "left")
+      .orderBy(col("day"))
+    imps
+      .join(dim, DeltaUpsert.Keys, "left")
+      .join(clks, DeltaUpsert.Keys :+ "day", "left")
       .select(
         col("rtm_advertiser_id"), col("rtm_campaign_id"),
         col("advertiser_name"), col("campaign_name"),
         row_number().over(w).as("campaign_day"),
-        col("campaign_impressions_date"),
+        col("day").as("campaign_impressions_date"),
         col("campaign_impressions_daily_count"),
         coalesce(col("campaign_clicks_daily_count"), lit(0L))
           .as("campaign_clicks_daily_count"),

@@ -58,12 +58,4 @@ object Schemas {
     StructField("rtm_advertiser_id", LongType),
     StructField("rtm_campaign_id", LongType),
     StructField("rtm_delta", TimestampType)))
-
-  /** OLAP daily fact version-log row (initial_load…py:102-119). */
-  val advertiserCampaignsDaily: StructType = StructType(Seq(
-    StructField("rtm_advertiser_id", LongType),
-    StructField("rtm_campaign_id", LongType),
-    StructField("date", DateType),
-    StructField("daily_count", LongType),
-    StructField("rtm_delta", TimestampType)))
 }

@@ -152,7 +152,7 @@ class FileIngestSpec extends SparkSpec {
   test("compaction bounds EVERY service log; views unchanged") {
     val base = java.nio.file.Files.createTempDirectory("graft-cmp").toString
     // 4 cycles with compactEvery=2: compactBatchLogs runs mid-service at
-    // cycles 2 and 4 (totals + both daily logs), tryCompactStreamedLogs
+    // cycles 2 and 4 (totals + daily log), tryCompactStreamedLogs
     // races the live 1-second triggers (skip-on-race is fine mid-run).
     graft.jobs.Main.runService(spark, base, cycles = 4, seedVal = 21L,
       interval = "1 second", compactEvery = 2)
@@ -170,14 +170,12 @@ class FileIngestSpec extends SparkSpec {
         s"$path: $rows rows for $keyCount keys — compaction left " +
           "multiple versions (retain=1)")
     }
-    // ALL five logs the service writes are version-bounded: the last
+    // ALL four logs the service writes are version-bounded: the last
     // compaction at cycle 4 is the loop's final log write (batch side),
     // and the post-stop pass bounds the streamed side.
     versionBounded(p.totalsLog, graft.jobs.DeltaUpsert.Keys)
-    versionBounded(p.impsDaily,
-      Seq("rtm_advertiser_id", "rtm_campaign_id", "campaign_impressions_date"))
-    versionBounded(p.clksDaily,
-      Seq("rtm_advertiser_id", "rtm_campaign_id", "campaign_clicks_date"))
+    versionBounded(p.factsDaily,
+      Seq("kind", "rtm_advertiser_id", "rtm_campaign_id", "day"))
     versionBounded(p.impsStreamLog, Seq("campaign_id", "date"))
     versionBounded(p.clksStreamLog, Seq("campaign_id", "date"))
 

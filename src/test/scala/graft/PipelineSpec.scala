@@ -38,9 +38,9 @@ class PipelineSpec extends SparkSpec {
   test("initial load totals: daily counts sum to lifetime totals") {
     val (adv, camp, imps, clks) = oltp(42L, Generators.DefaultNow)
     val olap = InitialLoad.run(adv, camp, imps, clks, "2024-06-01")
-    val dailySums = olap.impressionsDaily
+    val dailySums = olap.factsDaily.filter(col("kind") === "impressions")
       .groupBy(col("rtm_campaign_id"))
-      .agg(sum("campaign_impressions_daily_count").as("s"))
+      .agg(sum("daily_count").as("s"))
     val joined = olap.advertiserCampaigns
       .join(dailySums, Seq("rtm_campaign_id"), "left")
       .filter(coalesce(col("s"), lit(0L)) =!= col("campaign_impressions_count_total"))
@@ -97,22 +97,15 @@ class PipelineSpec extends SparkSpec {
       "incremental report vs full derive")
     // The incrementally-maintained DAILY report (campaign-grain
     // maintenance, Reports.incrementalDailyCtrReport) equals a full
-    // derivation from the keep-latest daily views.
+    // derivation from the daily log's keep-latest view of each kind.
     def dailyEquivalence(totalsLatest: DataFrame, hint: String): Unit = {
       val dim = totalsLatest.select(col("rtm_advertiser_id"),
         col("rtm_campaign_id"), col("advertiser_name"),
         col("campaign_name")).distinct()
-      def dailyView(path: String, what: String) = graft.ops.Core.latestView(
-          jobs.Warehouse.read(spark, path),
-          Seq("rtm_advertiser_id", "rtm_campaign_id", s"campaign_${what}_date"),
-          "rtm_delta", tiebreak = Seq(s"campaign_${what}_daily_count"))
-        .select(col("rtm_advertiser_id"), col("rtm_campaign_id"),
-          col(s"campaign_${what}_date"), col(s"campaign_${what}_daily_count"))
-      val clksD = dailyView(p.clksDaily, "clicks")
-        .withColumnRenamed("campaign_clicks_date", "campaign_impressions_date")
+      val dailyView = DeltaUpsert.FactKinds.map(latestDailyLog(p, _))
+        .reduce(_ unionByName _)
       assertSameRows(jobs.Warehouse.read(spark, p.dailyCtrReport),
-        jobs.Reports.dailyCtrReport(dim,
-          dailyView(p.impsDaily, "impressions"), clksD), hint)
+        jobs.Reports.dailyCtrReport(dim, dailyView), hint)
     }
     dailyEquivalence(latest, "incremental daily report vs full derive")
     // Re-running does NOT re-seed or re-initial-load (branch-on-empty):
@@ -189,19 +182,20 @@ class PipelineSpec extends SparkSpec {
       .write.mode("append").parquet(path)
   }
 
-  /** The keep-latest view of a daily log, in `dailyCounts`' columns. */
-  private def latestDailyLog(path: String, what: String): DataFrame = {
-    val (dateCol, cntCol) = DeltaUpsert.dailyCols(what)
-    graft.ops.Core.latestView(jobs.Warehouse.read(spark, path),
-        Seq("rtm_advertiser_id", "rtm_campaign_id", dateCol), "rtm_delta",
-        tiebreak = Seq(cntCol))
-      .select(col("rtm_advertiser_id"), col("rtm_campaign_id"),
-        col(dateCol), col(cntCol), col("rtm_delta"))
-  }
+  /** One kind's rows of the daily log's keep-latest view on (kind, keys,
+    * day), in `dailyCounts`' columns. */
+  private def latestDailyLog(p: jobs.Main.Paths, kind: String): DataFrame =
+    graft.ops.Core.latestView(jobs.Warehouse.read(spark, p.factsDaily),
+        Seq("kind", "rtm_advertiser_id", "rtm_campaign_id", "day"),
+        "rtm_delta", tiebreak = Seq("daily_count"))
+      .filter(col("kind") === kind)
+      .select(col("kind"), col("rtm_advertiser_id"), col("rtm_campaign_id"),
+        col("day"), col("daily_count"), col("rtm_delta"))
 
-  /** The store's current rows of every OLAP artifact, for equality checks. */
+  /** The store's current rows of every OLAP artifact (every log row, not
+    * only the latest versions), for equality checks. */
   private def artifacts(p: jobs.Main.Paths): Seq[Seq[String]] =
-    Seq(p.totalsLog, p.impsDaily, p.clksDaily, p.totalsReport, p.dailyCtrReport)
+    Seq(p.totalsLog, p.factsDaily, p.totalsReport, p.dailyCtrReport)
       .map(jobs.Warehouse.read(spark, _).collect().map(_.toString).toSeq.sorted)
 
   test("deltaStep: late-arriving facts reach every log and both reports") {
@@ -230,12 +224,11 @@ class PipelineSpec extends SparkSpec {
     assertSameRows(DeltaUpsert.latest(jobs.Warehouse.read(spark, p.totalsLog)),
       InitialLoad.campaignTotals(st.advertiser, st.campaign, st.impressions,
         st.clicks), "totals log keep-latest vs recompute")
-    Seq(p.impsDaily -> "impressions", p.clksDaily -> "clicks").foreach {
-      case (log, what) =>
-        val facts = if (what == "impressions") st.impressions else st.clicks
-        assertSameRows(latestDailyLog(log, what),
-          InitialLoad.dailyCounts(st.campaign, facts, what),
-          s"$what daily log keep-latest vs recompute")
+    DeltaUpsert.FactKinds.zip(Seq(st.impressions, st.clicks)).foreach {
+      case (kind, facts) =>
+        assertSameRows(latestDailyLog(p, kind),
+          InitialLoad.dailyCounts(st.campaign, facts, kind),
+          s"$kind daily log keep-latest vs recompute")
     }
     val olap = InitialLoad.run(st.advertiser, st.campaign, st.impressions,
       st.clicks, Today)
@@ -273,8 +266,8 @@ class PipelineSpec extends SparkSpec {
       assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally spark.listenerManager.unregister(listener)
     // 3 checkpoints (snapshot, totals diff, daily diff), 2 report
-    // replaces, 3 log appends.
-    val ActionBudget = 8
+    // replaces, 2 log appends.
+    val ActionBudget = 7
     assert(actions.get() <= ActionBudget,
       s"one deltaStep ran ${actions.get()} actions (budget $ActionBudget)")
 

@@ -44,25 +44,25 @@ class WarehouseSpec extends SparkSpec {
     val camp = Generators.campaigns(spark, 2, 2)
     val imps = Generators.impressions(spark, 4, 50)
     val daily = InitialLoad.dailyCounts(camp, imps, "impressions")
-    Warehouse.appendDaily(daily, s"$dir/daily", "campaign_impressions_date",
+    Warehouse.appendDaily(daily, s"$dir/daily", "day",
       Seq("rtm_advertiser_id", "rtm_campaign_id"))
     // hive-style partition dirs exist
     val parts = new java.io.File(s"$dir/daily").listFiles()
-      .filter(_.getName.startsWith("campaign_impressions_date="))
+      .filter(_.getName.startsWith("day="))
     assert(parts.length > 1, "expected multiple date partitions")
     // read-back equals source
     assertSameRows(Warehouse.read(spark, s"$dir/daily")
       .select(daily.columns.map(col): _*), daily, "partitioned round-trip")
     // and the READER prunes: a date predicate becomes a PartitionFilter on
     // the scan (directory-level pruning — other days' files never open)
-    val oneDay = daily.select(col("campaign_impressions_date")).head.getDate(0)
+    val oneDay = daily.select(col("day")).head.getDate(0)
     val pruned = Warehouse.read(spark, s"$dir/daily")
-      .filter(col("campaign_impressions_date") === lit(oneDay))
+      .filter(col("day") === lit(oneDay))
     val scans = pruned.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
     assert(scans.nonEmpty && scans.forall(_.partitionFilters.exists(
-        _.references.exists(_.name == "campaign_impressions_date"))),
+        _.references.exists(_.name == "day"))),
       s"date predicate did not become a partition filter:\n${pruned.queryExecution}")
   }
 
@@ -239,29 +239,32 @@ class WarehouseSpec extends SparkSpec {
       .toDF("rtm_advertiser_id", "rtm_campaign_id",
         "advertiser_name", "campaign_name")
     def d(s: String) = java.sql.Date.valueOf(s)
-    val impsCols = Seq("rtm_advertiser_id", "rtm_campaign_id",
-      "campaign_impressions_date", "campaign_impressions_daily_count")
-    val imps1 = Seq(
-      (1L, 10L, d("2024-06-01"), 100L), (1L, 10L, d("2024-06-02"), 50L),
-      (1L, 20L, d("2024-06-01"), 80L)).toDF(impsCols: _*)
-    val clks = Seq(
-      (1L, 10L, d("2024-06-01"), 7L), (1L, 20L, d("2024-06-01"), 3L))
-      .toDF("rtm_advertiser_id", "rtm_campaign_id",
-        "campaign_impressions_date", "campaign_clicks_daily_count")
-    val prev = graft.jobs.Reports.dailyCtrReport(dim, imps1, clks)
+    // Kind-tagged daily rows (DeltaUpsert.factDays' columns).
+    def days(rows: (String, Long, Long, String, Long)*) =
+      rows.map { case (k, a, c, day, n) => (k, a, c, d(day), n) }
+        .toDF("kind", "rtm_advertiser_id", "rtm_campaign_id", "day",
+          "daily_count")
+    val clks = Seq(("clicks", 1L, 10L, "2024-06-01", 7L),
+      ("clicks", 1L, 20L, "2024-06-01", 3L))
+    val days1 = days(Seq(
+      ("impressions", 1L, 10L, "2024-06-01", 100L),
+      ("impressions", 1L, 10L, "2024-06-02", 50L),
+      ("impressions", 1L, 20L, "2024-06-01", 80L)) ++ clks: _*)
+    val prev = graft.jobs.Reports.dailyCtrReport(dim, days1)
     // Campaign 10 changes: day-2 count grows and day 3 appears — which
     // re-ranks EVERY campaign_day ordinal of campaign 10 (the reason
     // maintenance runs at campaign grain). Campaign 20 is untouched.
-    val imps2 = Seq(
-      (1L, 10L, d("2024-06-01"), 100L), (1L, 10L, d("2024-06-02"), 60L),
-      (1L, 10L, d("2024-06-03"), 30L), (1L, 20L, d("2024-06-01"), 80L))
-      .toDF(impsCols: _*)
+    val days2 = days(Seq(
+      ("impressions", 1L, 10L, "2024-06-01", 100L),
+      ("impressions", 1L, 10L, "2024-06-02", 60L),
+      ("impressions", 1L, 10L, "2024-06-03", 30L),
+      ("impressions", 1L, 20L, "2024-06-01", 80L)) ++ clks: _*)
     val touched = Seq((1L, 10L))
       .toDF("rtm_advertiser_id", "rtm_campaign_id")
     assertSameRows(
       graft.jobs.Reports.incrementalDailyCtrReport(prev, touched, dim,
-        imps2, clks),
-      graft.jobs.Reports.dailyCtrReport(dim, imps2, clks),
+        days2),
+      graft.jobs.Reports.dailyCtrReport(dim, days2),
       "incremental daily vs full rebuild")
   }
 }
