@@ -69,19 +69,34 @@ object InitialLoad {
       .join(broadcast(advertiser.select(col("id").as("advertiser_id"),
         col("name").as("advertiser_name"))), Seq("advertiser_id"), "left")
 
+  /** The daily CTR report's name dim: [[campaignDim]]'s keys and names
+    * under the report's key columns, one row per campaign. */
+  private[graft] def nameDim(advertiser: DataFrame,
+                             campaign: DataFrame): DataFrame =
+    campaignDim(advertiser, campaign)
+      .select(col("advertiser_id").as("rtm_advertiser_id"),
+        col("campaign_id").as("rtm_campaign_id"),
+        col("advertiser_name"), col("campaign_name"))
+
   /** Daily fact grain (et_initial_impressions/clicks, initial_load…py:239-323)
-    * of one raw fact table, tagged `kind`, in `DeltaUpsert.factDays`' columns. */
+    * of one raw fact table, tagged `kind`, in `DeltaUpsert.factDays`' columns.
+    *
+    * Aggregates BEFORE the campaign join: with unique campaign ids the
+    * advertiser is a function of the fact's campaign, so grouping by
+    * (campaign, day) first gives the same groups and counts, and the
+    * broadcast join runs at campaign-day grain instead of fact grain. An
+    * orphan fact's campaign still gets a NULL advertiser. */
   def dailyCounts(campaign: DataFrame, facts: DataFrame,
                   kind: String): DataFrame =
-    facts.join(campaign.select(col("id").as("campaign_id"),
-        col("advertiser_id")), Seq("campaign_id"), "left")
-      .groupBy(col("advertiser_id").as("rtm_advertiser_id"),
-        col("campaign_id").as("rtm_campaign_id"),
-        to_date(col("created_at")).as("day"))
+    facts
+      .groupBy(col("campaign_id"), to_date(col("created_at")).as("day"))
       .agg(count(lit(1)).as("daily_count"),
         max(col("created_at")).as("rtm_delta"))
-      .select(lit(kind).as("kind"), col("rtm_advertiser_id"),
-        col("rtm_campaign_id"), col("day"), col("daily_count"), col("rtm_delta"))
+      .join(broadcast(campaign.select(col("id").as("campaign_id"),
+        col("advertiser_id"))), Seq("campaign_id"), "left")
+      .select(lit(kind).as("kind"), col("advertiser_id").as("rtm_advertiser_id"),
+        col("campaign_id").as("rtm_campaign_id"), col("day"), col("daily_count"),
+        col("rtm_delta"))
 
   /** The whole DAG: entity tables + both reports, derived once. */
   def run(advertiser: DataFrame, campaign: DataFrame, impressions: DataFrame,
@@ -89,12 +104,11 @@ object InitialLoad {
     val totals = campaignTotals(advertiser, campaign, impressions, clicks)
     val daily = dailyCounts(campaign, impressions, "impressions")
       .unionByName(dailyCounts(campaign, clicks, "clicks"))
-    val dim = totals.select(col("rtm_advertiser_id"), col("rtm_campaign_id"),
-      col("advertiser_name"), col("campaign_name")).distinct()
     Olap(
       advertiserCampaigns = totals,
       factsDaily = daily,
       totalsReport = Reports.totalsReport(totals, today),
-      dailyCtrReport = Reports.dailyCtrReport(dim, daily))
+      dailyCtrReport = Reports.dailyCtrReport(nameDim(advertiser, campaign),
+        daily))
   }
 }

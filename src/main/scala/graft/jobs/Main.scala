@@ -163,16 +163,12 @@ object Main {
       Reports.incrementalTotalsReport(
         Warehouse.read(spark, p.totalsReport), totals, today),
       p.totalsReport)
-    val dim = InitialLoad.campaignDim(st.advertiser, st.campaign)
-      .select(col("advertiser_id").as("rtm_advertiser_id"),
-        col("campaign_id").as("rtm_campaign_id"),
-        col("advertiser_name"), col("campaign_name"))
     Warehouse.replaceReport(spark,
       Reports.incrementalDailyCtrReport(
         Warehouse.read(spark, p.dailyCtrReport),
         totals.select(DeltaUpsert.Keys.map(col): _*)
           .unionByName(daily.select(DeltaUpsert.Keys.map(col): _*)),
-        dim, days),
+        InitialLoad.nameDim(st.advertiser, st.campaign), days),
       p.dailyCtrReport)
 
     Warehouse.appendVersions(totals, p.totalsLog, DeltaUpsert.Keys)

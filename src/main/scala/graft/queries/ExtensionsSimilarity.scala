@@ -2156,17 +2156,37 @@ private[queries] trait ExtSimilarity { this: Extensions.type =>
     q
   }
 
-  private[queries] def sidecarOf(s: SparkSession, path: String,
-                        name: String): DataFrame = {
+  private[graft] def sidecarOf(s: SparkSession, path: String,
+                              name: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$path/$name")
-    require(
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p),
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    require(fs.exists(p),
       s"ANN index at $path predates the $name payload epoch (no $name " +
         "sidecar): its stored rows carry no matching codes, so appending " +
         "or serving under this epoch is impossible. Rebuild the index — " +
         "a sidecar refresh is a retrain-class event (delete the index " +
         "directory and run the build/refresh path again).")
-    s.read.parquet(s"$path/$name")
+    // The part files, not the directory: Spark warns that it ignores a
+    // `_`-prefixed root path as hidden (and still reads it).
+    s.read.parquet(fs.listStatus(p).map(_.getPath.toString)
+      .filter(_.endsWith(".parquet")).toIndexedSeq: _*)
+  }
+
+  /** Copy, as files, each sidecar the index at `path` has into `stage`:
+    * compaction and purge are file-layout rewrites, so the epoch carries
+    * over byte for byte, and an index that predates a payload epoch
+    * keeps lacking it (sidecarOf's rebuild contract is for append and
+    * serving, where the codes are consumed). */
+  private[graft] def carryAnnSidecars(s: SparkSession, path: String,
+                                      stage: String): Unit = {
+    val conf = s.sparkContext.hadoopConfiguration
+    Seq("_quantizer", "_sq8", "_pq").foreach { sc =>
+      val src = new org.apache.hadoop.fs.Path(s"$path/$sc")
+      val fs = src.getFileSystem(conf)
+      if (fs.exists(src))
+        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
+          new org.apache.hadoop.fs.Path(s"$stage/$sc"), false, conf)
+    }
   }
 
   private[graft] def appendAnnIndexFrom(s: SparkSession, path: String,
@@ -2188,8 +2208,8 @@ private[queries] trait ExtSimilarity { this: Extensions.type =>
     * shuffle's output files, `distinct()` absorbing the one duplicate
     * source appends can physically produce (a crash-replayed
     * appendAnnIndex re-adding its batch — index rows are unique per
-    * (vec_id, rn) otherwise), and carries the `_quantizer` sidecar into
-    * the staged artifact unchanged: compaction is a FILE-layout
+    * (vec_id, rn) otherwise), and copies the sidecars into the staged
+    * artifact unchanged ([[carryAnnSidecars]]): compaction is a FILE-layout
     * operation, the epoch does not move. Same fingerprint guard +
     * staged swap as the log compactions — a concurrent append parks the
     * rewrite and returns false; run it in the same quiesced windows
@@ -2200,16 +2220,7 @@ private[queries] trait ExtSimilarity { this: Extensions.type =>
       s.read.parquet(path).distinct()
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(stage)
-      // Carry whichever sidecars this index's epoch has — compaction is
-      // a file-layout operation and must not demand a payload epoch the
-      // index predates (sidecarOf's rebuild contract is for
-      // append/serving, where the codes are actually consumed).
-      Seq("_quantizer", "_sq8", "_pq").foreach { sc =>
-        val sp = new org.apache.hadoop.fs.Path(s"$path/$sc")
-        if (sp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(sp))
-          s.read.parquet(s"$path/$sc")
-            .write.mode("overwrite").parquet(s"$stage/$sc")
-      }
+      carryAnnSidecars(s, path, stage)
     }
 
   /** The materialized ANN index location for a corpus dir — built

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Adtech, Tables}
 import graft.functions.Portable
+import graft.jobs.{InitialLoad, Reports}
 import graft.ops.{Aggregates, Core, Joins, Ranks}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -23,116 +24,60 @@ object Parity {
   // ---------------------------------------------------------------- Spark side
 
   /** Flagship: campaign lifetime totals (reference et_initial_totals_oltp,
-    * initial_load…py:150-230). J1 dimension join (broadcast — advertiser is
-    * the small dim), A1 pre-aggregated fact totals joined AFTER aggregation
-    * (the scalable shape: join input is |campaigns|, not |events|), P3
-    * GREATEST change-version, P4 COALESCE zero-fill. */
+    * initial_load…py:150-230) — the ETL's own derivation,
+    * `InitialLoad.campaignTotals`, over the role mapping: J1 broadcast
+    * advertiser join, A1 per-campaign fact totals joined AFTER
+    * aggregation, P3 GREATEST change-version, P4 COALESCE zero-fill. */
   def totals(s: SparkSession, dir: String): DataFrame = {
-    val camp = Adtech.campaign(s, dir)
-    val adv = Adtech.advertiser(s, dir)
-    // Impression AND click totals from ONE fact scan: the clicks role is a
-    // filter of the same table, so separate per-role aggregates would read
-    // the fact data twice — at 100 TB that doubles the dominant I/O. A
-    // clickless campaign gets clicks_total = 0 (not NULL) here; identical
-    // after the COALESCE the left-join shape needed anyway.
-    val facts = Tables.t(s, dir, "lineitem")
-      .groupBy(col("l_orderkey").as("campaign_id"))
-      .agg(count(lit(1)).as("impressions_total"),
-        count(when(col("l_returnflag") === "R", 1)).as("clicks_total"),
-        max(col("l_shipdate")).as("max_impressions_at"),
-        max(when(col("l_returnflag") === "R", col("l_shipdate")))
-          .as("max_clicks_at"))
-    camp.join(broadcast(adv), Seq("advertiser_id"), "left")
-      .join(facts, Seq("campaign_id"), "left")
-      .select(
-        col("advertiser_id").as("rtm_advertiser_id"),
-        col("campaign_id").as("rtm_campaign_id"),
-        col("advertiser_name"),
-        concat(lit("Campaign_"), col("advertiser_id"), lit("_"),
-          col("campaign_id")).as("campaign_name"),
-        col("budget").as("campaign_budget"),
-        col("bid").as("campaign_bid"),
-        col("start_date").as("campaign_start_date"),
-        col("end_date").as("campaign_end_date"),
-        coalesce(col("impressions_total"), lit(0L))
-          .as("campaign_impressions_count_total"),
-        coalesce(col("clicks_total"), lit(0L))
-          .as("campaign_clicks_count_total"),
-        Core.changeVersion(col("campaign_created_at"),
-          col("max_impressions_at"), col("max_clicks_at")).as("rtm_delta"))
+    val st = Adtech.oltp(s, dir)
+    InitialLoad.campaignTotals(st.advertiser, st.campaign, st.impressions,
+      st.clicks)
   }
 
-  /** A2+J3: daily fact counts per (advertiser, campaign, day).
-    *
-    * Aggregates BEFORE the dim join (opt round 18, guide §2.3): the
-    * campaign dim is unique per campaign_id, so advertiser_id is
-    * functionally dependent on the fact key and grouping by
-    * (campaign_id, day) first yields identical groups and counts;
-    * the broadcast dim join then runs at campaign-day grain instead
-    * of fact grain (orphan fact keys get the same NULL advertiser the
-    * fact-grain left join produced). */
-  private def daily(s: SparkSession, dir: String, facts: DataFrame,
-                    what: String): DataFrame = {
-    val campDim = Adtech.campaign(s, dir).select(
-      col("campaign_id").as("rtm_campaign_id"),
-      col("advertiser_id").as("rtm_advertiser_id"))
-    facts
-      .groupBy(col("campaign_id").as("rtm_campaign_id"),
-        to_date(col("created_at")).as(s"campaign_${what}_date"))
-      .agg(count(lit(1)).as(s"campaign_${what}_daily_count"),
-        max(col("created_at")).as("rtm_delta"))
-      .join(broadcast(campDim), Seq("rtm_campaign_id"), "left")
+  /** A2+J3: daily fact counts per (advertiser, campaign, day) — the ETL's
+    * `InitialLoad.dailyCounts` (aggregate, then the broadcast campaign
+    * join), under the report's per-kind column names. */
+  private def kindDaily(s: SparkSession, dir: String, facts: DataFrame,
+                        kind: String): DataFrame =
+    InitialLoad.dailyCounts(Adtech.oltpCampaign(s, dir), facts, kind)
       .select(col("rtm_advertiser_id"), col("rtm_campaign_id"),
-        col(s"campaign_${what}_date"), col(s"campaign_${what}_daily_count"),
+        col("day").as(s"campaign_${kind}_date"),
+        col("daily_count").as(s"campaign_${kind}_daily_count"),
         col("rtm_delta"))
-  }
 
   def dailyImpressions(s: SparkSession, dir: String): DataFrame =
-    daily(s, dir, Adtech.impressions(s, dir), "impressions")
+    kindDaily(s, dir, Adtech.impressions(s, dir), "impressions")
 
   def dailyClicks(s: SparkSession, dir: String): DataFrame =
-    daily(s, dir, Adtech.clicks(s, dir), "clicks")
+    kindDaily(s, dir, Adtech.clicks(s, dir), "clicks")
+
+  /** The daily CTR report's name dim: the ETL's `InitialLoad.nameDim`
+    * over the role mapping. */
+  private def nameDim(s: SparkSession, dir: String): DataFrame =
+    InitialLoad.nameDim(Adtech.oltpAdvertiser(s, dir), Adtech.oltpCampaign(s, dir))
 
   /** P5–P11 KPI report (reference create_campaign_totals_report,
     * initial_load…py:386-492) — shared derivation in jobs.Reports. */
   def totalsReport(s: SparkSession, dir: String): DataFrame =
-    graft.jobs.Reports.totalsReport(totals(s, dir), Today)
+    Reports.totalsReport(totals(s, dir), Today)
 
   /** W1+A5+J5+J6: daily CTR report (initial_load…py:494-559) — distinct dim,
     * row_number campaign-day ordinal, 3-key date-aligned click join.
     *
-    * Single-fact-scan form of jobs.Reports.dailyCtrReport (which stays the
-    * general 3-input API for the jobs layer): the clicks role is a filter of
-    * the impressions scan, so the J6 imp⟕clk date alignment is equivalent to
+    * Single-fact-scan form of `Reports.dailyCtrReport`: the clicks role is
+    * a filter of the impressions scan, so the J6 imp⟕clk date alignment is
     * ONE conditional aggregation — `count(when(click))` is 0 exactly where
     * the left join + COALESCE produced 0, and click-only days (which J6
-    * drops by reference design) cannot exist because every click row IS an
-    * impression row. 3 fact scans → 1; the name dim comes from the broadcast
-    * campaign⋈advertiser join, not a second fact aggregation. */
+    * drops) cannot exist because every click row IS an impression row. The
+    * name dim is the ETL's (`nameDim`). QueriesSpec pins this report equal
+    * to `Reports.dailyCtrReport` over `InitialLoad.dailyCounts`, so the
+    * oracle's check covers both. */
   def dailyCtrReport(s: SparkSession, dir: String): DataFrame = {
-    val dim = Adtech.campaign(s, dir)
-      .join(broadcast(Adtech.advertiser(s, dir)), Seq("advertiser_id"), "left")
-      .select(col("advertiser_id").as("rtm_advertiser_id"),
-        col("campaign_id").as("rtm_campaign_id"),
-        col("advertiser_name"),
-        concat(lit("Campaign_"), col("advertiser_id"), lit("_"),
-          col("campaign_id")).as("campaign_name"))
-    // AGGREGATE BEFORE ANY JOIN (opt round 18, guide §2.3/§2.4): the
-    // old shape joined the campaign dim at FACT grain just to carry
-    // advertiser_id into the group key — but campaign_id (o_orderkey)
-    // is unique in the dim, so advertiser_id is functionally dependent
-    // on l_orderkey and grouping by (l_orderkey, day) yields the exact
-    // same groups (orphan fact keys aggregate per-key either way; the
-    // joined advertiser_id is NULL for all of them). Aggregating first
-    // shrinks the frame to campaign-day grain BEFORE any join, and the
-    // ONE remaining dim join — now at aggregated grain — supplies
-    // advertiser_id and both names in the same broadcast (it was a
-    // SortMergeJoin at fact-agg grain before; estimate-driven, the dim
-    // is one broadcastable projection of orders ⋈ customer — the plan
-    // already broadcast the same orders table pre-agg). 2 dim joins →
-    // 1, SortMergeJoin 2 → 0, and the fact scan feeds a 2-key map-side
-    // partial agg instead of a 3-key post-join one.
-    val daily = Tables.t(s, dir, "lineitem")
+    // Aggregate before any join (opt round 18): campaign ids are unique,
+    // so grouping by (l_orderkey, day) gives the same groups as grouping
+    // by (advertiser, campaign, day), and the one broadcast dim join runs
+    // at campaign-day grain.
+    val days = Tables.t(s, dir, "lineitem")
       .groupBy(col("l_orderkey").as("rtm_campaign_id"),
         to_date(col("l_shipdate")).as("campaign_impressions_date"))
       .agg(count(lit(1)).as("campaign_impressions_daily_count"),
@@ -140,8 +85,8 @@ object Parity {
           .as("campaign_clicks_daily_count"))
     val w = Window.partitionBy(col("rtm_advertiser_id"), col("rtm_campaign_id"))
       .orderBy(col("campaign_impressions_date"))
-    daily
-      .join(broadcast(dim), Seq("rtm_campaign_id"), "left")
+    days
+      .join(broadcast(nameDim(s, dir)), Seq("rtm_campaign_id"), "left")
       .select(
         col("rtm_advertiser_id"), col("rtm_campaign_id"),
         col("advertiser_name"), col("campaign_name"),
@@ -314,14 +259,7 @@ object Parity {
     * and the distinct output over either input is row-identical (the
     * oracle keeps the totals-derived form). */
   def distinctDim(s: SparkSession, dir: String): DataFrame =
-    Adtech.campaign(s, dir)
-      .join(broadcast(Adtech.advertiser(s, dir)), Seq("advertiser_id"), "left")
-      .select(col("advertiser_id").as("rtm_advertiser_id"),
-        col("campaign_id").as("rtm_campaign_id"),
-        col("advertiser_name"),
-        concat(lit("Campaign_"), col("advertiser_id"), lit("_"),
-          col("campaign_id")).as("campaign_name"))
-      .distinct()
+    nameDim(s, dir).distinct()
 
   /** P3/P4 edge semantics: GREATEST over NULLs + COALESCE zero-fill on the
     * clickless-campaign path (SURVEY §5.2). */

@@ -279,15 +279,7 @@ object CorpusService {
             .repartition(col("cell"))
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .partitionBy("cell").parquet(stage)
-          // Carry whichever sidecars this index's epoch has (the
-          // tryCompactAnnIndex contract — a purge is a file-layout
-          // operation, not a payload-epoch demand).
-          Seq("_quantizer", "_sq8", "_pq").foreach { sc =>
-            if (hasData(spark, s"$path/$sc"))
-              spark.read.parquet(s"$path/$sc")
-                .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"$stage/$sc")
-          }
+          graft.queries.Extensions.carryAnnSidecars(spark, path, stage)
         }
     val ok =
       purge(p.sigs, "doc_id") &&

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * named on the command line as a whole.
   *
   * Usage: runMain graft.queries.OptProfile [legset...]
-  *   legsets: d16, s20, topk, t26, q05, q07, t40, pack (default: d16 + s20
+  *   legsets: d16, s20, topk, t26, t40, pack (default: d16 + s20
   *   only — the others are one-off decision probes, run by name)
   *   env SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / SPARK_GRAFT_ITERS (see
   *   [[graft.Session]]). */
@@ -124,84 +124,6 @@ object OptProfile {
       time("t26 cand distinct")(() => cand())
       time("t26 +scored")(() => scored())
       time("t26 full")(() => E.hardNegatives(spark, sfDir))
-    }
-
-    if (sets("q05")) {
-      // q05's legs (Parity.dailyCtrReport inlined): fact agg → +dim
-      // join → +ordinal window. The scaling block says q05 runs FASTER
-      // on 8 cores than 32 (0.43) — these legs say which stage carries
-      // the fixed cost.
-      import org.apache.spark.sql.expressions.Window
-      val A = graft.Adtech
-      def campDim() = A.campaign(spark, sfDir)
-        .select("campaign_id", "advertiser_id")
-      def dim() = A.campaign(spark, sfDir)
-        .join(broadcast(A.advertiser(spark, sfDir)),
-          Seq("advertiser_id"), "left")
-        .select(col("advertiser_id").as("rtm_advertiser_id"),
-          col("campaign_id").as("rtm_campaign_id"),
-          col("advertiser_name"),
-          concat(lit("Campaign_"), col("advertiser_id"), lit("_"),
-            col("campaign_id")).as("campaign_name"))
-      def daily() = graft.Tables.t(spark, sfDir, "lineitem")
-        .join(campDim(), col("l_orderkey") === col("campaign_id"), "left")
-        .groupBy(col("advertiser_id").as("rtm_advertiser_id"),
-          col("l_orderkey").as("rtm_campaign_id"),
-          to_date(col("l_shipdate")).as("campaign_impressions_date"))
-        .agg(count(lit(1)).as("campaign_impressions_daily_count"),
-          count(when(col("l_returnflag") === "R", 1))
-            .as("campaign_clicks_daily_count"))
-      time("q05 scan+agg (daily)")(() => daily())
-      time("q05 +dim join")(() => daily()
-        .join(dim(), Seq("rtm_advertiser_id", "rtm_campaign_id"), "left"))
-      time("q05 full")(() => Parity.dailyCtrReport(spark, sfDir))
-    }
-
-    if (sets("q07")) {
-      def keyset(cutoff: Option[String]) = {
-        val li = graft.Tables.t(spark, sfDir, "lineitem")
-        val facts = cutoff.fold(li)(c =>
-            li.filter(col("l_shipdate") < to_timestamp(lit(c))))
-          .groupBy(col("l_orderkey").as("campaign_id"))
-          .agg(max(col("l_shipdate")).as("max_impressions_at"),
-            max(when(col("l_returnflag") === "R", col("l_shipdate")))
-              .as("max_clicks_at"))
-        graft.Adtech.campaign(spark, sfDir)
-          .join(facts, Seq("campaign_id"), "left")
-          .select(col("campaign_id").as("rtm_campaign_id"),
-            graft.ops.Core.changeVersion(col("campaign_created_at"),
-              col("max_impressions_at"), col("max_clicks_at"))
-              .as("rtm_delta"))
-      }
-      time("q07 keyset (live)")(() => keyset(None))
-      time("q07 keyset (stale)")(() => keyset(Some("1998-01-01")))
-      time("q07 full")(() => Parity.deltaAntiJoin(spark, sfDir))
-      time("q07 ckpt-facts")(() => {
-        // One-scan variant with the shared aggregate MATERIALIZED
-        // (campaign-grain, 5 columns) instead of trusting
-        // ReuseExchange to dedupe the two anti-join sides' identical
-        // agg subtrees.
-        val cutTs = to_timestamp(lit("1998-01-01"))
-        val isClk = col("l_returnflag") === "R"
-        val facts = graft.Tables.t(spark, sfDir, "lineitem")
-          .groupBy(col("l_orderkey").as("campaign_id"))
-          .agg(max(col("l_shipdate")).as("max_imp"),
-            max(when(isClk, col("l_shipdate"))).as("max_clk"),
-            max(when(col("l_shipdate") < cutTs, col("l_shipdate")))
-              .as("max_imp_cut"),
-            max(when(isClk && col("l_shipdate") < cutTs, col("l_shipdate")))
-              .as("max_clk_cut"))
-          .localCheckpoint()
-        val keyed = graft.Adtech.campaign(spark, sfDir)
-          .join(facts, Seq("campaign_id"), "left")
-        def ks(imp: String, clk: String) = keyed
-          .select(col("campaign_id").as("rtm_campaign_id"),
-            graft.ops.Core.changeVersion(col("campaign_created_at"),
-              col(imp), col(clk)).as("rtm_delta"))
-        graft.ops.Joins.deltaKeys(ks("max_imp", "max_clk"),
-          ks("max_imp_cut", "max_clk_cut"),
-          Seq("rtm_campaign_id", "rtm_delta"))
-      })
     }
 
     if (sets("t40")) {

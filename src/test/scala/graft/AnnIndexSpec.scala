@@ -100,10 +100,10 @@ class AnnIndexSpec extends SparkSpec {
     // contract).
     Extensions.buildAnnIndexFrom(
       Extensions.quantizeFrame(Tables.t(spark, dir, "embeddings")),
-      spark.read.parquet(byDiscovery + "/_quantizer"), rebuilt,
+      Extensions.sidecarOf(spark, byDiscovery, "_quantizer"), rebuilt,
       meta = Extensions.metaOf(Tables.t(spark, dir, "embeddings")),
-      sq8 = Some(spark.read.parquet(byDiscovery + "/_sq8")),
-      pq = Some(spark.read.parquet(byDiscovery + "/_pq")))
+      sq8 = Some(Extensions.sidecarOf(spark, byDiscovery, "_sq8")),
+      pq = Some(Extensions.sidecarOf(spark, byDiscovery, "_pq")))
     val expected = spark.read.parquet(rebuilt)
     assert(expected.columns.sorted.toSeq ==
       Seq("cell", "codes", "css", "label", "pq", "qp", "rn", "s2", "sp",
@@ -134,16 +134,16 @@ class AnnIndexSpec extends SparkSpec {
     assertSameRows(spark.read.parquet(byBatch), expected,
       "compacted index vs frozen-quantizer rebuild (replay absorbed)")
     assertSameRows(
-      spark.read.parquet(byBatch + "/_quantizer"),
-      spark.read.parquet(rebuilt + "/_quantizer"),
+      Extensions.sidecarOf(spark, byBatch, "_quantizer"),
+      Extensions.sidecarOf(spark, rebuilt, "_quantizer"),
       "compaction must carry the sidecar unchanged")
     assertSameRows(
-      spark.read.parquet(byBatch + "/_sq8"),
-      spark.read.parquet(rebuilt + "/_sq8"),
+      Extensions.sidecarOf(spark, byBatch, "_sq8"),
+      Extensions.sidecarOf(spark, rebuilt, "_sq8"),
       "compaction must carry the SQ8 range sidecar unchanged")
     assertSameRows(
-      spark.read.parquet(byBatch + "/_pq"),
-      spark.read.parquet(rebuilt + "/_pq"),
+      Extensions.sidecarOf(spark, byBatch, "_pq"),
+      Extensions.sidecarOf(spark, rebuilt, "_pq"),
       "compaction must carry the PQ codebook sidecar unchanged")
     assertSameRows(
       Extensions.annIvfIndexedAt(spark, dir, byBatch),
@@ -184,8 +184,8 @@ class AnnIndexSpec extends SparkSpec {
       // Ground truth: full chunk corpus under ALL frozen epochs (the
       // half-corpus quantizer, its SQ8 ranges, its PQ codebooks).
       Extensions.buildAnnIndexFrom(cv, cents, rebuilt,
-        sq8 = Some(spark.read.parquet(grown + "/_sq8")),
-        pq = Some(spark.read.parquet(grown + "/_pq")))
+        sq8 = Some(Extensions.sidecarOf(spark, grown, "_sq8")),
+        pq = Some(Extensions.sidecarOf(spark, grown, "_pq")))
       assertSameRows(spark.read.parquet(grown), spark.read.parquet(rebuilt),
         "chunk-grain appended index vs frozen-epoch rebuild")
       // Serving: every query chunk (docs < 10 → vec_id < 10·4096) must

@@ -476,9 +476,9 @@ class CorpusServiceSpec extends SparkSpec {
     val rebuilt = java.nio.file.Files
       .createTempDirectory("graft-svcchunk-gt").toString + "/idx"
     Extensions.buildAnnIndexFrom(cv,
-      spark.read.parquet(p.chunkIndex + "/_quantizer"), rebuilt,
-      sq8 = Some(spark.read.parquet(p.chunkIndex + "/_sq8")),
-      pq = Some(spark.read.parquet(p.chunkIndex + "/_pq")))
+      Extensions.sidecarOf(spark, p.chunkIndex, "_quantizer"), rebuilt,
+      sq8 = Some(Extensions.sidecarOf(spark, p.chunkIndex, "_sq8")),
+      pq = Some(Extensions.sidecarOf(spark, p.chunkIndex, "_pq")))
     assertSameRows(spark.read.parquet(p.chunkIndex),
       spark.read.parquet(rebuilt),
       "append-maintained chunk index vs frozen-epoch rebuild")
@@ -607,8 +607,8 @@ class CorpusServiceSpec extends SparkSpec {
     assertSameRows(
       spark.read.parquet(p.annIndex),
       spark.read.parquet(rebuildAt(s"$scratch/epoch1",
-        sq8 = Some(spark.read.parquet(p.annIndex + "/_sq8")),
-        pq = Some(spark.read.parquet(p.annIndex + "/_pq")))),
+        sq8 = Some(Extensions.sidecarOf(spark, p.annIndex, "_sq8")),
+        pq = Some(Extensions.sidecarOf(spark, p.annIndex, "_pq")))),
       "append-maintained service index vs frozen-quantizer rebuild")
     assertSameRows(
       CorpusService.annTopK(spark, p),
@@ -624,7 +624,7 @@ class CorpusServiceSpec extends SparkSpec {
       interval = "1 second")
     r.drainAndStop()
     assertSameRows(
-      spark.read.parquet(p.annIndex + "/_quantizer"),
+      Extensions.sidecarOf(spark, p.annIndex, "_quantizer"),
       spark.read.parquet(p.cents),
       "index sidecar must track the retrained quantizer")
     assertSameRows(
@@ -732,7 +732,7 @@ class CorpusServiceSpec extends SparkSpec {
     assertSameRows(spark.read.parquet(p.annIndex), spark.read.parquet(gt),
       "scheduled index vs current-epoch rebuild")
     assertSameRows(
-      spark.read.parquet(p.annIndex + "/_quantizer"),
+      Extensions.sidecarOf(spark, p.annIndex, "_quantizer"),
       spark.read.parquet(p.cents),
       "scheduled index sidecar vs service quantizer")
 

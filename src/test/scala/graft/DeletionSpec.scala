@@ -45,10 +45,10 @@ class DeletionSpec extends SparkSpec {
       val embLive = emb.filter(!col("vec_id").isin(dels: _*))
       Extensions.buildAnnIndexFrom(
         Extensions.quantizeFrame(embLive),
-        spark.read.parquet(pA.annIndex + "/_quantizer"), twin,
+        Extensions.sidecarOf(spark, pA.annIndex, "_quantizer"), twin,
         meta = Extensions.metaOf(embLive),
-        sq8 = Some(spark.read.parquet(pA.annIndex + "/_sq8")),
-        pq = Some(spark.read.parquet(pA.annIndex + "/_pq")))
+        sq8 = Some(Extensions.sidecarOf(spark, pA.annIndex, "_sq8")),
+        pq = Some(Extensions.sidecarOf(spark, pA.annIndex, "_pq")))
       assertSameRows(served,
         Extensions.annIvfIndexedQueries(spark, baseA, queries, twin),
         "post-delete ANN serving vs rebuild-without-the-docs twin")
@@ -188,10 +188,10 @@ class DeletionSpec extends SparkSpec {
     val embLive = emb.filter(!col("vec_id").isin(dels2: _*))
     Extensions.buildAnnIndexFrom(
       Extensions.quantizeFrame(embLive),
-      spark.read.parquet(p.annIndex + "/_quantizer"), twin,
+      Extensions.sidecarOf(spark, p.annIndex, "_quantizer"), twin,
       meta = Extensions.metaOf(embLive),
-      sq8 = Some(spark.read.parquet(p.annIndex + "/_sq8")),
-      pq = Some(spark.read.parquet(p.annIndex + "/_pq")))
+      sq8 = Some(Extensions.sidecarOf(spark, p.annIndex, "_sq8")),
+      pq = Some(Extensions.sidecarOf(spark, p.annIndex, "_pq")))
     assertSameRows(post, Extensions.hardNegativesAt(spark, base, twin),
       "post-delete hard negatives vs rebuild-without-the-docs twin")
     // The scrubbed payload (full clean_text!) gates at view grain

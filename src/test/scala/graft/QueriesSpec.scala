@@ -1,5 +1,6 @@
 package graft
 
+import graft.jobs.{InitialLoad, Reports}
 import graft.queries.{Extensions, Parity}
 import org.apache.spark.sql.functions._
 
@@ -26,6 +27,19 @@ class QueriesSpec extends SparkSpec {
     val bad = totals.join(sums, Seq("rtm_campaign_id"), "left")
       .filter(coalesce(col("s"), lit(0L)) =!= col("campaign_impressions_count_total"))
     assert(bad.count() == 0)
+  }
+
+  test("jobs' daily CTR report over raw daily counts has exactly q05's rows") {
+    // q05 keeps its fused one-scan form; this pins the ETL's report path
+    // to it, so the oracle's check of q05 covers Reports.dailyCtrReport.
+    val st = Adtech.oltp(spark, dir)
+    val days = InitialLoad.dailyCounts(st.campaign, st.impressions, "impressions")
+      .unionByName(InitialLoad.dailyCounts(st.campaign, st.clicks, "clicks"))
+    val jobs = Reports.dailyCtrReport(
+      InitialLoad.nameDim(st.advertiser, st.campaign), days)
+    val q05 = Parity.dailyCtrReport(spark, dir)
+    assert(q05.count() > 0)
+    assertSameRows(jobs, q05, "Reports.dailyCtrReport vs q05")
   }
 
   test("delta anti-join keys are exactly the campaigns changed after cutoff") {
